@@ -9,6 +9,9 @@ everything exploratory lives here instead:
   --isolate         time each bench query with the noop sink (guide §1.4)
                     so the computation is measured, not .count()'s column
                     pruning; repeats + steal ticks like bench.py
+  --doc-stages      run_doc_pipeline's own per-stage ``timings`` (untraced)
+                    over the sf tier's documents, after one discarded warm
+                    run; repeats + steal ticks like --isolate
   --featurize-profile  cProfile one single-threaded featurize batch over a
                     slice of the bench corpus — attributes the per-clip cost
                     (decode vs frame features vs hashing)
@@ -120,6 +123,32 @@ def run_isolate(sf_dir: str, cpus: int, repeats: int = 3) -> None:
     spark.stop()
 
 
+def run_doc_stages(sf_dir: str, cpus: int, repeats: int = 3) -> None:
+    """Stage walls of the document dedup job, untraced: each repeat writes a
+    fresh warehouse, so no stage is served from a previous run."""
+    import tempfile
+
+    from consult_spark.sources.documents import read_documents_parquet
+    from jobs.dedup_documents import run_doc_pipeline
+
+    spark = _get_spark(cpus)
+    docs = read_documents_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    runs = []
+    with tempfile.TemporaryDirectory() as tmp:
+        for i in range(repeats + 1):
+            s0 = _steal_ticks()
+            t0 = time.time()
+            res = run_doc_pipeline(spark, docs, os.path.join(tmp, f"wh{i}"))
+            run = {"wall_sec": round(time.time() - t0, 3), "steal": _steal_ticks() - s0,
+                   "timings": {k: round(v, 3) for k, v in res["timings"].items()}}
+            if i:  # run 0 warms the JVM and python workers
+                runs.append(run)
+                print(json.dumps({"doc_stages_run": run}))
+    print(json.dumps({"doc_stages": {k: min(r["timings"][k] for r in runs)
+                                     for k in runs[0]["timings"]}}))
+    spark.stop()
+
+
 def run_featurize_profile(n_clips: int = 64) -> None:
     """Single-threaded cProfile of featurize_pdf over bench-corpus clips."""
     import cProfile
@@ -155,6 +184,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", metavar="TAG")
     ap.add_argument("--isolate", action="store_true")
+    ap.add_argument("--doc-stages", action="store_true")
     ap.add_argument("--featurize-profile", action="store_true")
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
@@ -165,6 +195,8 @@ def main() -> None:
         run_plans(sf_dir, args.plans, args.cpus)
     if args.isolate:
         run_isolate(sf_dir, args.cpus, args.repeats)
+    if args.doc_stages:
+        run_doc_stages(sf_dir, args.cpus, args.repeats)
     if args.featurize_profile:
         run_featurize_profile()
 

@@ -43,7 +43,10 @@ class Warehouse:
         live = self.root.rstrip("/")
         incoming = f"{live}.__restore_incoming"
         if os.path.isdir(incoming) and not os.path.isdir(live):
-            os.replace(incoming, live)
+            try:
+                os.replace(incoming, live)
+            except FileNotFoundError:
+                pass  # a concurrent open healed it between the checks and here
         # manifests live under root in BOTH modes (Iceberg holds the data,
         # the resume contract still needs its JSON sidecars)
         os.makedirs(self.root, exist_ok=True)

@@ -82,6 +82,20 @@ def _broadcast_matrix(emb: DataFrame):
     return qdf, spark.sparkContext.broadcast((ids_all, m_all, norms_all))
 
 
+def _sim_block(dots, norms_a, norms_b):
+    """int64 floor(1e6 * dot / sqrt(na * nb)) for a block of exact int64 dot
+    products (rows: norms_a, columns: norms_b) — the one similarity step of
+    every numpy scorer here.  A zero-norm vector gives 0/0 = NaN; Spark's
+    non-ANSI cast(NaN as bigint) is 0, so NaN maps to 0 instead of numpy's
+    undefined NaN->int64."""
+    import numpy as np
+
+    prod = (norms_a[:, None] * norms_b[None, :]).astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        simf = np.floor(1_000_000.0 * dots / np.sqrt(prod))
+    return np.where(np.isfinite(simf), simf, 0.0).astype(np.int64)
+
+
 def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
     """Exact brute-force top-k neighbors per vector (the baseline path).
 
@@ -101,17 +115,13 @@ def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
         import pandas as pd
 
         b_ids, b_m, b_norms = bc.value
-        order_b = np.argsort(b_ids, kind="stable")
         for pdf in batches:
             if not len(pdf):
                 continue
             a_m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
             a_norms = pdf["norm_q"].to_numpy().astype(np.int64)
             a_ids = pdf["vec_id"].to_numpy()
-            dots = a_m @ b_m.T  # exact int64
-            sim = np.floor(
-                1_000_000.0 * dots / np.sqrt((a_norms[:, None] * b_norms[None, :]).astype(np.float64))
-            ).astype(np.int64)
+            sim = _sim_block(a_m @ b_m.T, a_norms, b_norms)  # exact int64 dots
             out_a, out_b, out_s, out_r = [], [], [], []
             for i in range(sim.shape[0]):
                 row = sim[i]
@@ -164,10 +174,7 @@ def near_dup_pairs(emb: DataFrame, threshold_micro: int = 400_000) -> DataFrame:
             a_m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
             a_norms = pdf["norm_q"].to_numpy().astype(np.int64)
             a_ids = pdf["vec_id"].to_numpy()
-            dots = a_m @ b_m.T  # exact int64
-            sim = np.floor(
-                1_000_000.0 * dots / np.sqrt((a_norms[:, None] * b_norms[None, :]).astype(np.float64))
-            ).astype(np.int64)
+            sim = _sim_block(a_m @ b_m.T, a_norms, b_norms)  # exact int64 dots
             keep = (sim >= threshold_micro) & (a_ids[:, None] < b_ids[None, :])
             ii, jj = np.nonzero(keep)
             yield pd.DataFrame(
@@ -426,12 +433,7 @@ def ivf_topk(emb: DataFrame, k: int = 3, n_cells: int = 32, seed: int = 0x1F5,
         # O(n_probe * n_lib) — cells grow with n at fixed n_cells
         for lo in range(0, len(ids), 256):
             hi = min(lo + 256, len(ids))
-            dots = m[lo:hi] @ lm.T  # exact int64, probe x lib
-            prod = (norms[lo:hi, None] * lnorms[None, :]).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                simf = np.floor(1_000_000.0 * dots / np.sqrt(prod))
-            # NaN (zero-norm) -> 0, matching Spark's non-ANSI bigint cast
-            sim = np.where(np.isfinite(simf), simf, 0.0).astype(np.int64)
+            sim = _sim_block(m[lo:hi] @ lm.T, norms[lo:hi], lnorms)  # probe x lib
             keep = ids[lo:hi, None] != lids[None, :]
             ii, jj = np.nonzero(keep)
             frames.append(pd.DataFrame(
@@ -481,14 +483,7 @@ def lsh_bucketed_topk(emb: DataFrame, k: int = 3, n_planes: int = 12) -> DataFra
             # O(group^2) — a hot bucket must not OOM one python worker
             for lo in range(0, n, 256):
                 hi = min(lo + 256, n)
-                dots = m[lo:hi] @ m.T  # exact int64
-                prod = (norms[lo:hi, None] * norms[None, :]).astype(np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    simf = np.floor(1_000_000.0 * dots / np.sqrt(prod))
-                # zero-norm vectors: 0/0 -> NaN; Spark's non-ANSI
-                # cast(NaN as bigint) is 0 — match it instead of numpy's
-                # undefined NaN->int64
-                sim = np.where(np.isfinite(simf), simf, 0.0).astype(np.int64)
+                sim = _sim_block(m[lo:hi] @ m.T, norms[lo:hi], norms)
                 for bi in range(hi - lo):
                     i = lo + bi
                     row = sim[bi]

@@ -172,11 +172,13 @@ def quality_filter(
     )
 
 
-def corpus_stats(spark, docs: DataFrame) -> DataFrame:
+def corpus_stats(spark, docs: DataFrame, langs: DataFrame | None = None) -> DataFrame:
     """Corpus composition report: per predicted language, document count and
     token/char volume — the before/after accounting every training-data
-    pipeline keeps."""
-    langs = lang_id(spark, docs)
+    pipeline keeps.  ``langs``: an already-computed :func:`lang_id` table;
+    derived from ``docs`` when omitted."""
+    if langs is None:
+        langs = lang_id(spark, docs)
     toks = token_stats(docs)
     return (
         langs.join(toks, "doc_id", "left")

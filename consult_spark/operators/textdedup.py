@@ -38,10 +38,6 @@ JACCARD_MICRO_THRESHOLD = 500_000  # 0.5
 MINIMIZER_W = 4
 
 
-def load_documents(spark, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _windows(k: int) -> F.Column:
     """All width-k character windows of text as one row-local array."""
     return F.expr(f"transform(sequence(1, length(text) - {k - 1}), i -> substring(text, i, {k}))")
@@ -148,21 +144,6 @@ def _minhash_wide(docs: DataFrame, sets: DataFrame | None = None) -> DataFrame:
         ).alias(f"m{r}")
 
     return s.select("doc_id", *[seed_min(r) for r in range(N_SEEDS)])
-
-
-def minhash_table(docs: DataFrame, sets: DataFrame | None = None) -> DataFrame:
-    """(doc_id, r, minh): per-seed md5-lexicographic minima over the distinct
-    shingle set — the portable MinHash.  Long form = stack() over the
-    row-local wide table (N_SEEDS x #docs rows, zero exchanges).
-
-    ``sets``: optional pre-computed (ideally checkpointed) doc_shingle_sets
-    output to derive the shingles from instead of re-windowing the text."""
-    wide = _minhash_wide(docs, sets=sets)
-    stack_args = ", ".join(f"{r}, m{r}" for r in range(N_SEEDS))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({N_SEEDS}, {stack_args}) AS (r, minh)"),
-    ).select("doc_id", F.col("r").cast("int").alias("r"), "minh")
 
 
 def minhash_bands(docs: DataFrame, sets: DataFrame | None = None) -> DataFrame:
@@ -325,13 +306,16 @@ def probe_matched(docs: DataFrame, threshold: int = JACCARD_MICRO_THRESHOLD) -> 
     )
 
 
-def doc_clusters(docs: DataFrame) -> DataFrame:
+def doc_clusters(docs: DataFrame, confirmed: DataFrame | None = None) -> DataFrame:
     """Transitive near-duplicate clustering over the text channel: the
     engine's distributed connected components (cluster.py pointer jumping)
     on confirmed pairs, verified against a recursive-CTE transitive-closure
     oracle in DuckDB — the one stage of the core pipeline that previously
     had no SQL twin of its own.  cluster_id = min doc_id in the component;
-    singletons label themselves."""
+    singletons label themselves.
+
+    ``confirmed``: an already-computed :func:`confirmed_pairs` table (e.g.
+    the one a job wrote); derived from ``docs`` when omitted."""
     from ..config import Config
     from .cluster import assign_clusters
 
@@ -340,7 +324,7 @@ def doc_clusters(docs: DataFrame) -> DataFrame:
     def pad(c):
         return F.lpad(F.col(c).cast("string"), 20, "0")
 
-    conf = confirmed_pairs(docs)
+    conf = confirmed if confirmed is not None else confirmed_pairs(docs)
     clips_like = docs.select(pad("doc_id").alias("clip_id"))
     edges = conf.select(pad("doc_a").alias("clip_a"), pad("doc_b").alias("clip_b"))
     assigned = assign_clusters(clips_like, edges, Config())
@@ -387,9 +371,10 @@ def incremental_clusters(docs: DataFrame) -> DataFrame:
     )
 
 
-def unique_docs(docs: DataFrame) -> DataFrame:
-    """S13: anti-join — docs with no confirmed dup partner."""
-    conf = confirmed_pairs(docs)
+def unique_docs(docs: DataFrame, confirmed: DataFrame | None = None) -> DataFrame:
+    """S13: anti-join — docs with no confirmed dup partner (``confirmed`` as
+    in :func:`doc_clusters`)."""
+    conf = confirmed if confirmed is not None else confirmed_pairs(docs)
     members = conf.select(F.col("doc_a").alias("doc_id")).union(
         conf.select(F.col("doc_b").alias("doc_id"))
     )

@@ -214,49 +214,6 @@ def channel_scores(pairs: DataFrame, features: DataFrame, kind: str, cfg: Config
     )
 
 
-def transcript_scores(pairs: DataFrame, clips: DataFrame, cfg: Config) -> DataFrame:
-    """Suffix-array LCS containment per pair -> (clip_a, clip_b, lcs, substr).
-
-    Standalone form of the LCS stage (score any pair set you hand it);
-    confirm_pairs itself uses the fused txt_scores_with_lcs below, which
-    embeds the same ladder behind the txt-jaccard gate."""
-    tr = clips.select("clip_id", "transcript")
-    joined = (
-        pairs.select("clip_a", "clip_b")
-        .join(tr.withColumnsRenamed({"clip_id": "clip_a", "transcript": "tr_a"}), "clip_a")
-        .join(tr.withColumnsRenamed({"clip_id": "clip_b", "transcript": "tr_b"}), "clip_b")
-    )
-    min_frac = cfg.substr_min_frac
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lcs = np.empty(len(pdf), dtype=np.int64)
-            ok = np.empty(len(pdf), dtype=bool)
-            for i, (a, b) in enumerate(zip(pdf["tr_a"], pdf["tr_b"])):
-                a, b = a or "", b or ""
-                m = min(len(a), len(b))
-                if m == 0:
-                    ok[i], lcs[i] = False, 0
-                elif a in b or b in a:
-                    # full containment: LCS == the shorter text, and the
-                    # min_frac test is trivially met — C-level find, skips
-                    # the O(n log^2 n) suffix array for the dominant case
-                    # (near-dup transcripts are mostly equal or contained;
-                    # measured ~90% of LCS-gated pairs at sf0.1)
-                    ok[i], lcs[i] = True, m
-                else:
-                    ok[i], lcs[i] = substring_contained(a, b, min_frac)
-            yield pd.DataFrame(
-                {"clip_a": pdf["clip_a"], "clip_b": pdf["clip_b"], "lcs": lcs, "substr": ok}
-            )
-
-    return joined.mapInPandas(
-        score, schema="clip_a string, clip_b string, lcs bigint, substr boolean"
-    )
-
-
 def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
                         cfg: Config) -> DataFrame:
     """Fused txt-channel verification: exact Jaccard AND the suffix-array
@@ -265,8 +222,8 @@ def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
 
     confirm_pairs previously evaluated the whole txt channel_scores subtree
     TWICE inside one action — once joined into the output, once filtered to
-    gate transcript_scores (Catalyst has no cross-join subtree reuse, and a
-    localCheckpoint barrier A/B-measured slower than the recompute).
+    gate a separate LCS scorer (Catalyst has no cross-join subtree reuse,
+    and a localCheckpoint barrier A/B-measured slower than the recompute).
     Fusing moves the jaccard >= threshold LCS gate INSIDE the batch scorer:
     identical semantics (only txt-qualified pairs pay the O(n) suffix
     array; the rest emit lcs=0/substr=false exactly as the old left-join
@@ -296,8 +253,8 @@ def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
     min_frac = cfg.substr_min_frac
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the shared jaccard kernel, plus the per-qualifying-pair LCS ladder
-        # of transcript_scores.score — one pass, one boundary crossing
+        # the shared jaccard kernel, plus the LCS ladder for each pair that
+        # qualifies on jaccard — one pass, one boundary crossing
         for pdf in batches:
             n = len(pdf)
             if not n:
@@ -316,6 +273,11 @@ def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
                 if m == 0:
                     ok[i], lcs[i] = False, 0
                 elif a in b or b in a:
+                    # full containment: LCS == the shorter text, and the
+                    # min_frac test is trivially met — C-level find, skips
+                    # the O(n log^2 n) suffix array for the dominant case
+                    # (near-dup transcripts are mostly equal or contained;
+                    # measured ~90% of LCS-gated pairs at sf0.1)
                     ok[i], lcs[i] = True, m
                 else:
                     ok[i], lcs[i] = substring_contained(a, b, min_frac)

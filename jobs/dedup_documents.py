@@ -8,6 +8,10 @@ Stages (each materialized with a manifest, resumable like the audio job):
 exact dup groups -> quality/language reports -> MinHash-LSH near-dup
 confirmed pairs -> clusters -> unique docs.  All stages are the same
 operators the driver gate verifies against DuckDB oracles.
+A stage that builds on an earlier one consumes the table that stage wrote,
+read back from the warehouse: corpus_stats reads lang_id, and doc_clusters
+and unique_docs read confirmed_pairs, so the shingle -> MinHash -> band ->
+pair -> exact-Jaccard chain runs once per run (and a resumed run reuses it).
 """
 
 from __future__ import annotations
@@ -45,11 +49,11 @@ def run_doc_pipeline(spark: SparkSession, docs: DataFrame, warehouse_dir: str,
     wh.write_config()
     stage("exact_dup_groups", lambda: td.exact_dup_groups(docs))
     stage("quality_scores", lambda: text_op.quality_scores(docs))
-    stage("lang_id", lambda: text_op.lang_id(spark, docs))
-    stage("corpus_stats", lambda: text_op.corpus_stats(spark, docs))
+    langs = stage("lang_id", lambda: text_op.lang_id(spark, docs))
+    stage("corpus_stats", lambda: text_op.corpus_stats(spark, docs, langs))
     confirmed = stage("confirmed_pairs", lambda: td.confirmed_pairs(docs))
-    clusters = stage("doc_clusters", lambda: td.doc_clusters(docs))
-    uniques = stage("unique_docs", lambda: td.unique_docs(docs))
+    clusters = stage("doc_clusters", lambda: td.doc_clusters(docs, confirmed))
+    uniques = stage("unique_docs", lambda: td.unique_docs(docs, confirmed))
     sink.add("doc_pipeline", "n_docs", docs.count())
     sink.flush()
     return {

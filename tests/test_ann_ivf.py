@@ -8,6 +8,7 @@ and the probe/library asymmetry."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from consult_spark.operators import ann
 from consult_spark.operators.ann import _signs_matrix
@@ -84,3 +85,23 @@ def test_near_dup_auto_routes_by_size(spark, monkeypatch):
     routed = ann.near_dup_auto(emb, brute_max_rows=10)
     lsh = sorted(tuple(r) for r in ann.near_dup_pairs_lsh(emb).collect())
     assert sorted(tuple(r) for r in routed.collect()) == lsh
+
+
+@pytest.mark.parametrize("path", ["cosine_topk", "near_dup_pairs", "ivf_topk", "lsh_bucketed_topk"])
+def test_zero_norm_vector_scores_zero(spark, path):
+    """A zero vector has norm 0, so every pair touching it divides 0 by 0.
+    All four numpy scorers must emit sim_micro 0 for it (Spark's non-ANSI
+    NaN->bigint cast), not numpy's undefined NaN->int64.  Two zero vectors
+    share every bucket and cell, so each path scores at least one such pair."""
+    rng = np.random.default_rng(3)
+    vecs = [[0.0] * 64, [0.0] * 64] + rng.normal(size=(10, 64)).tolist()
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
+    )
+    if path == "near_dup_pairs":
+        df = ann.near_dup_pairs(emb, threshold_micro=0)
+    else:
+        df = getattr(ann, path)(emb)
+    zero = [r for r in df.collect() if r["vec_a"] in (0, 1) or r["vec_b"] in (0, 1)]
+    assert zero, "no scored pair touches a zero vector"
+    assert {r["sim_micro"] for r in zero} == {0}

@@ -262,6 +262,36 @@ def test_restore_crash_window_recovers(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "extra.txt"))
 
 
+def test_concurrent_heal_counts_as_success(spark, tmp_path, monkeypatch):
+    """Two opens racing to finish the same interrupted restore both pass the
+    isdir checks; the loser's rename finds the staged payload already gone.
+    That open must succeed on the healed root, not raise (ADVICE #3)."""
+    import os
+
+    from consult_spark.io import Warehouse
+
+    root = str(tmp_path / "wh")
+    incoming = f"{root}.__restore_incoming"
+    os.makedirs(incoming)
+    with open(os.path.join(incoming, "payload.txt"), "w") as f:
+        f.write("v1")
+
+    real_replace = os.replace
+
+    def racing_replace(src, dst):
+        # the concurrent open wins: the live root appears after this open's
+        # isdir checks, then this open's own rename runs
+        real_replace(src, dst)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", racing_replace)
+    Warehouse(spark, root, Config())
+    monkeypatch.undo()
+    with open(os.path.join(root, "payload.txt")) as f:
+        assert f.read() == "v1"
+    assert not os.path.isdir(incoming)
+
+
 def test_fold_rejects_params_mismatch(spark, corpus_xs, tmp_path):
     """A warehouse built under one params_hash refuses a fold configured
     with another (same contract as Warehouse.read_config)."""
