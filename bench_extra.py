@@ -15,6 +15,11 @@ everything exploratory lives here instead:
   --featurize-profile  cProfile one single-threaded featurize batch over a
                     slice of the bench corpus — attributes the per-clip cost
                     (decode vs frame features vs hashing)
+  --probe-jobs      one warm, untraced probe_stream drain (perfbench's
+                    seeded inputs, ``--seed N``) with the event log on:
+                    jobs, stages, tasks and executor CPU per drain and per
+                    epoch, and each epoch's wall split into start-up, plan
+                    build and its two data writes
 
 Results are cited in OPTIMIZATION_r08.md; the JSON lines printed here are
 NOT the driver contract (bench.py is).
@@ -23,6 +28,7 @@ NOT the driver contract (bench.py is).
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import sys
@@ -46,14 +52,15 @@ def _steal_ticks() -> int:
         return 0
 
 
-def _get_spark(cpus: int):
+def _get_spark(cpus: int, extra_conf: dict | None = None):
     from consult_spark.session import get_spark
 
     try:
         os.sched_setaffinity(0, set(range(cpus)))
     except (AttributeError, OSError, ValueError):
         pass
-    return get_spark("consult_spark_bench_extra", master=f"local[{cpus}]")
+    return get_spark("consult_spark_bench_extra", master=f"local[{cpus}]",
+                     extra_conf=extra_conf)
 
 
 def noop(df) -> None:
@@ -152,7 +159,6 @@ def run_doc_stages(sf_dir: str, cpus: int, repeats: int = 3) -> None:
 def run_featurize_profile(n_clips: int = 64) -> None:
     """Single-threaded cProfile of featurize_pdf over bench-corpus clips."""
     import cProfile
-    import glob
     import io
     import pstats
 
@@ -180,12 +186,163 @@ def run_featurize_profile(n_clips: int = 64) -> None:
         "ms_per_clip": round(1000 * wall / len(pdf), 2)}}))
 
 
+def _event_jobs(event_dir: str) -> list[dict]:
+    """Every job of the event log: id, submission time (ms), streaming
+    batch id (None outside an epoch), and the stages, tasks and executor
+    CPU it ran.  A stage counts for the first job that lists it; a job
+    that reuses its shuffle output lists it as skipped."""
+    jobs: dict[int, dict] = {}
+    stage_job: dict[int, int] = {}
+    ran: set[int] = set()
+    for path in sorted(glob.glob(f"{event_dir}/**/events_*", recursive=True)):
+        with open(path) as f:
+            for line in f:
+                ev = json.loads(line)
+                kind = ev.get("Event")
+                if kind == "SparkListenerJobStart":
+                    props = ev.get("Properties") or {}
+                    batch = props.get("streaming.sql.batchId")
+                    job = jobs[ev["Job ID"]] = {
+                        "submitted_ms": ev.get("Submission Time", 0),
+                        "batch": None if batch is None else int(batch),
+                        "stages": 0, "tasks": 0, "cpu_s": 0.0}
+                    for sid in ev.get("Stage IDs", []):
+                        stage_job.setdefault(sid, ev["Job ID"])
+                elif kind == "SparkListenerStageCompleted":
+                    sid = ev["Stage Info"]["Stage ID"]
+                    if sid in stage_job and sid not in ran:
+                        ran.add(sid)
+                        jobs[stage_job[sid]]["stages"] += 1
+                elif kind == "SparkListenerTaskEnd":
+                    jid = stage_job.get(ev.get("Stage ID"))
+                    if jid is None:
+                        continue
+                    jobs[jid]["tasks"] += 1
+                    tm = ev.get("Task Metrics") or {}
+                    jobs[jid]["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
+    return list(jobs.values())
+
+
+def _job_totals(jobs: list[dict]) -> dict:
+    return {"jobs": len(jobs), "stages": sum(j["stages"] for j in jobs),
+            "tasks": sum(j["tasks"] for j in jobs),
+            "cpu_s": round(sum(j["cpu_s"] for j in jobs), 3)}
+
+
+def run_probe_jobs(seed: int) -> None:
+    """Job counts and the epoch wall split of one probe_stream drain, on the
+    inputs, sizes and 4-core session of ``perfbench/run.py --workload
+    probe_stream``: set-up builds the index and drains the warm-up file,
+    then one drain of the query file runs with nothing else in flight.
+
+    Untraced on purpose: the tracer's persist + count barriers add jobs of
+    their own.  The event log is on for the whole session and read after
+    it stops; the drain's jobs are those submitted between its start and
+    its end, and an epoch's jobs carry its ``streaming.sql.batchId``.
+
+    Wall split of each epoch with input rows: ``startup_s`` is the
+    trigger's time outside foreachBatch (offsets, file listing, WAL) plus
+    the batch function's time before it calls ``probe_clips``;
+    ``plan_build_s`` is the ``probe_clips`` call (building the plan, plus
+    any job it runs to size a broadcast); ``matched_write_s`` / ``unmatched_write_s`` are the two data
+    writes; ``rest_s`` is what is left of the batch function."""
+    import tempfile
+
+    from perfbench.workloads import ProbeStream
+
+    with tempfile.TemporaryDirectory(prefix="probe-jobs-") as tmp:
+        events = os.path.join(tmp, "events")
+        os.makedirs(events)
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+        os.environ.setdefault("CONSULT_SPARK_DRIVER_MEM", "1g")
+        os.environ["CONSULT_SPARK_LOCAL_DIR"] = os.path.join(tmp, "spark-local")
+        os.environ.pop("SPARK_LOCAL_DIRS", None)
+        wl = ProbeStream(REPO, seed, ProbeStream.size)
+        spark = _get_spark(4, {"spark.eventLog.enabled": "true",
+                               "spark.eventLog.dir": events,
+                               "spark.eventLog.compress": "false"})
+        spark.sparkContext.setLogLevel("ERROR")
+
+        import consult_spark.streaming.probe as sp
+
+        calls: list[tuple[str, float, float]] = []
+
+        def timed_call(name: str, fn):
+            def wrapper(*args, **kwargs):
+                t0 = time.time()
+                try:
+                    return fn(*args, **kwargs)
+                finally:
+                    label = name if name != "write" else os.path.basename(args[1])
+                    calls.append((label, t0, time.time()))
+            return wrapper
+
+        make_writer = sp.make_probe_batch_writer
+
+        def make_timed_writer(*args, **kwargs):
+            return timed_call("epoch", make_writer(*args, **kwargs))
+
+        wl.setup(spark, os.path.join(tmp, "work"))
+        wl.warmup(spark, os.path.join(tmp, "warmup"))
+        originals = (sp.probe_clips, sp._epoch_write, sp.make_probe_batch_writer)
+        sp.probe_clips = timed_call("probe_clips", sp.probe_clips)
+        sp._epoch_write = timed_call("write", sp._epoch_write)
+        sp.make_probe_batch_writer = make_timed_writer
+        s0 = _steal_ticks()
+        t0 = time.time()
+        try:
+            lat = wl.op(spark, os.path.join(tmp, "op"))
+        finally:
+            sp.probe_clips, sp._epoch_write, sp.make_probe_batch_writer = originals
+        t1 = time.time()
+        steal = _steal_ticks() - s0
+        spark.stop()
+
+        drain = [j for j in _event_jobs(events)
+                 if t0 * 1000 <= j["submitted_ms"] <= t1 * 1000]
+        per_batch: dict[int, list[dict]] = {}
+        for j in drain:
+            if j["batch"] is not None:
+                per_batch.setdefault(j["batch"], []).append(j)
+        # an epoch with no input rows returns before it builds a plan
+        epochs = [c for c in calls if c[0] == "epoch"
+                  and any(p[0] == "probe_clips" and c[1] <= p[1] <= c[2] for p in calls)]
+        splits = []
+        for (_, e0, e1), trigger_s in zip(epochs, lat):
+            inside = [c for c in calls if c[0] != "epoch" and e0 <= c[1] <= e1]
+            plan = [c for c in inside if c[0] == "probe_clips"]
+            plan_start = plan[0][1] if plan else e1
+            split = {
+                "epoch_s": round(e1 - e0, 3),
+                "startup_s": round(trigger_s - (e1 - e0) + (plan_start - e0), 3),
+                "plan_build_s": round(sum(c[2] - c[1] for c in plan), 3),
+            }
+            for table in ("matched_clips", "unmatched_clips"):
+                split[f"{table.split('_')[0]}_write_s"] = round(
+                    sum(c[2] - c[1] for c in inside if c[0] == table), 3)
+            split["rest_s"] = round(
+                (e1 - e0) - (plan_start - e0) - sum(v for k, v in split.items()
+                                                    if k.endswith("_write_s"))
+                - split["plan_build_s"], 3)
+            splits.append(split)
+        print(json.dumps({"probe_jobs": {
+            "seed": seed, "wall_s": round(t1 - t0, 3), "steal": steal,
+            "drain": _job_totals(drain),
+            "outside_epochs": _job_totals([j for j in drain if j["batch"] is None]),
+            "epochs": [{"batch": b, **_job_totals(js)} for b, js in sorted(per_batch.items())],
+            "epoch_walls": splits,
+        }}))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", metavar="TAG")
     ap.add_argument("--isolate", action="store_true")
     ap.add_argument("--doc-stages", action="store_true")
     ap.add_argument("--featurize-profile", action="store_true")
+    ap.add_argument("--probe-jobs", action="store_true")
+    ap.add_argument("--seed", type=int, default=1, help="--probe-jobs input seed")
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
     ap.add_argument("--repeats", type=int, default=3)
@@ -199,6 +356,8 @@ def main() -> None:
         run_doc_stages(sf_dir, args.cpus, args.repeats)
     if args.featurize_profile:
         run_featurize_profile()
+    if args.probe_jobs:
+        run_probe_jobs(args.seed)
 
 
 if __name__ == "__main__":

@@ -617,22 +617,6 @@ CENTROID_BIN_LOG2 = 0.4
 CENTROID_LEVELS = 16
 
 
-def frame_log_energy(x: np.ndarray, sr: int, frame_ms: int, hop_ms: int) -> np.ndarray:
-    """Per-frame log10 energy (dB) over sliding windows. float64[n_frames]."""
-    frame = max(1, sr * frame_ms // 1000)
-    hop = max(1, sr * hop_ms // 1000)
-    if x.shape[0] < frame:
-        if x.shape[0] == 0:
-            return np.empty(0, dtype=np.float64)
-        frame = x.shape[0]
-    # energy via cumsum of squares: O(n), exact
-    sq = np.square(x, dtype=np.float64)
-    cs = np.concatenate([[0.0], np.cumsum(sq)])
-    starts = np.arange(0, x.shape[0] - frame + 1, hop)
-    e = (cs[starts + frame] - cs[starts]) / frame
-    return 10.0 * np.log10(np.maximum(e, 1e-12))
-
-
 def frame_features(
     x: np.ndarray, sr: int, frame_ms: int, hop_ms: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -714,14 +698,6 @@ def symbols_from_features(log_e: np.ndarray, ratio_db: np.ndarray,
     for i in range(r_bin.shape[1]):
         sym = sym | (r_bin[:, i] << np.uint16(4 + 2 * i))
     return sym | (c_bin << np.uint16(12))
-
-
-def pcm_symbols(data: bytes, codec: str, frame_ms: int, hop_ms: int,
-                n_bins: int, bin_db: float, offset: float = 0.0) -> np.ndarray:
-    """bytes -> 16-bit symbol sequence (uint16). The full decode stage."""
-    x, sr = decode_clip(data, codec)
-    log_e, ratio_db, centroid = frame_features(x, sr, frame_ms, hop_ms)
-    return symbols_from_features(log_e, ratio_db, centroid, n_bins, bin_db, offset)
 
 
 def snr_db(reference: np.ndarray, other: np.ndarray) -> float:

@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 QUANT = 1000
 
 
-def load_embeddings(spark, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def quantized(emb: DataFrame) -> DataFrame:
     """(vec_id, q array<bigint>, norm_q bigint): integer-quantized vectors."""
     q = F.transform(

@@ -73,11 +73,6 @@ def capped_buckets(bands: DataFrame, cfg: Config) -> DataFrame:
     )
 
 
-# deprecated pre-round-5 name (the salt phase is gone; the same bound now
-# comes from the WindowGroupLimit pushdown — see module docstring)
-salted_capped_buckets = capped_buckets
-
-
 def bucket_stats(bands: DataFrame, cfg: Config) -> DataFrame:
     """Occupancy histogram + drop accounting (the analog of CONSULT's per-l
     kept-k-mer counters and row-occupancy histogram, main_map.cpp:903-905,

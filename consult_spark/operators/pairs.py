@@ -37,19 +37,25 @@ _PAIR_EXPAND = (
 )
 
 
+def _with_fingerprints(buckets: DataFrame) -> DataFrame:
+    """Bucket tables written before the denormalized simhash/n_shingles
+    columns existed read them as nulls; verify then falls back to its
+    feature-table join for those pairs."""
+    if "simhash" not in buckets.columns:
+        buckets = buckets.withColumn("simhash", F.lit(None).cast("long"))
+    if "n_shingles" not in buckets.columns:
+        buckets = buckets.withColumn("n_shingles", F.lit(None).cast("int"))
+    return buckets
+
+
 def bucket_pairs(buckets: DataFrame) -> DataFrame:
     """capped buckets -> one row per
     (kind, clip_a, clip_b, sim_a, sim_b, n_a, n_b) per bucket hit.
 
     Tolerates bucket tables without the denormalized simhash/n_shingles
     columns (e.g. an index built by an earlier version and read back by the
-    search job): the sims ride as nulls and verify falls back to its
-    feature-table join for those pairs."""
-    if "simhash" not in buckets.columns:
-        buckets = buckets.withColumn("simhash", F.lit(None).cast("long"))
-    if "n_shingles" not in buckets.columns:
-        buckets = buckets.withColumn("n_shingles", F.lit(None).cast("int"))
-    grouped = buckets.groupBy(*BUCKET_COLS).agg(
+    search job): see _with_fingerprints."""
+    grouped = _with_fingerprints(buckets).groupBy(*BUCKET_COLS).agg(
         F.sort_array(
             F.collect_list(F.struct("clip_id", "simhash", "n_shingles"))
         ).alias("members")
@@ -64,36 +70,35 @@ def bucket_pairs(buckets: DataFrame) -> DataFrame:
 def probe_candidates(query_bands: DataFrame, lib_buckets: DataFrame, cfg: Config) -> DataFrame:
     """Query-vs-library probe (CONSULT's actual search mode,
     main_search.cpp:810-846): join query band rows against the prebuilt
-    bucket table -> (query_id, lib_id, kind, n_bands).
+    bucket table -> candidate_pairs' columns with clip_a = the query and
+    clip_b = the library clip, rolled up by the same _rollup.
 
     The library side is capped (bands.capped_buckets), so each query
     band row meets <= cap library rows.  Catalyst picks broadcast when the
     library fits (the distributed stand-in for CONSULT's RAM-resident shared
-    index, main_search.cpp:523-658) and a shuffled join otherwise.
+    index, main_search.cpp:523-658) and a shuffled join otherwise.  Both
+    sides' band rows carry their clip's fingerprints, so the pairs carry
+    them too and verify's primary-channel prefilter needs no join.  A
+    query whose id equals a library clip's id never pairs with that clip.
     """
-    # project to the join key + id: both sides carry denormalized
-    # simhash/n_shingles columns that would otherwise collide in the join
-    lib = lib_buckets.select(
-        *BUCKET_COLS, F.col("clip_id").alias("lib_id")
+    lib = _with_fingerprints(lib_buckets).select(
+        *BUCKET_COLS,
+        F.col("clip_id").alias("clip_b"),
+        F.col("simhash").alias("sim_b"),
+        F.col("n_shingles").alias("n_b"),
     )
     q = query_bands.select(
-        *BUCKET_COLS, F.col("clip_id").alias("query_id")
+        *BUCKET_COLS,
+        F.col("clip_id").alias("clip_a"),
+        F.col("simhash").alias("sim_a"),
+        F.col("n_shingles").alias("n_a"),
     )
     hits = (
         q.join(lib, BUCKET_COLS, "inner")
-        .filter(F.col("query_id") != F.col("lib_id"))
-        .repartition("query_id", "lib_id")
+        .filter(F.col("clip_a") != F.col("clip_b"))
+        .repartition("clip_a", "clip_b")
     )
-    # per-kind counts, then max over kinds: a pair qualifies only if some
-    # SINGLE channel reaches c (img/vid probe the same way; collisions are
-    # never summed across channels).  Both aggs ride the one repartition.
-    per_kind = hits.groupBy("query_id", "lib_id", "kind").agg(F.count("*").alias("nk"))
-    agg = per_kind.groupBy("query_id", "lib_id").agg(
-        F.sum(F.when(F.col("kind") == "pcm", F.col("nk")).otherwise(0)).alias("n_bands_pcm"),
-        F.sum(F.when(F.col("kind") == "txt", F.col("nk")).otherwise(0)).alias("n_bands_txt"),
-        F.max("nk").alias("max_kind_bands"),
-    )
-    return agg.filter(F.col("max_kind_bands") >= cfg.min_common_bands).drop("max_kind_bands")
+    return _rollup(hits, cfg)
 
 
 def candidate_pairs(buckets: DataFrame, cfg: Config) -> DataFrame:
@@ -115,7 +120,13 @@ def candidate_pairs(buckets: DataFrame, cfg: Config) -> DataFrame:
     aggregations — the per-kind count and the pair rollup — are satisfied by
     that distribution ((clip_a, clip_b) co-locates every (clip_a, clip_b,
     kind) group), so neither adds an exchange."""
-    hits = bucket_pairs(buckets).repartition("clip_a", "clip_b")
+    return _rollup(bucket_pairs(buckets).repartition("clip_a", "clip_b"), cfg)
+
+
+def _rollup(hits: DataFrame, cfg: Config) -> DataFrame:
+    """(kind, clip_a, clip_b, sim_a, sim_b, n_a, n_b) band hits,
+    partitioned by (clip_a, clip_b) -> one row per qualifying pair (see
+    candidate_pairs)."""
     per_kind = hits.groupBy("clip_a", "clip_b", "kind").agg(
         F.count("*").alias("nk"),
         # constant within the group (one clip has ONE fingerprint per kind)

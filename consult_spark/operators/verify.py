@@ -20,6 +20,7 @@ output so thresholds can be re-applied without recomputation.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -47,17 +48,62 @@ CONFIRMED_SCHEMA = (
 MAX_BROADCAST_FAT_ROWS = 100_000
 
 
-def _channel_features(features: DataFrame, kind: str) -> DataFrame:
-    return features.filter(F.col("kind") == kind).select(
-        "clip_id", "shingles", "simhash", "n_shingles"
+@dataclass(frozen=True)
+class ChannelSide:
+    """One channel of one side of the pair joins: the narrow
+    (clip_id, simhash, n_shingles) projection the prefilter joins, and the
+    fat (clip_id, shingles) projection the Jaccard kernel joins —
+    broadcast-hinted when its row count is bounded."""
+
+    narrow: DataFrame
+    fat: DataFrame
+
+
+@dataclass(frozen=True)
+class VerifySide:
+    """Everything verify joins to ONE member of a pair: each scored
+    channel's projections plus the (clip_id, transcript) rows.
+
+    confirm_pairs scores ``clip_a`` against side A and ``clip_b`` against
+    side B.  A self-join (every member from one table) passes one side for
+    both, so each fat projection broadcasts once and serves both aliased
+    joins.  A probe passes the query batch as side A and the library as
+    side B (probing.prepare_library builds that side once per stream): no
+    query ∪ library union, and a query is always scored with its own
+    features, even when a library clip has the same id."""
+
+    pcm: ChannelSide
+    txt: ChannelSide
+    transcripts: DataFrame
+
+
+def channel_side(features: DataFrame, kind: str, n_rows: int | None = None) -> ChannelSide:
+    """features -> one channel's side (``n_rows``: see verify_side)."""
+    feats = features.filter(F.col("kind") == kind)
+    return ChannelSide(
+        narrow=feats.select("clip_id", "simhash", "n_shingles"),
+        fat=_broadcast_if_bounded(feats.select("clip_id", "shingles"), n_rows),
     )
 
 
-def _prefiltered_survivors(pairs: DataFrame, features: DataFrame, kind: str,
-                           cfg: Config) -> tuple[DataFrame, DataFrame]:
-    """Shared prefilter ladder for one channel -> (survivors, feats) where
-    survivors = (clip_a, clip_b, hamming) rows that may still verify and
-    feats is the channel's feature projection.
+def verify_side(features: DataFrame, clips: DataFrame, n_rows: int | None = None) -> VerifySide:
+    """features (+ the clips' transcripts) -> the side confirm_pairs joins.
+
+    ``n_rows`` is an upper bound on the rows of every projection (a
+    features table has at most one row per clip and channel, a transcripts
+    table one per clip) when the caller already knows one; without it each
+    fat projection and the transcripts are sized by a bounded count."""
+    return VerifySide(
+        pcm=channel_side(features, "pcm", n_rows),
+        txt=channel_side(features, "txt", n_rows),
+        transcripts=_broadcast_if_bounded(clips.select("clip_id", "transcript"), n_rows),
+    )
+
+
+def _prefiltered_survivors(pairs: DataFrame, side_a: ChannelSide, side_b: ChannelSide,
+                           kind: str, cfg: Config) -> DataFrame:
+    """Shared prefilter ladder for one channel -> survivors = (clip_a,
+    clip_b, hamming) rows that may still verify.
 
     Two cheap prunes run on the narrow (clip_id, simhash, n_shingles)
     projection BEFORE the shingle arrays are joined in, so pairs that cannot
@@ -70,8 +116,6 @@ def _prefiltered_survivors(pairs: DataFrame, features: DataFrame, kind: str,
 
     One implementation serves channel_scores AND txt_scores_with_lcs so the
     fused path cannot drift from the per-channel one."""
-    feats = _channel_features(features, kind)
-    narrow = feats.select("clip_id", "simhash", "n_shingles")
     if kind == "pcm":
         thr = F.when(
             F.least("n_a", "n_b") < cfg.low_info_floor, F.lit(cfg.low_info_jaccard)
@@ -83,13 +127,13 @@ def _prefiltered_survivors(pairs: DataFrame, features: DataFrame, kind: str,
         return (
             p.select("clip_a", "clip_b")
             .join(
-                narrow.withColumnsRenamed(
+                side_a.narrow.withColumnsRenamed(
                     {"clip_id": "clip_a", "simhash": "simhash_a", "n_shingles": "n_a"}
                 ),
                 "clip_a",
             )
             .join(
-                narrow.withColumnsRenamed(
+                side_b.narrow.withColumnsRenamed(
                     {"clip_id": "clip_b", "simhash": "simhash_b", "n_shingles": "n_b"}
                 ),
                 "clip_b",
@@ -102,15 +146,18 @@ def _prefiltered_survivors(pairs: DataFrame, features: DataFrame, kind: str,
         # fast path: the candidate rows already carry both members'
         # fingerprints for this channel (denormalized through banding —
         # bands.py module docstring), so the prefilter needs NO join.  Only
-        # pairs that never co-occurred in this channel's buckets (sims null
-        # — e.g. a txt-qualified pair being scored on pcm) fall back to the
-        # feature-table join.  Gated to the PRIMARY channel (cfg.channels
-        # [0]) because coverage follows candidate generation: the channel
-        # that produced the band hits carries sims on ~every pair, while a
-        # secondary channel is mostly null (measured at 480k: the txt
-        # channel of the audio pipeline is ~90% null because pcm collisions
-        # dominate candidates) — there the "fallback" IS the full join and
-        # the have/miss split + union just adds two extra passes over the
+        # pairs missing either member's fingerprint fall back to the
+        # feature-table join: pairs that never co-occurred in this
+        # channel's buckets (e.g. a txt-qualified pair being scored on
+        # pcm), and probe pairs whose library bucket table predates the
+        # denormalized columns (pairs.bucket_pairs reads them as nulls).
+        # Gated to the PRIMARY channel (cfg.channels[0]) because coverage
+        # follows candidate generation: the channel that produced the band
+        # hits carries sims on ~every pair, while a secondary channel is
+        # mostly null (measured at 480k: the txt channel of the audio
+        # pipeline is ~90% null because pcm collisions dominate
+        # candidates) — there the "fallback" IS the full join and the
+        # have/miss split + union just adds two extra passes over the
         # candidate cache (+22s at 480k/16c, A/B-measured).
         base = pairs.select(
             "clip_a", "clip_b",
@@ -119,23 +166,23 @@ def _prefiltered_survivors(pairs: DataFrame, features: DataFrame, kind: str,
             F.col(f"n_{kind}_a").alias("n_a"),
             F.col(f"n_{kind}_b").alias("n_b"),
         )
-        have = base.filter(F.col("simhash_a").isNotNull())
-        miss = base.filter(F.col("simhash_a").isNull()).select("clip_a", "clip_b")
+        known = F.col("simhash_a").isNotNull() & F.col("simhash_b").isNotNull()
+        have = base.filter(known)
+        miss = base.filter(~known).select("clip_a", "clip_b")
         with_sim = have.unionByName(_narrow_join(miss).select(*have.columns))
     else:
         with_sim = _narrow_join(pairs)
     with_sim = with_sim.withColumn(
         "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     )
-    survivors = with_sim.filter(
+    return with_sim.filter(
         (F.col("hamming") <= cfg.simhash_prefilter_max)
         & (F.least("n_a", "n_b") >= thr * F.greatest("n_a", "n_b"))
     ).select("clip_a", "clip_b", "hamming")
-    return survivors, feats
 
 
-def _broadcast_if_bounded(df: DataFrame) -> DataFrame:
-    """Size-routed broadcast hint (one cheap bounded count).  Catalyst's own
+def _broadcast_if_bounded(df: DataFrame, n_rows: int | None = None) -> DataFrame:
+    """Size-routed broadcast hint.  Catalyst's own
     size estimate broadcasts the NARROW survivors side and streams the fat
     cache — correct by size, but it puts the python scoring behind the fat
     table's partitioning and scans the shingle arrays through the join
@@ -143,8 +190,12 @@ def _broadcast_if_bounded(df: DataFrame) -> DataFrame:
     is strictly better (the survivors stream in their existing
     distribution, one broadcast build serves both aliased join sides) —
     measured ~1 s off the sf0.1 verify stage.  Above the bound the hint is
-    omitted so the 10^12 path keeps the shuffled join."""
-    if df.select("clip_id").limit(MAX_BROADCAST_FAT_ROWS + 1).count() <= MAX_BROADCAST_FAT_ROWS:
+    omitted so the 10^12 path keeps the shuffled join.  A caller that
+    already knows a bound passes it as ``n_rows``; otherwise one bounded
+    count sizes the side."""
+    if n_rows is None:
+        n_rows = df.select("clip_id").limit(MAX_BROADCAST_FAT_ROWS + 1).count()
+    if n_rows <= MAX_BROADCAST_FAT_ROWS:
         return F.broadcast(df)
     return df
 
@@ -181,15 +232,22 @@ def _batch_jaccard(pdf: pd.DataFrame):
 
 
 def channel_scores(pairs: DataFrame, features: DataFrame, kind: str, cfg: Config) -> DataFrame:
-    """pairs x features -> (clip_a, clip_b, jaccard, hamming, min_n) via the
-    shared prefilter ladder (_prefiltered_survivors) + the size-routed fat
+    """pairs x features -> (clip_a, clip_b, jaccard, hamming, min_n), both
+    members from one feature table (the self-join)."""
+    side = channel_side(features, kind)
+    return _channel_scores(pairs, side, side, kind, cfg)
+
+
+def _channel_scores(pairs: DataFrame, side_a: ChannelSide, side_b: ChannelSide,
+                    kind: str, cfg: Config) -> DataFrame:
+    """pairs -> (clip_a, clip_b, jaccard, hamming, min_n) via the shared
+    prefilter ladder (_prefiltered_survivors) + the size-routed fat
     shingle join + the vectorized Jaccard kernel (_batch_jaccard)."""
-    survivors, feats = _prefiltered_survivors(pairs, features, kind, cfg)
-    fat = _broadcast_if_bounded(feats.select("clip_id", "shingles"))
+    survivors = _prefiltered_survivors(pairs, side_a, side_b, kind, cfg)
     joined = (
         survivors
-        .join(fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
-        .join(fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
+        .join(side_a.fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
+        .join(side_b.fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -214,7 +272,7 @@ def channel_scores(pairs: DataFrame, features: DataFrame, kind: str, cfg: Config
     )
 
 
-def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
+def txt_scores_with_lcs(pairs: DataFrame, side_a: VerifySide, side_b: VerifySide,
                         cfg: Config) -> DataFrame:
     """Fused txt-channel verification: exact Jaccard AND the suffix-array
     LCS containment in ONE subtree and one python pass ->
@@ -239,15 +297,15 @@ def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
     params-mismatched) keeps its real jaccard/hamming and falls back to
     lcs=0/substr=false — exactly what the old split flow produced for
     missing-transcript pairs."""
-    survivors, feats = _prefiltered_survivors(pairs, features, "txt", cfg)
-    fat = _broadcast_if_bounded(feats.select("clip_id", "shingles"))
-    tr = _broadcast_if_bounded(clips.select("clip_id", "transcript"))
+    survivors = _prefiltered_survivors(pairs, side_a.txt, side_b.txt, "txt", cfg)
     joined = (
         survivors
-        .join(fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
-        .join(fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
-        .join(tr.withColumnsRenamed({"clip_id": "clip_a", "transcript": "tr_a"}), "clip_a", "left")
-        .join(tr.withColumnsRenamed({"clip_id": "clip_b", "transcript": "tr_b"}), "clip_b", "left")
+        .join(side_a.txt.fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
+        .join(side_b.txt.fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
+        .join(side_a.transcripts.withColumnsRenamed(
+            {"clip_id": "clip_a", "transcript": "tr_a"}), "clip_a", "left")
+        .join(side_b.transcripts.withColumnsRenamed(
+            {"clip_id": "clip_b", "transcript": "tr_b"}), "clip_b", "left")
     )
     jthr = cfg.txt_jaccard_threshold
     min_frac = cfg.substr_min_frac
@@ -302,52 +360,53 @@ def txt_scores_with_lcs(pairs: DataFrame, features: DataFrame, clips: DataFrame,
     )
 
 
-def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, cfg: Config) -> DataFrame:
+def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, cfg: Config,
+                  side_b: VerifySide | None = None, n_rows: int | None = None) -> DataFrame:
     """Full verification -> CONFIRMED_SCHEMA rows (only pairs passing at
-    least one channel's confirmation, i.e. is_dup = true)."""
-    pcm = channel_scores(candidates, features, "pcm", cfg).withColumnsRenamed(
+    least one channel's confirmation, i.e. is_dup = true).
+
+    ``clip_a`` is scored against the side built from ``features`` and
+    ``clips`` (``n_rows`` bounds its rows when the caller knows it, see
+    verify_side); ``clip_b`` against ``side_b``, or against that same side
+    when None — the self-join."""
+    side_a = verify_side(features, clips, n_rows)
+    side_b = side_b or side_a
+    pcm = _channel_scores(candidates, side_a.pcm, side_b.pcm, "pcm", cfg).withColumnsRenamed(
         {"jaccard": "pcm_jaccard", "hamming": "pcm_hamming", "min_n": "pcm_min_n"}
     )
     # txt jaccard + the (gated) suffix-array containment arrive fused from
     # one subtree — see txt_scores_with_lcs for why (the split form
     # evaluated the txt channel twice per action)
-    txt = txt_scores_with_lcs(candidates, features, clips, cfg).withColumnsRenamed(
+    txt = txt_scores_with_lcs(candidates, side_a, side_b, cfg).withColumnsRenamed(
         {"jaccard": "txt_jaccard", "hamming": "txt_hamming"}
     )
+    pcm_jaccard = F.coalesce("pcm_jaccard", F.lit(0.0))
+    txt_jaccard = F.coalesce("txt_jaccard", F.lit(0.0))
+    substr = F.coalesce(F.when(F.col("has_lcs"), F.col("substr")), F.lit(False))
+    # low-complexity masking: flat clips (tiny shingle sets) must clear the
+    # stricter threshold — see Config.low_info_floor
+    pcm_threshold = F.when(
+        F.coalesce("pcm_min_n", F.lit(0)) < cfg.low_info_floor, F.lit(cfg.low_info_jaccard)
+    ).otherwise(F.lit(cfg.jaccard_threshold))
+    is_dup = (pcm_jaccard >= pcm_threshold) | (
+        (txt_jaccard >= cfg.txt_jaccard_threshold) & substr
+    )
+    # one select, not a withColumn chain: each withColumn re-analyzes the
+    # whole plan on the driver, which a streaming epoch pays every batch
     out = (
         candidates.join(pcm, ["clip_a", "clip_b"], "left")
         .join(txt, ["clip_a", "clip_b"], "left")
-        .withColumn("pcm_jaccard", F.coalesce("pcm_jaccard", F.lit(0.0)))
-        .withColumn("txt_jaccard", F.coalesce("txt_jaccard", F.lit(0.0)))
-        .withColumn("pcm_hamming", F.coalesce("pcm_hamming", F.lit(64)).cast("int"))
-        .withColumn("txt_hamming", F.coalesce("txt_hamming", F.lit(64)).cast("int"))
-        .withColumn(
-            "lcs",
-            F.coalesce(F.when(F.col("has_lcs"), F.col("lcs")), F.lit(0)).cast("int"),
-        )
-        .withColumn(
-            "substr",
-            F.coalesce(F.when(F.col("has_lcs"), F.col("substr")), F.lit(False)),
-        )
-        .withColumn("pcm_min_n", F.coalesce("pcm_min_n", F.lit(0)))
-        .withColumn(
-            # low-complexity masking: flat clips (tiny shingle sets) must
-            # clear the stricter threshold — see Config.low_info_floor
-            "pcm_threshold",
-            F.when(F.col("pcm_min_n") < cfg.low_info_floor, F.lit(cfg.low_info_jaccard))
-            .otherwise(F.lit(cfg.jaccard_threshold)),
-        )
-        .withColumn(
-            "is_dup",
-            (F.col("pcm_jaccard") >= F.col("pcm_threshold"))
-            | ((F.col("txt_jaccard") >= cfg.txt_jaccard_threshold) & F.col("substr")),
-        )
         .select(
-            "clip_a", "clip_b", "pcm_jaccard", "txt_jaccard",
-            "pcm_hamming", "txt_hamming",
+            "clip_a", "clip_b",
+            pcm_jaccard.alias("pcm_jaccard"),
+            txt_jaccard.alias("txt_jaccard"),
+            F.coalesce("pcm_hamming", F.lit(64)).cast("int").alias("pcm_hamming"),
+            F.coalesce("txt_hamming", F.lit(64)).cast("int").alias("txt_hamming"),
             F.col("n_bands_pcm").cast("int").alias("n_bands_pcm"),
             F.col("n_bands_txt").cast("int").alias("n_bands_txt"),
-            "lcs", "substr", "is_dup",
+            F.coalesce(F.when(F.col("has_lcs"), F.col("lcs")), F.lit(0)).cast("int").alias("lcs"),
+            substr.alias("substr"),
+            is_dup.alias("is_dup"),
         )
     )
     return out.filter(F.col("is_dup"))

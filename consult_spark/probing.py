@@ -5,12 +5,22 @@ The one probe flow CONSULT runs per `./main_search` invocation
 (main_search.cpp:684-1061), shared verbatim by the batch search job
 (jobs/search.py) and the continuous streaming probe
 (streaming/probe.py) so both surfaces classify identically.
+
+CONSULT loads its index once and then loops over the queries
+(main_search.cpp:523-658).  The same split here: prepare_library builds
+the library side once (the bucket table plus verify's library-side
+projections, sized by one bounded count), and probe_clips builds only the
+query side per call.  Every probe pair is (query, library), so verify
+joins each member to its own side and no query ∪ library table is built —
+the broadcast-the-indexed-side plan of *Implementing Distributed
+Similarity Joins using LSH* (EDBT 2022).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .config import Config
 from .operators import bands as bands_op
@@ -18,63 +28,68 @@ from .operators import pairs as pairs_op
 from .operators import shingle as shingle_op
 from .operators import verify as verify_op
 
+TRANSCRIPTS_SCHEMA = "clip_id string, transcript string"
+
+
+@dataclass(frozen=True)
+class ProbeLibrary:
+    """The library side of every probe: its capped bucket table and the
+    side verify joins each pair's library member (clip_b) to."""
+
+    buckets: DataFrame
+    side: verify_op.VerifySide
+
+
+def prepare_library(spark: SparkSession, lib_buckets: DataFrame, lib_features: DataFrame,
+                    lib_transcripts: DataFrame | None) -> ProbeLibrary:
+    """Build the library side once.  One bounded count of the feature table
+    sizes every projection (it has at least as many rows as any one
+    channel, and as the one-row-per-clip transcripts); a caller that keeps
+    the library across many probes (the streaming probe) should pass
+    cached frames.  A pcm-only index has no transcripts table: its side
+    carries an empty one and the LCS channel is skipped."""
+    n_rows = lib_features.limit(verify_op.MAX_BROADCAST_FAT_ROWS + 1).count()
+    tr = (lib_transcripts if lib_transcripts is not None
+          else spark.createDataFrame([], TRANSCRIPTS_SCHEMA))
+    return ProbeLibrary(lib_buckets, verify_op.verify_side(lib_features, tr, n_rows))
+
 
 def probe_clips(
     spark: SparkSession,
     queries: DataFrame,
-    lib_buckets: DataFrame,
-    lib_features: DataFrame,
-    lib_transcripts: DataFrame | None,
+    library: ProbeLibrary,
     cfg: Config,
     cache_registry: list | None = None,
+    n_queries: int | None = None,
 ) -> DataFrame:
     """-> confirmed pairs (clip_a = query_id, clip_b = lib_id), verified
     through the full ladder (SimHash prefilter, exact Jaccard, suffix-array
-    containment).  Library-side inputs are DataFrames so a long-lived caller
-    (the streaming probe) can cache them once across micro-batches.
+    containment) against a library from prepare_library.
 
-    The query-side featurize (python UDF decode + shingle) feeds FOUR
-    consumers — banding, the verify union, and verify's two per-channel
-    broadcast-gate row counts — so it is persisted here rather than
-    recomputed per consumer (a streaming micro-batch would otherwise pay
-    two extra featurize jobs just to size the broadcast hint).  Pass
-    ``cache_registry`` to receive the persisted frames for unpersist once
-    the returned plan has been fully materialized (the streaming probe
-    does this per epoch).
+    The query features feed banding and verify's query side, so they are
+    persisted rather than decoded twice.  ``n_queries`` (the caller's row
+    count of ``queries``) bounds every query-side projection, so sizing
+    the query side costs no count; without it verify counts each one.
+    Pass ``cache_registry`` to persist the candidates too — confirm_pairs
+    reads them three times (pcm scores, txt scores, the final join) — and
+    to receive every persisted frame for unpersist once the returned plan
+    has been fully materialized (the streaming probe does this per epoch).
+    A one-shot caller (jobs/search.py) leaves the candidates unpersisted.
 
-    The query-side cache (bounded by the probe batch) is always persisted —
-    it feeds four consumers and recomputing means re-decoding the queries.
-    The query ∪ FULL-LIBRARY feature union is persisted ONLY for the
-    registry caller that will unpersist it: a one-shot caller
-    (jobs/search.py) previously pinned that history-sized cache — fat
-    shingle payload included — for the rest of the session with no
-    unpersist, contrary to the repo's scan-don't-cache scale rules
-    (ADVICE r7 #2)."""
+    A query whose id equals a library clip's id is scored with its own
+    features; only the (id, id) pair is skipped."""
     q_features = shingle_op.featurize(queries, cfg).persist()
-    q_bands = bands_op.explode_bands(q_features)
-    cands = pairs_op.probe_candidates(q_bands, lib_buckets, cfg)
-
-    pair_shaped = cands.select(
-        F.col("query_id").alias("clip_a"),
-        F.col("lib_id").alias("clip_b"),
-        "n_bands_pcm",
-        "n_bands_txt",
-    )
-    all_features = q_features.unionByName(lib_features).dropDuplicates(
-        ["clip_id", "kind"]
-    )
+    cands = pairs_op.probe_candidates(bands_op.explode_bands(q_features), library.buckets, cfg)
     if cache_registry is not None:
-        all_features = all_features.persist()
-        cache_registry.extend([q_features, all_features])
-    # transcripts for the suffix-array check come from whichever sides have
-    # them; a pcm-only index (or pcm-only queries) skips the LCS channel
-    # gracefully instead of failing on a missing table/column
-    empty_tr = spark.createDataFrame([], "clip_id string, transcript string")
+        cands = cands.persist()
+        cache_registry.extend([q_features, cands])
+    # transcripts for the suffix-array check: pcm-only queries (or a
+    # pcm-only index) skip the LCS channel instead of failing on a missing
+    # column
     q_tr = (
         queries.select("clip_id", "transcript")
         if "transcript" in queries.columns
-        else empty_tr
+        else spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
     )
-    lib_tr = lib_transcripts if lib_transcripts is not None else empty_tr
-    transcripts = q_tr.unionByName(lib_tr).dropDuplicates(["clip_id"])
-    return verify_op.confirm_pairs(pair_shaped, all_features, transcripts, cfg)
+    return verify_op.confirm_pairs(cands, q_features, q_tr, cfg,
+                                   side_b=library.side, n_rows=n_queries)

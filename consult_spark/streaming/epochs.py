@@ -13,24 +13,60 @@ An empty DataFrame still writes a schema-bearing empty part file (so a
 written epoch is always readable); a sink that may legitimately never
 receive rows can be pre-initialized with an empty ``batch_id=-1`` sentinel
 partition (never a real epoch) so the root is readable from the start.
+
+Rows the driver already holds (the sentinels, a one-row metrics epoch) are
+written by epoch_write_rows with pyarrow, not through a Spark job: the same
+file layout, parquet types and Spark schema metadata as a Spark write, at
+no job's scheduling cost.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+
+# the footer key Spark's parquet writer stores its row schema under
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _partition_dir(table_dir: str, epoch_id: int) -> str:
+    return os.path.join(table_dir, f"batch_id={epoch_id}")
 
 
 def epoch_write(df: DataFrame, table_dir: str, epoch_id: int) -> None:
     """Overwrite exactly this epoch's partition directory."""
-    df.write.mode("overwrite").parquet(
-        os.path.join(table_dir, f"batch_id={epoch_id}")
-    )
+    df.write.mode("overwrite").parquet(_partition_dir(table_dir, epoch_id))
+
+
+def epoch_write_rows(spark: SparkSession, rows: list[tuple], schema: str, table_dir: str,
+                     epoch_id: int) -> None:
+    """epoch_write for rows held on the driver: one snappy part file plus
+    ``_SUCCESS``, written next to the partition under a hidden name (Spark's
+    reader skips it) and renamed into place, replacing what was there.
+    ``schema`` is a DDL string, parsed by Spark (an empty local relation:
+    no job) so the file's types and footer metadata are what Spark itself
+    would write."""
+    struct = spark.createDataFrame([], schema).schema
+    arrow = to_arrow_schema(struct).with_metadata({SPARK_ROW_METADATA: struct.json()})
+    table = pa.Table.from_pylist([dict(zip(struct.names, r)) for r in rows], schema=arrow)
+    final = _partition_dir(table_dir, epoch_id)
+    tmp = os.path.join(table_dir, f".batch_id={epoch_id}.{uuid.uuid4().hex}.tmp")
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+                   compression="snappy")
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    shutil.rmtree(final, ignore_errors=True)
+    os.rename(tmp, final)
 
 
 def init_epoch_sink(spark: SparkSession, table_dir: str, schema: str) -> None:
     """Idempotently seed ``table_dir`` with an empty sentinel partition so
     reads succeed before (or without) any real epoch."""
-    if not os.path.isdir(os.path.join(table_dir, "batch_id=-1")):
-        epoch_write(spark.createDataFrame([], schema), table_dir, -1)
+    if not os.path.isdir(_partition_dir(table_dir, -1)):
+        epoch_write_rows(spark, [], schema, table_dir, -1)

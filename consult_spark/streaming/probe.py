@@ -15,10 +15,27 @@ foreachBatch writes the verified hits and the per-batch unmatched ids:
   <out>/clusters         optional (update_probe_clusters after a drain):
                          maintained (clip_id, cluster_id) via incremental CC
 
-The library tables are read and cached ONCE at stream start (the
-distributed stand-in for CONSULT's load-index-then-loop design,
-main_search.cpp:523-658); each micro-batch pays only the query-side
-featurize + the bucket probe join.
+What is built once and what per epoch.  CONSULT loads its index once and
+then loops over the queries (main_search.cpp:523-658); so does this probe:
+
+* at stream start (make_probe_batch_writer): the library tables are read
+  and cached, and probing.prepare_library builds verify's library side
+  from them — per channel the narrow (clip_id, simhash, n_shingles) and
+  fat (clip_id, shingles) projections plus the transcripts, sized by ONE
+  bounded count of the cached features.  The sinks' empty sentinels are
+  written from the driver with pyarrow (no Spark job).
+* per epoch: the batch is cached and counted once; that count replaces an
+  emptiness check and bounds the query side's broadcast, so sizing costs
+  no job.  The epoch featurizes and bands its own queries, probes the
+  bucket table, caches the candidates and verifies each (query, library)
+  pair against the query side and the prebuilt library side — no
+  query ∪ library table.  The matched and unmatched writes are the only
+  other actions: an Observation (pyspark.sql) on each counts the pairs
+  and the unmatched clips, and the one-row metrics epoch is written from
+  the driver with pyarrow.
+
+An epoch's jobs therefore follow its own batch; the library's size enters
+only through the broadcast of its prebuilt projections.
 
 Resume semantics: foreachBatch alone is at-least-once — the batch function
 runs BEFORE the checkpoint commit, so a crash between the write and the
@@ -30,7 +47,7 @@ epoch replaces exactly its own partition instead of double-appending —
 the standard foreachBatch idempotence recipe (Spark structured-streaming
 docs, "Using Foreach and ForeachBatch").  Epochs never processed are
 untouched; a replayed epoch converges to the same bytes (VERDICT r6
-'What's wrong #2').  Both sinks are initialized with an empty schema-
+'What's wrong #2').  Every sink is initialized with an empty schema-
 bearing ``batch_id=-1`` sentinel partition at stream start, so the output
 roots are readable before the first row arrives (an epoch whose clips all
 match writes zero unmatched rows; without the sentinel, a fully-matched
@@ -42,16 +59,16 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import Config
 from ..datagen import CLIPS_SCHEMA
 from ..io import Warehouse
 from ..operators.verify import CONFIRMED_SCHEMA
-from ..probing import probe_clips
+from ..probing import prepare_library, probe_clips
 from .epochs import epoch_write as _epoch_write
-from .epochs import init_epoch_sink
+from .epochs import epoch_write_rows, init_epoch_sink
 
 UNMATCHED_SCHEMA = "clip_id string"
 # per-epoch metrics: the streaming analog of CONSULT's per-file
@@ -67,7 +84,8 @@ METRICS_SCHEMA = (
 def init_probe_sinks(spark: SparkSession, out_dir: str) -> None:
     """Make every output root readable from epoch zero: an empty sentinel
     partition (batch_id=-1, never a real foreachBatch epoch) carries the
-    schema.  Idempotent — existing sinks are left as-is."""
+    schema.  Idempotent — existing sinks are left as-is.  Submits no Spark
+    job (epochs.epoch_write_rows)."""
     for table, schema in (
         ("matched_clips", CONFIRMED_SCHEMA),
         ("unmatched_clips", UNMATCHED_SCHEMA),
@@ -86,39 +104,49 @@ def make_probe_batch_writer(
 ):
     """The foreachBatch body, exposed so tests can replay an epoch directly
     (a mid-batch crash = the same (batch_df, epoch_id) delivered twice) and
-    assert the idempotence contract without killing a JVM mid-write."""
+    assert the idempotence contract without killing a JVM mid-write.
+
+    Builds the library side here, once per stream (one bounded count of
+    ``lib_features``; pass the library frames cached)."""
+    library = prepare_library(spark, lib_buckets, lib_features, lib_tr)
 
     def per_batch(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         t0 = time.time()
         batch_df = batch_df.persist()
-        caches = []
-        confirmed = probe_clips(
-            spark, batch_df, lib_buckets, lib_features, lib_tr, cfg,
-            cache_registry=caches,
-        ).persist()
+        caches = [batch_df]
         try:
-            _epoch_write(confirmed, os.path.join(out_dir, "matched_clips"), epoch_id)
+            n_q = batch_df.count()
+            if not n_q:
+                return
+            confirmed = probe_clips(
+                spark, batch_df, library, cfg, cache_registry=caches, n_queries=n_q,
+            ).persist()
+            caches.append(confirmed)
+            pairs_obs, unmatched_obs = Observation(), Observation()
+            _epoch_write(
+                confirmed.observe(pairs_obs, F.count(F.lit(1)).alias("n")),
+                os.path.join(out_dir, "matched_clips"), epoch_id,
+            )
             # a query clip only probes in its own batch, so this batch's
             # unmatched = batch ids minus this batch's hits — O(batch),
             # never a scan of the accumulated output
-            matched = confirmed.select(F.col("clip_a").alias("clip_id")).distinct().persist()
-            unmatched = batch_df.select("clip_id").join(matched, "clip_id", "left_anti")
-            _epoch_write(unmatched, os.path.join(out_dir, "unmatched_clips"), epoch_id)
-            # per-epoch metrics row (counts read the frames just cached/
-            # written — no recompute of the probe itself)
-            n_q = batch_df.count()
-            n_mc = matched.count()
-            metrics = spark.createDataFrame(
-                [(n_q, confirmed.count(), n_mc, n_q - n_mc, round(time.time() - t0, 3))],
-                METRICS_SCHEMA,
+            unmatched = batch_df.select("clip_id").join(
+                confirmed.select(F.col("clip_a").alias("clip_id")), "clip_id", "left_anti"
             )
-            _epoch_write(metrics, os.path.join(out_dir, "probe_metrics"), epoch_id)
-            matched.unpersist()
+            _epoch_write(
+                unmatched.observe(unmatched_obs, F.count(F.lit(1)).alias("n")),
+                os.path.join(out_dir, "unmatched_clips"), epoch_id,
+            )
+            # per-epoch metrics row: the counts come from the two writes'
+            # observations, and the row is written from the driver
+            n_unmatched = unmatched_obs.get["n"]
+            epoch_write_rows(
+                spark,
+                [(n_q, pairs_obs.get["n"], n_q - n_unmatched, n_unmatched,
+                  round(time.time() - t0, 3))],
+                METRICS_SCHEMA, os.path.join(out_dir, "probe_metrics"), epoch_id,
+            )
         finally:
-            confirmed.unpersist()
-            batch_df.unpersist()
             for df in caches:
                 df.unpersist()
 

@@ -1,6 +1,6 @@
 """Index ("map") build job — the Spark re-expression of `./main_map -i
 kmers.fa -o DB` (main_map.cpp:540-1132): featurize the library clips, band,
-apply the salted capacity cap, and persist `lsh_buckets` + `features`
+apply the per-bucket capacity cap (bands.capped_buckets), and persist `lsh_buckets` + `features`
 (fingerprints/shingles payload) + `config` + occupancy metrics.
 
     spark-submit --py-files dist/consult_spark.zip jobs/build_index.py \

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
 from consult_spark.metrics import MetricsSink
-from consult_spark.probing import probe_clips
+from consult_spark.probing import prepare_library, probe_clips
 
 
 def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
@@ -42,16 +42,21 @@ def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=probe.run_id)
     sink = MetricsSink(wh)
 
-    lib_buckets = wh.read("lsh_buckets")
-    lib_features = wh.read("features")
-    lib_tr = wh.read("transcripts") if wh.exists("transcripts") else None
+    library = prepare_library(
+        spark,
+        wh.read("lsh_buckets"),
+        wh.read("features"),
+        wh.read("transcripts") if wh.exists("transcripts") else None,
+    )
     # verify with the query side as clip_a and library side as clip_b —
-    # the probe core shared with the continuous probe (streaming/probe.py)
-    confirmed = probe_clips(spark, queries, lib_buckets, lib_features, lib_tr, cfg)
+    # the probe core shared with the continuous probe (streaming/probe.py);
+    # the query count also bounds the query side's broadcast
+    n_queries = queries.count()
+    confirmed = probe_clips(spark, queries, library, cfg, n_queries=n_queries)
 
     matched = confirmed.select(F.col("clip_a").alias("clip_id")).distinct()
     unmatched = queries.select("clip_id").join(matched, "clip_id", "left_anti")
-    sink.add("search", "n_queries", queries.count())
+    sink.add("search", "n_queries", n_queries)
     n_matched = matched.count()
     sink.add("search", "n_matched", n_matched)
     sink.flush()
