@@ -140,7 +140,7 @@ quality AS (
 """
 
 # hyperplane-LSH twins: reconstruct the engine's md5-derived ±1 planes
-# (ann._hyperplane_signs / ann._signs_matrix) in SQL.  Components are
+# (ann._signs_matrix, plain and banded key layouts) in SQL.  Components are
 # 0-indexed in the md5 key; DuckDB lists are 1-indexed, hence i-1 in comp.
 _COMP = """
 comp AS (

@@ -20,6 +20,10 @@ everything exploratory lives here instead:
                     jobs, stages, tasks and executor CPU per drain and per
                     epoch, and each epoch's wall split into start-up, plan
                     build and its two data writes
+  --stage-jobs      one warm run each of run_doc_pipeline (perfbench's
+                    text_ann documents, ``--seed N``) and run_pipeline
+                    (.fixtures/clips_200): jobs split into stage writes,
+                    read-back counts, lineage, flush and the rest
 
 Results are cited in OPTIMIZATION_r08.md; the JSON lines printed here are
 NOT the driver contract (bench.py is).
@@ -335,6 +339,116 @@ def run_probe_jobs(seed: int) -> None:
         }}))
 
 
+STAGE_JOB_KINDS = ("stage_write", "readback_count", "lineage", "flush")
+
+
+def run_stage_jobs(seed: int) -> None:
+    """Spark jobs of one warm run each of ``run_doc_pipeline`` (perfbench's
+    text_ann documents for ``--seed N``) and ``run_pipeline``
+    (``.fixtures/clips_200``), split by what submitted them.  Each run is
+    preceded by an identical discarded run into its own warehouse.
+
+    Jobs are told apart by job group, set by wrappers installed for the
+    measured run only:
+      stage_write     the DataFrameWriter.parquet call inside Warehouse.write
+      readback_count  the rest of Warehouse.write (its row count)
+      lineage         MetricsSink.record_stage
+      flush           MetricsSink.flush
+      other           everything else: the stages' own computations
+    Seconds are exclusive: a nested group's time is not its parent's."""
+    import tempfile
+    import threading
+
+    from pyspark.sql import DataFrameWriter
+
+    from consult_spark import io as wh_io
+    from consult_spark import metrics
+    from jobs.dedup_documents import run_doc_pipeline
+    from jobs.pipeline import run_pipeline
+    from perfbench.workloads import TextAnn
+
+    with tempfile.TemporaryDirectory(prefix="stage-jobs-") as tmp:
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+        os.environ.setdefault("CONSULT_SPARK_DRIVER_MEM", "1g")
+        os.environ["CONSULT_SPARK_LOCAL_DIR"] = os.path.join(tmp, "spark-local")
+        os.environ.pop("SPARK_LOCAL_DIRS", None)
+        spark = _get_spark(4)
+        spark.sparkContext.setLogLevel("ERROR")
+        sc = spark.sparkContext
+        local = threading.local()
+
+        def grouped(kind: str, fn, only_inside: str | None = None):
+            def wrapper(*args, **kwargs):
+                stack = local.__dict__.setdefault("stack", [])
+                if not stack or (only_inside and stack[-1][0] != only_inside):
+                    return fn(*args, **kwargs)
+                prev = sc.getLocalProperty("spark.jobGroup.id")
+                sc.setLocalProperty("spark.jobGroup.id", f"{local.run}:{kind}")
+                stack.append([kind, 0.0])
+                t0 = time.time()
+                try:
+                    return fn(*args, **kwargs)
+                finally:
+                    dt = time.time() - t0
+                    _, inner = stack.pop()
+                    local.secs[kind] = local.secs.get(kind, 0.0) + dt - inner
+                    stack[-1][1] += dt
+                    sc.setLocalProperty("spark.jobGroup.id", prev)
+            return wrapper
+
+        patches = [
+            (wh_io.Warehouse, "write", grouped("readback_count", wh_io.Warehouse.write)),
+            (DataFrameWriter, "parquet",
+             grouped("stage_write", DataFrameWriter.parquet, only_inside="readback_count")),
+            (metrics.MetricsSink, "record_stage",
+             grouped("lineage", metrics.MetricsSink.record_stage)),
+            (metrics.MetricsSink, "flush", grouped("flush", metrics.MetricsSink.flush)),
+        ]
+        originals = [(owner, attr, getattr(owner, attr)) for owner, attr, _ in patches]
+        for owner, attr, fn in patches:
+            setattr(owner, attr, fn)
+
+        def measure(label: str, run) -> dict:
+            run(os.path.join(tmp, f"{label}-warm"))
+            local.run, local.secs, local.stack = label, {}, [["other", 0.0]]
+            sc.setLocalProperty("spark.jobGroup.id", f"{label}:other")
+            s0 = _steal_ticks()
+            t0 = time.time()
+            try:
+                run(os.path.join(tmp, label))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            wall = time.time() - t0
+            local.stack = []
+            out = {"wall_s": round(wall, 3), "steal": _steal_ticks() - s0}
+            for kind in STAGE_JOB_KINDS + ("other",):
+                secs = wall - sum(local.secs.values()) if kind == "other" else \
+                    local.secs.get(kind, 0.0)
+                out[kind] = {"jobs": len(sc.statusTracker().getJobIdsForGroup(
+                    f"{label}:{kind}")), "s": round(secs, 3)}
+            out["jobs"] = sum(out[k]["jobs"] for k in STAGE_JOB_KINDS + ("other",))
+            print(json.dumps({"stage_jobs_run": {label: out}}))
+            return out
+
+        try:
+            wl = TextAnn(REPO, seed, TextAnn.size)
+            wl.setup(spark, os.path.join(tmp, "work"))
+            __import__("__spark_entry__")._clips_fixture(spark)
+            clips = spark.read.parquet(os.path.join(REPO, ".fixtures", "clips_200"))
+            runs = {
+                "run_doc_pipeline": measure(
+                    "run_doc_pipeline", lambda d: run_doc_pipeline(spark, wl.docs, d)),
+                "run_pipeline": measure(
+                    "run_pipeline", lambda d: run_pipeline(spark, clips, d)),
+            }
+        finally:
+            for owner, attr, fn in originals:
+                setattr(owner, attr, fn)
+            spark.stop()
+        print(json.dumps({"stage_jobs": {"seed": seed, "cpus": 4, **runs}}))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", metavar="TAG")
@@ -342,7 +456,9 @@ def main() -> None:
     ap.add_argument("--doc-stages", action="store_true")
     ap.add_argument("--featurize-profile", action="store_true")
     ap.add_argument("--probe-jobs", action="store_true")
-    ap.add_argument("--seed", type=int, default=1, help="--probe-jobs input seed")
+    ap.add_argument("--stage-jobs", action="store_true")
+    ap.add_argument("--seed", type=int, default=1,
+                    help="--probe-jobs / --stage-jobs input seed")
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
     ap.add_argument("--repeats", type=int, default=3)
@@ -358,6 +474,8 @@ def main() -> None:
         run_featurize_profile()
     if args.probe_jobs:
         run_probe_jobs(args.seed)
+    if args.stage_jobs:
+        run_stage_jobs(args.seed)
 
 
 if __name__ == "__main__":

@@ -49,14 +49,12 @@ appends here are what break naive re-runs.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import Config
 from .io import Warehouse
-from .metrics import MetricsSink
+from .metrics import StageRunner
 from .operators import bands as bands_op
 from .operators import cluster as cluster_op
 from .operators import pairs as pairs_op
@@ -105,13 +103,7 @@ def grow_index(
     cfg = cfg or Config()
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
     wh.read_config()
-    timings: dict[str, float] = {}
-
-    def timed(name: str, fn):
-        t0 = time.time()
-        out = fn()
-        timings[name] = round(time.time() - t0, 3)
-        return out
+    run = StageRunner(wh)
 
     # drop already-enrolled ids: present-id lookup is a broadcast semi
     # against the features scan (same shape as merge_clusters' fresh-ids
@@ -131,24 +123,16 @@ def grow_index(
     # to empty, and make the enrollment vanish from its own bucket update
     # (observed: n_enrolled=0 with the rows already appended).  Same class
     # as fold_delta's confirmed_delta checkpoint, append-flavored.
-    delta_features = timed(
+    delta_features = run.timed(
         "featurize",
         lambda: shingle_op.featurize(fresh_clips, cfg).localCheckpoint(eager=True),
     )
     n_fresh = delta_features.select("clip_id").distinct().count()
-    n_new = timed(
-        "features",
-        lambda: wh.write(delta_features, "features", mode="append",
-                         partition_by=("kind",)),
-    )
+    n_new = run.write("features", lambda: delta_features, mode="append",
+                      partition_by=("kind",))
     if "transcript" in delta_clips.columns and wh.exists("transcripts"):
-        timed(
-            "transcripts",
-            lambda: wh.write(
-                fresh_clips.select("clip_id", "transcript"), "transcripts",
-                mode="append",
-            ),
-        )
+        run.write("transcripts", lambda: fresh_clips.select("clip_id", "transcript"),
+                  mode="append")
 
     delta_capped = bands_op.capped_buckets(bands_op.explode_bands(delta_features), cfg)
     touched = delta_capped.select(*BUCKET_COLS).distinct().persist()
@@ -161,11 +145,12 @@ def grow_index(
     new_buckets = old_buckets.join(
         F.broadcast(touched), BUCKET_COLS, "left_anti"
     ).unionByName(merged_touched)
-    timed("lsh_buckets", lambda: wh.replace(new_buckets, "lsh_buckets"))
+    run.write("lsh_buckets", lambda: new_buckets, replace=True)
+    run.flush()
 
     summary = {
         "run_id": wh.run_id,
-        "timings": timings,
+        "timings": run.timings,
         "n_enrolled": n_fresh,
         "n_already_present": delta_ids.count() - n_fresh,
         "n_features_total": n_new,
@@ -198,24 +183,14 @@ def fold_delta(
     cfg = cfg or Config()
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
     wh.read_config()  # refuse to fold under a different params_hash
-    sink = MetricsSink(wh)
-    timings: dict[str, float] = {}
-
-    def timed(name: str, fn):
-        t0 = time.time()
-        out = fn()
-        timings[name] = round(time.time() - t0, 3)
-        return out
+    run = StageRunner(wh)
 
     delta_ids = delta_clips.select("clip_id")
 
     # -- features: delta-only featurize, appended under the same layout
     delta_features = shingle_op.featurize(delta_clips, cfg).persist()
-    timed(
-        "features",
-        lambda: wh.write(delta_features, "features", mode="append", partition_by=("kind",)),
-    )
-    sink.add(
+    run.write("features", lambda: delta_features, mode="append", partition_by=("kind",))
+    run.add(
         "features",
         "decode_failed_delta",
         delta_features.filter(~F.col("decode_ok")).count(),
@@ -260,15 +235,15 @@ def fold_delta(
     # table HERE, once — verify's several consumers (two channels x
     # narrow+fat projections + the broadcast-gate count) then read the
     # delta-sized cache instead of re-scanning the fat payload each time
-    timed("candidates", lambda: delta_cands.count())
-    timed("pair_features_scan", lambda: features_needed.count())
+    run.timed("candidates", lambda: delta_cands.count())
+    run.timed("pair_features_scan", lambda: features_needed.count())
     if wh.exists("transcripts"):
         tr_old = wh.read("transcripts")
     else:
         tr_old = spark.createDataFrame([], "clip_id string, transcript string")
     if "transcript" in delta_clips.columns:
         tr_delta = delta_clips.select("clip_id", "transcript")
-        timed("transcripts", lambda: wh.write(tr_delta, "transcripts", mode="append"))
+        run.write("transcripts", lambda: tr_delta, mode="append")
         tr_all = tr_old.unionByName(tr_delta)
     else:
         tr_all = tr_old
@@ -281,15 +256,13 @@ def fold_delta(
     # surprise ~90 s re-verify mid-fold before this fix; a truncated
     # lineage cannot recompute, so it can neither pay that nor read swapped
     # data).
-    confirmed_delta = timed(
-        "confirmed_pairs",
+    confirmed_delta = run.timed(
+        "verify",
         lambda: verify_op.confirm_pairs(
             delta_cands, features_needed, tr_needed, cfg
         ).localCheckpoint(eager=True),
     )
-    n_new_pairs = timed(
-        "verify_write", lambda: wh.write(confirmed_delta, "confirmed_pairs", mode="append")
-    )
+    n_new_pairs = run.write("confirmed_pairs", lambda: confirmed_delta, mode="append")
     n_delta_pairs = confirmed_delta.count()
 
     # -- buckets rewrite: untouched rows pass through (broadcast anti =
@@ -301,11 +274,11 @@ def fold_delta(
     new_buckets = old_buckets.join(
         F.broadcast(touched), BUCKET_COLS, "left_anti"
     ).unionByName(merged_touched)
-    timed("buckets", lambda: wh.replace(new_buckets, "buckets"))
+    run.write("buckets", lambda: new_buckets, replace=True)
 
     # -- clusters: incremental CC (assignment scanned, never shuffled)
     old_clusters = wh.read("clusters")
-    merged_clusters = timed(
+    merged_clusters = run.timed(
         "clusters_merge",
         lambda: cluster_op.merge_clusters(
             old_clusters,
@@ -314,7 +287,7 @@ def fold_delta(
             new_clips=delta_ids,
         ),
     )
-    timed("clusters", lambda: wh.replace(merged_clusters, "clusters"))
+    run.write("clusters", lambda: merged_clusters, replace=True)
 
     # -- unique_clips: O(delta) maintenance — ids that gained a partner
     # leave, partnerless delta clips enter.  (A previously-paired old clip
@@ -330,18 +303,12 @@ def fold_delta(
     new_unique = old_unique.unionByName(
         delta_clips.select(*old_unique.columns)
     ).join(F.broadcast(paired_ids), "clip_id", "left_anti")
-    timed("unique_clips", lambda: wh.replace(new_unique, "unique_clips"))
-
-    def _lineage():
-        for name in ("confirmed_pairs", "clusters", "unique_clips"):
-            sink.record_stage(wh.read(name), name, {"wall_sec": timings.get(name, 0.0)})
-        sink.flush()
-
-    timed("lineage", _lineage)
+    run.write("unique_clips", lambda: new_unique, replace=True)
+    run.flush()
 
     summary = {
         "run_id": wh.run_id,
-        "timings": timings,
+        "timings": run.timings,
         # counted off the cached features, NOT the input df — the caller may
         # hand a filtered view of a huge table, and re-scanning it for a
         # summary number would be its own O(corpus) pass

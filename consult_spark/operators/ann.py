@@ -196,21 +196,6 @@ def near_dup_auto(emb: DataFrame, threshold_micro: int = 400_000,
     return near_dup_pairs_lsh(emb, threshold_micro)
 
 
-def _hyperplane_signs(n_planes: int, dim: int, seed: int) -> list[list[int]]:
-    """Deterministic ±1 hyperplane components from md5 bits (no RNG state);
-    computed once driver-side and embedded as literals in the plan."""
-    import hashlib
-
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for i in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{i}".encode()).digest()[0]
-            row.append(1 if h >= 128 else -1)
-        planes.append(row)
-    return planes
-
-
 def hyperplane_buckets(emb: DataFrame, n_planes: int = 12, seed: int = 0xC05, dim: int = 64) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector (sign pattern of n_planes
     pseudo-random projections) — SimHash-for-cosine.
@@ -223,7 +208,7 @@ def hyperplane_buckets(emb: DataFrame, n_planes: int = 12, seed: int = 0xC05, di
     the buckets are bit-identical."""
     import numpy as np
 
-    signs = np.array(_hyperplane_signs(n_planes, dim, seed), dtype=np.int64)
+    signs = _signs_matrix(1, n_planes, dim, seed, banded=False)
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
     qdf = quantized(emb)
 
@@ -249,21 +234,22 @@ def hyperplane_buckets(emb: DataFrame, n_planes: int = 12, seed: int = 0xC05, di
     )
 
 
-def _signs_matrix(n_bands: int, k: int, dim: int, seed: int):
-    """(n_bands * k, dim) ±1 hyperplane matrix from md5 bits, banded variant:
-    component (t, p, i) = sign of md5(f"{seed}:{t}:{p}:{i}")[0] — engine-
-    portable (the DuckDB oracle reconstructs the identical planes in SQL)."""
+def _signs_matrix(n_bands: int, k: int, dim: int, seed: int, banded: bool = True):
+    """(n_bands * k, dim) ±1 hyperplane matrix from md5 bits (no RNG state),
+    computed once driver-side and embedded as a literal in the plan: row
+    t * k + p, component i is +1 iff the first md5 byte of its key is
+    >= 128.  The key is f"{seed}:{t}:{p}:{i}" when banded, else
+    f"{seed}:{p}:{i}" (plain planes, n_bands = 1) — engine-portable: the
+    DuckDB oracles rebuild both layouts in SQL, so neither may change."""
     import hashlib
 
     import numpy as np
 
-    m = np.empty((n_bands * k, dim), dtype=np.int64)
-    for t in range(n_bands):
-        for p in range(k):
-            for i in range(dim):
-                h = hashlib.md5(f"{seed}:{t}:{p}:{i}".encode()).digest()[0]
-                m[t * k + p, i] = 1 if h >= 128 else -1
-    return m
+    rows = [f"{seed}:{t}:{p}" if banded else f"{seed}:{p}"
+            for t in range(n_bands) for p in range(k)]
+    m = np.array([[hashlib.md5(f"{r}:{i}".encode()).digest()[0] for i in range(dim)]
+                  for r in rows])
+    return np.where(m >= 128, 1, -1).astype(np.int64)
 
 
 def hyperplane_band_buckets(emb: DataFrame, n_bands: int = 16, planes_per_band: int = 8,

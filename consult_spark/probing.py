@@ -73,8 +73,9 @@ def probe_clips(
     Pass ``cache_registry`` to persist the candidates too — confirm_pairs
     reads them three times (pcm scores, txt scores, the final join) — and
     to receive every persisted frame for unpersist once the returned plan
-    has been fully materialized (the streaming probe does this per epoch).
-    A one-shot caller (jobs/search.py) leaves the candidates unpersisted.
+    has been fully materialized (the streaming probe does this per epoch,
+    jobs/search.py after its two writes).  Without it the query features
+    stay persisted for the rest of the session.
 
     A query whose id equals a library clip's id is scored with its own
     features; only the (id, id) pair is skipped."""

@@ -15,24 +15,18 @@ receive rows can be pre-initialized with an empty ``batch_id=-1`` sentinel
 partition (never a real epoch) so the root is readable from the start.
 
 Rows the driver already holds (the sentinels, a one-row metrics epoch) are
-written by epoch_write_rows with pyarrow, not through a Spark job: the same
-file layout, parquet types and Spark schema metadata as a Spark write, at
-no job's scheduling cost.
+written by epoch_write_rows with pyarrow (io.write_rows), not through a
+Spark job: the same file layout, parquet types and Spark schema metadata as
+a Spark write, at no job's scheduling cost.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 
-# the footer key Spark's parquet writer stores its row schema under
-SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+from ..io import write_rows
 
 
 def _partition_dir(table_dir: str, epoch_id: int) -> str:
@@ -46,23 +40,9 @@ def epoch_write(df: DataFrame, table_dir: str, epoch_id: int) -> None:
 
 def epoch_write_rows(spark: SparkSession, rows: list[tuple], schema: str, table_dir: str,
                      epoch_id: int) -> None:
-    """epoch_write for rows held on the driver: one snappy part file plus
-    ``_SUCCESS``, written next to the partition under a hidden name (Spark's
-    reader skips it) and renamed into place, replacing what was there.
-    ``schema`` is a DDL string, parsed by Spark (an empty local relation:
-    no job) so the file's types and footer metadata are what Spark itself
-    would write."""
-    struct = spark.createDataFrame([], schema).schema
-    arrow = to_arrow_schema(struct).with_metadata({SPARK_ROW_METADATA: struct.json()})
-    table = pa.Table.from_pylist([dict(zip(struct.names, r)) for r in rows], schema=arrow)
-    final = _partition_dir(table_dir, epoch_id)
-    tmp = os.path.join(table_dir, f".batch_id={epoch_id}.{uuid.uuid4().hex}.tmp")
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
-                   compression="snappy")
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(tmp, final)
+    """epoch_write for rows held on the driver (``schema`` a DDL string):
+    the partition is staged under a hidden name and renamed into place."""
+    write_rows(spark, rows, schema, _partition_dir(table_dir, epoch_id), mode="overwrite")
 
 
 def init_epoch_sink(spark: SparkSession, table_dir: str, schema: str) -> None:

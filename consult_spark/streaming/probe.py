@@ -73,7 +73,7 @@ from .epochs import epoch_write_rows, init_epoch_sink
 UNMATCHED_SCHEMA = "clip_id string"
 # per-epoch metrics: the streaming analog of CONSULT's per-file
 # (file, lines, matched) report (main_search.cpp:1021-1041) / the batch
-# job's MetricsSink rows — one row per processed epoch, epoch-keyed like
+# jobs' StageRunner metrics rows — one row per processed epoch, epoch-keyed like
 # the data sinks so a replayed epoch overwrites its own row
 METRICS_SCHEMA = (
     "n_queries bigint, n_matched_pairs bigint, "

@@ -12,10 +12,11 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
-from consult_spark.metrics import MetricsSink
+from consult_spark.metrics import StageRunner
 from consult_spark.operators import bands as bands_op
 from consult_spark.operators import shingle as shingle_op
 
@@ -24,26 +25,23 @@ def build_index(spark: SparkSession, clips: DataFrame, warehouse_dir: str,
                 cfg: Config | None = None, run_id: str = "") -> Warehouse:
     cfg = cfg or Config()
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
-    sink = MetricsSink(wh)
+    run = StageRunner(wh)
     wh.write_config()
     # partitioned by channel (readers prune on kind) and clustered by
     # clip_id within partitions (file-level locality for the probe-side
     # verify joins; at real scale this is bucketBy(N, "clip_id") —
     # docs/SCALE.md "Cluster deployment notes")
-    features = shingle_op.featurize(clips, cfg).repartition("kind", "clip_id")
-    wh.write(features, "features", partition_by=("kind",))
-    features = wh.read("features")
+    features = run.stage(
+        "features", lambda: shingle_op.featurize(clips, cfg).repartition("kind", "clip_id"),
+        partition_by=("kind",))
     if "transcript" in clips.columns:
         # verify payload for the suffix-array check in probe mode
-        wh.write(clips.select("clip_id", "transcript"), "transcripts")
+        run.write("transcripts", lambda: clips.select("clip_id", "transcript"))
     bands = bands_op.explode_bands(features)
-    wh.write(bands_op.capped_buckets(bands, cfg), "lsh_buckets")
-    wh.write(bands_op.bucket_stats(bands, cfg), "bucket_stats")
-    sink.record_stage(wh.read("lsh_buckets"), "lsh_buckets")
-    from pyspark.sql import functions as F
-
-    sink.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
-    sink.flush()
+    run.write("lsh_buckets", lambda: bands_op.capped_buckets(bands, cfg))
+    run.write("bucket_stats", lambda: bands_op.bucket_stats(bands, cfg))
+    run.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
+    run.flush()
     return wh
 
 

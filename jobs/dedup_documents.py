@@ -17,13 +17,12 @@ pair -> exact-Jaccard chain runs once per run (and a resumed run reuses it).
 from __future__ import annotations
 
 import argparse
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
-from consult_spark.metrics import MetricsSink
+from consult_spark.metrics import StageRunner
 from consult_spark.operators import text as text_op
 from consult_spark.operators import textdedup as td
 
@@ -32,33 +31,20 @@ def run_doc_pipeline(spark: SparkSession, docs: DataFrame, warehouse_dir: str,
                      cfg: Config | None = None, resume: bool = False) -> dict:
     cfg = cfg or Config(channels=("txt",))
     wh = Warehouse(spark, warehouse_dir, cfg)
-    sink = MetricsSink(wh)
-    timings: dict[str, float] = {}
-
-    def stage(name: str, build) -> DataFrame:
-        if resume and wh.exists(name):
-            timings[name] = 0.0
-            return wh.read(name)
-        t0 = time.time()
-        n = wh.write(build(), name)
-        timings[name] = time.time() - t0
-        out = wh.read(name)
-        sink.record_stage(out, name, {"rows": n, "wall_sec": timings[name]})
-        return out
-
+    run = StageRunner(wh, resume)
     wh.write_config()
-    stage("exact_dup_groups", lambda: td.exact_dup_groups(docs))
-    stage("quality_scores", lambda: text_op.quality_scores(docs))
-    langs = stage("lang_id", lambda: text_op.lang_id(spark, docs))
-    stage("corpus_stats", lambda: text_op.corpus_stats(spark, docs, langs))
-    confirmed = stage("confirmed_pairs", lambda: td.confirmed_pairs(docs))
-    clusters = stage("doc_clusters", lambda: td.doc_clusters(docs, confirmed))
-    uniques = stage("unique_docs", lambda: td.unique_docs(docs, confirmed))
-    sink.add("doc_pipeline", "n_docs", docs.count())
-    sink.flush()
+    run.stage("exact_dup_groups", lambda: td.exact_dup_groups(docs))
+    run.stage("quality_scores", lambda: text_op.quality_scores(docs))
+    langs = run.stage("lang_id", lambda: text_op.lang_id(spark, docs))
+    run.stage("corpus_stats", lambda: text_op.corpus_stats(spark, docs, langs))
+    confirmed = run.stage("confirmed_pairs", lambda: td.confirmed_pairs(docs))
+    clusters = run.stage("doc_clusters", lambda: td.doc_clusters(docs, confirmed))
+    uniques = run.stage("unique_docs", lambda: td.unique_docs(docs, confirmed))
+    run.add("doc_pipeline", "n_docs", docs.count())
+    run.flush()
     return {
         "run_id": wh.run_id,
-        "timings": timings,
+        "timings": run.timings,
         "tables": {"confirmed_pairs": confirmed, "doc_clusters": clusters, "unique_docs": uniques},
         "warehouse": wh,
     }

@@ -23,14 +23,13 @@ media_confirmed -> media_clusters -> media_unique.
 from __future__ import annotations
 
 import argparse
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
-from consult_spark.metrics import MetricsSink
+from consult_spark.metrics import StageRunner
 from consult_spark.operators import bands as bands_op
 from consult_spark.operators import cluster as cluster_op
 from consult_spark.operators import multimodal as mm
@@ -81,21 +80,7 @@ def run_media_pipeline(
         raise ValueError("at least one of images/videos is required")
     cfg = cfg or Config()
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
-    sink = MetricsSink(wh)
-    timings: dict[str, float] = {}
-
-    def stage(name: str, build, partition_by: tuple[str, ...] = ()) -> DataFrame:
-        if resume and wh.exists(name):
-            timings[name] = 0.0
-            return wh.read(name)
-        t0 = time.time()
-        df = build()
-        n = wh.write(df, name, partition_by=partition_by)
-        timings[name] = time.time() - t0
-        out = wh.read(name)
-        sink.record_stage(out, name, {"rows": n, "wall_sec": timings[name]})
-        return out
-
+    run = StageRunner(wh, resume)
     wh.write_config()
 
     def build_features() -> DataFrame:
@@ -109,26 +94,27 @@ def run_media_pipeline(
             out = out.unionByName(p)
         return out
 
-    features = stage("media_features", build_features, partition_by=("kind",))
-    sink.add("media_features", "decode_failed",
-             features.filter(~F.col("decode_ok")).count())
+    features = run.stage("media_features", build_features, partition_by=("kind",))
+    run.add("media_features", "decode_failed",
+            features.filter(~F.col("decode_ok")).count())
     ids = features.select("clip_id").distinct()
 
-    buckets = stage(
+    buckets = run.stage(
         "media_buckets",
         lambda: bands_op.capped_buckets(bands_op.explode_bands(features), cfg),
     )
-    candidates = stage("media_candidates", lambda: pairs_op.candidate_pairs(buckets, cfg))
-    confirmed = stage(
+    candidates = run.stage("media_candidates", lambda: pairs_op.candidate_pairs(buckets, cfg))
+    confirmed = run.stage(
         "media_confirmed", lambda: media_confirmed_pairs(candidates, features, cfg)
     )
-    clusters = stage("media_clusters", lambda: cluster_op.assign_clusters(ids, confirmed, cfg))
-    uniques = stage("media_unique", lambda: cluster_op.unique_clips(ids, confirmed))
+    clusters = run.stage("media_clusters",
+                         lambda: cluster_op.assign_clusters(ids, confirmed, cfg))
+    uniques = run.stage("media_unique", lambda: cluster_op.unique_clips(ids, confirmed))
 
-    sink.flush()
+    run.flush()
     return {
         "run_id": wh.run_id,
-        "timings": timings,
+        "timings": run.timings,
         "tables": {
             "media_features": features,
             "media_buckets": buckets,

@@ -21,13 +21,13 @@ params_hash — kill the job after any stage and re-run to continue.
 from __future__ import annotations
 
 import argparse
-import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
-from consult_spark.metrics import MetricsSink
+from consult_spark.metrics import StageRunner
 from consult_spark.operators import bands as bands_op
 from consult_spark.operators import cluster as cluster_op
 from consult_spark.operators import pairs as pairs_op
@@ -45,56 +45,41 @@ def run_pipeline(
 ) -> dict:
     cfg = cfg or Config()
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
-    sink = MetricsSink(wh)
-    timings: dict[str, float] = {}
-
-    def stage(name: str, build, partition_by: tuple[str, ...] = ()) -> DataFrame:
-        """Materialize a stage unless an up-to-date manifest allows a skip."""
-        if resume and wh.exists(name):
-            timings[name] = 0.0
-            return wh.read(name)
-        t0 = time.time()
-        df = build()
-        n = wh.write(df, name, partition_by=partition_by)
-        timings[name] = time.time() - t0
-        out = wh.read(name)
-        sink.record_stage(out, name, {"rows": n, "wall_sec": timings[name]})
-        return out
-
+    run = StageRunner(wh, resume)
     wh.write_config()
 
     # features partitioned by channel: every downstream reader filters on
     # kind, so the scan prunes whole partitions (plan-asserted)
-    features = stage("features", lambda: shingle_op.featurize(clips, cfg),
-                     partition_by=("kind",))
+    features = run.stage("features", lambda: shingle_op.featurize(clips, cfg),
+                         partition_by=("kind",))
     # decode failures are per-clip soft errors (empty shingle set); surface
     # the count as a metric — the per-file (lines, matched) accounting analog
-    from pyspark.sql import functions as F
-
-    sink.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
+    run.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
     if "transcript" in clips.columns:
         # verify payload for delta folds (consult_spark/incremental.py):
         # an increment needs the OLD clips' transcripts for the
         # suffix-array channel, so the warehouse keeps them (same table
         # build_index writes for the probe jobs)
-        stage("transcripts", lambda: clips.select("clip_id", "transcript"))
-    buckets = stage(
+        run.stage("transcripts", lambda: clips.select("clip_id", "transcript"))
+    buckets = run.stage(
         "buckets",
         lambda: bands_op.capped_buckets(bands_op.explode_bands(features), cfg),
     )
-    stage("bucket_stats", lambda: bands_op.bucket_stats(bands_op.explode_bands(features), cfg))
-    candidates = stage("candidates", lambda: pairs_op.candidate_pairs(buckets, cfg))
-    confirmed = stage(
+    run.stage("bucket_stats",
+              lambda: bands_op.bucket_stats(bands_op.explode_bands(features), cfg))
+    candidates = run.stage("candidates", lambda: pairs_op.candidate_pairs(buckets, cfg))
+    confirmed = run.stage(
         "confirmed_pairs",
         lambda: verify_op.confirm_pairs(candidates, features, clips, cfg),
     )
-    clusters = stage("clusters", lambda: cluster_op.assign_clusters(clips, confirmed, cfg))
-    uniques = stage("unique_clips", lambda: cluster_op.unique_clips(clips, confirmed))
+    clusters = run.stage("clusters",
+                         lambda: cluster_op.assign_clusters(clips, confirmed, cfg))
+    uniques = run.stage("unique_clips", lambda: cluster_op.unique_clips(clips, confirmed))
 
-    sink.flush()
+    run.flush()
     return {
         "run_id": wh.run_id,
-        "timings": timings,
+        "timings": run.timings,
         "tables": {
             "features": features,
             "buckets": buckets,

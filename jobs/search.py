@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
-from consult_spark.metrics import MetricsSink
+from consult_spark.metrics import StageRunner
 from consult_spark.probing import prepare_library, probe_clips
 
 
@@ -40,7 +40,7 @@ def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
         )
     cfg = stored
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=probe.run_id)
-    sink = MetricsSink(wh)
+    run = StageRunner(wh)
 
     library = prepare_library(
         spark,
@@ -50,21 +50,26 @@ def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
     )
     # verify with the query side as clip_a and library side as clip_b —
     # the probe core shared with the continuous probe (streaming/probe.py);
-    # the query count also bounds the query side's broadcast
+    # the query count also bounds the query side's broadcast.  The frames
+    # the probe persists are returned as "cached": unpersist them once the
+    # returned plans have been written.
     n_queries = queries.count()
-    confirmed = probe_clips(spark, queries, library, cfg, n_queries=n_queries)
+    cached: list = []
+    confirmed = probe_clips(spark, queries, library, cfg, cache_registry=cached,
+                            n_queries=n_queries)
 
     matched = confirmed.select(F.col("clip_a").alias("clip_id")).distinct()
     unmatched = queries.select("clip_id").join(matched, "clip_id", "left_anti")
-    sink.add("search", "n_queries", n_queries)
+    run.add("search", "n_queries", n_queries)
     n_matched = matched.count()
-    sink.add("search", "n_matched", n_matched)
-    sink.flush()
+    run.add("search", "n_matched", n_matched)
+    run.flush()
     return {
         "confirmed": confirmed,
         "matched": matched,
         "unmatched": unmatched,
         "n_matched": n_matched,
+        "cached": cached,
         "warehouse": wh,
     }
 
@@ -82,6 +87,8 @@ def main() -> None:
     res = search(spark, spark.read.parquet(args.queries), args.warehouse)
     res["confirmed"].write.mode("overwrite").parquet(f"{args.out}/matched_clips")
     res["unmatched"].write.mode("overwrite").parquet(f"{args.out}/unmatched_clips")
+    for df in res["cached"]:
+        df.unpersist()
     print({"n_matched": res["n_matched"]})
     spark.stop()
 

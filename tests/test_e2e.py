@@ -86,6 +86,31 @@ def test_metrics_and_lineage_written(pipeline_result, spark):
     assert lineage.filter(F.col("rows") < 0).count() == 0
 
 
+def _lineage_sums(spark, wh_dir: str, run_id: str) -> dict[str, int]:
+    lineage = spark.read.parquet(os.path.join(wh_dir, "lineage"))
+    return {r["stage"]: r["n"] for r in lineage.filter(F.col("run_id") == run_id)
+            .groupBy("stage").agg(F.sum("rows").alias("n")).collect()}
+
+
+def test_lineage_sums_to_manifest_rows(pipeline_result, spark):
+    """Lineage holds one row per written data file; for every stage those
+    rows sum to the manifest's row count, and so does the rows metric."""
+    res, wh_dir = pipeline_result
+    wh = res["warehouse"]
+    sums = _lineage_sums(spark, wh_dir, res["run_id"])
+    assert set(sums) == {"features", "transcripts", "buckets", "bucket_stats", "candidates",
+                         "confirmed_pairs", "clusters", "unique_clips"}
+    metrics = spark.read.parquet(os.path.join(wh_dir, "metrics")).filter(
+        (F.col("run_id") == res["run_id"]) & (F.col("key") == "rows"))
+    rows_metric = {r["stage"]: r["value"] for r in metrics.collect()}
+    for stage, n in sums.items():
+        assert n == wh.manifest(stage)["rows"] == rows_metric[stage], stage
+    files = glob.glob(os.path.join(wh_dir, "features", "kind=*", "part-*.parquet"))
+    features = spark.read.parquet(os.path.join(wh_dir, "lineage")).filter(
+        (F.col("run_id") == res["run_id"]) & (F.col("stage") == "features"))
+    assert sorted(r["partition_id"] for r in features.collect()) == list(range(len(files)))
+
+
 def test_resume_skips_stages_and_reproduces(pipeline_result, spark, clips_xs, cfg):
     """Kill-and-resume contract: a second run with --resume over the same
     warehouse skips every stage (manifests match) and yields identical
@@ -96,6 +121,9 @@ def test_resume_skips_stages_and_reproduces(pipeline_result, spark, clips_xs, cf
     second = {r["clip_id"]: r["cluster_id"] for r in res2["tables"]["clusters"].collect()}
     assert first == second
     assert all(v == 0.0 for v in res2["timings"].values()), res2["timings"]
+    # skipped stages still record their lineage (from footers, no job)
+    assert _lineage_sums(spark, wh_dir, res2["run_id"]) == _lineage_sums(
+        spark, wh_dir, res["run_id"])
 
 
 def test_resume_rejects_config_mismatch(pipeline_result, spark, clips_xs):

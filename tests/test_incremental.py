@@ -292,6 +292,55 @@ def test_concurrent_heal_counts_as_success(spark, tmp_path, monkeypatch):
     assert not os.path.isdir(incoming)
 
 
+def test_restore_refuses_a_staged_payload_of_another_snapshot(spark, tmp_path):
+    """A payload left staged by an earlier interrupted restore is resumed
+    only for the snapshot it came from: a wrong or already-dropped snap
+    path raises and leaves the live warehouse and the staged payload as
+    they are (ADVICE #1)."""
+    import os
+
+    from consult_spark.io import Warehouse
+
+    root = str(tmp_path / "wh")
+    os.makedirs(root)
+    with open(os.path.join(root, "payload.txt"), "w") as f:
+        f.write("old")
+    wh = Warehouse(spark, root, Config())
+    stale = wh.snapshot(tag="old")
+    os.replace(stale, f"{root}.__restore_incoming")  # staged, never promoted
+    # a new file, not a rewrite: the snapshot hardlinks the old one
+    os.remove(os.path.join(root, "payload.txt"))
+    with open(os.path.join(root, "payload.txt"), "w") as f:
+        f.write("live")
+
+    with pytest.raises(FileNotFoundError):
+        wh.restore(f"{root}.__snapshot_dropped")
+    with open(os.path.join(root, "payload.txt")) as f:
+        assert f.read() == "live"
+    assert os.path.isdir(f"{root}.__restore_incoming")
+
+    wh.restore(stale)  # the snapshot it was staged from still resumes
+    with open(os.path.join(root, "payload.txt")) as f:
+        assert f.read() == "old"
+    assert "_snapshot_path" not in os.listdir(root)  # the marker goes with promotion
+
+
+def test_staged_restore_beside_live_root_warns(spark, tmp_path):
+    """Opening a warehouse whose unfinished restore payload sits beside an
+    intact live root warns instead of leaving it to be silently reaped
+    (ADVICE #2)."""
+    import os
+
+    from consult_spark.io import Warehouse
+
+    root = str(tmp_path / "wh")
+    os.makedirs(root)
+    os.makedirs(f"{root}.__restore_incoming")
+    with pytest.warns(UserWarning, match="unfinished restore"):
+        Warehouse(spark, root, Config())
+    assert os.path.isdir(f"{root}.__restore_incoming")
+
+
 def test_fold_rejects_params_mismatch(spark, corpus_xs, tmp_path):
     """A warehouse built under one params_hash refuses a fold configured
     with another (same contract as Warehouse.read_config)."""

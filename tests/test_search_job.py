@@ -76,3 +76,23 @@ def test_search_pcm_only_index_skips_lcs(spark, split_corpus, tmp_path_factory):
     build_index(spark, lib.drop("transcript"), wh_dir, cfg=pcm_only)
     res = search(spark, qry.drop("transcript").limit(20), wh_dir)
     assert res["matched"].count() + res["unmatched"].count() == 20
+
+
+def test_search_returns_the_frames_it_persisted(spark, split_corpus, cfg, tmp_path_factory):
+    """search() hands back every frame the probe persisted as
+    res["cached"]; once the results are written and those frames are
+    unpersisted, the search leaves no persisted RDD behind."""
+    lib, qry, _ = split_corpus
+    wh_dir = str(tmp_path_factory.mktemp("index5"))
+    out = tmp_path_factory.mktemp("search_out")
+    build_index(spark, lib, wh_dir, cfg=cfg)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = search(spark, qry, wh_dir, cfg=cfg)
+    res["confirmed"].write.parquet(str(out / "matched_clips"))
+    res["unmatched"].write.parquet(str(out / "unmatched_clips"))
+    assert res["cached"] and all(df.is_cached for df in res["cached"])
+    assert set(jsc.getPersistentRDDs().keys()) - before
+    for df in res["cached"]:
+        df.unpersist()
+    assert not set(jsc.getPersistentRDDs().keys()) - before
