@@ -45,6 +45,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 BENCH_QUERIES = (
     "confirmed_pairs", "cosine_topk", "ann_lsh_topk", "simhash16",
     "ann_near_dup_lsh", "probe_matched", "simhash64_band_pairs",
+    "ann_ivf_topk", "embedding_near_dup",
 )
 
 

@@ -1,16 +1,24 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths, per the scale ladder:
+Three rungs of the scale ladder:
 
-  cosine_topk       — brute-force exact top-k, the baseline.  All-pairs
-                      similarity stays JVM-side via zip_with/aggregate on the
-                      quantized integer vectors (no explode, no Python).
-  lsh_bucketed_topk — the scale path: random-hyperplane signs bucket vectors
-                      (SimHash-for-cosine); candidates are generated only
-                      within buckets, then scored exactly.  The same
-                      band/bucket/cap algebra as the main pipeline, applied
-                      to embeddings.
-  near_dup_pairs    — embedding-cosine near-duplicate pairs (threshold form).
+  brute force     — cosine_topk (exact top-k, the baseline) and
+                    near_dup_pairs (exact threshold pairs) broadcast the
+                    quantized matrix and score each Arrow batch against it
+                    (_brute_force); guarded by MAX_BROADCAST_VECTORS.
+  hyperplane LSH  — random-hyperplane signs bucket vectors
+                    (SimHash-for-cosine): lsh_bucketed_topk ranks within
+                    its one bucket, near_dup_pairs_lsh takes any collision
+                    of L x K bands and re-scores it JVM-side.  The same
+                    band/bucket/cap algebra as the main pipeline, applied
+                    to embeddings.
+  IVF cells       — ivf_topk: a query probes its nprobe nearest fixed
+                    anchors' cells; every library vector sits in one cell.
+
+near_dup_auto routes between the exact and the LSH near-dup paths by size.
+Every numpy scorer shares one core: _vectors (a frame's ids, int64 matrix
+and norms), _score (row-blocked exact similarity) and _topk (the vectorized
+(sim desc, vec_b asc) ranking).
 
 Determinism across engines: components are quantized to integers
 (floor(v * 1000 + 0.5)) so dot products and norms are EXACT integer math in
@@ -19,6 +27,8 @@ one deterministic IEEE-double step.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,17 +52,99 @@ def quantized(emb: DataFrame) -> DataFrame:
 
 
 def _sim_micro() -> F.Column:
+    """The JVM twin of _score's similarity step (near_dup_pairs_lsh); a pair
+    touching a zero-norm vector scores 0, as in _score — ANSI mode would
+    raise DIVIDE_BY_ZERO on the division."""
     dot = F.aggregate(
         F.zip_with(F.col("q_a"), F.col("q_b"), lambda a, b: a * b),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    return F.floor(
-        1_000_000.0 * dot / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-    ).cast("bigint")
+    nn = F.col("na") * F.col("nb")
+    return F.when(nn == 0, F.lit(0).cast("bigint")).otherwise(
+        F.floor(1_000_000.0 * dot / F.sqrt(nn.cast("double"))).cast("bigint")
+    )
 
 
 MAX_BROADCAST_VECTORS = 2_000_000  # ~1 GB of int64 64-dim vectors
+BLOCK_ROWS = 256  # rows of a per _score similarity block
+
+
+def _vectors(pdf):
+    """(ids, m, norms) of a pandas frame of quantized vectors: vec_id, the
+    int64 (n, dim) matrix of q and its exact int64 squared norms (equal to
+    norm_q, so callers need to ship only vec_id and q).  An empty frame
+    (an empty table's broadcast matrix) gives a (0, 0) matrix."""
+    import numpy as np
+
+    q = pdf["q"].to_numpy()
+    m = np.stack(q).astype(np.int64) if len(q) else np.zeros((0, 0), dtype=np.int64)
+    return pdf["vec_id"].to_numpy(), m, np.einsum("ij,ij->i", m, m)
+
+
+def _batches(batches):
+    """(pdf, _vectors(pdf)) per non-empty Arrow batch of a mapInPandas input."""
+    for pdf in batches:
+        if len(pdf):
+            yield pdf, _vectors(pdf)
+
+
+def _score(a, b, emit) -> "pd.DataFrame":
+    """Score every vector of ``a`` against every vector of ``b`` (each an
+    (ids, m, norms) triple from _vectors) and concatenate ``emit(sim, a_ids,
+    b_ids)`` over row blocks of a — the one similarity computation of every
+    numpy scorer here.
+
+    sim is int64 floor(1e6 * dot / sqrt(na * nb)) from exact int64 dot
+    products and one deterministic double step.  A zero-norm vector gives
+    0/0 = NaN; Spark's non-ANSI cast(NaN as bigint) is 0, so NaN maps to 0
+    instead of numpy's undefined NaN->int64.  Blocks of BLOCK_ROWS rows keep
+    the similarity block at O(BLOCK_ROWS * len(b)), not O(len(a) * len(b)):
+    a hot bucket or cell grows it linearly, not quadratically."""
+    import numpy as np
+    import pandas as pd
+
+    (a_ids, a_m, a_norms), (b_ids, b_m, b_norms) = a, b
+    frames = []
+    for lo in range(0, len(a_ids), BLOCK_ROWS):
+        hi = lo + BLOCK_ROWS
+        prod = (a_norms[lo:hi, None] * b_norms[None, :]).astype(np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            simf = np.floor(1_000_000.0 * (a_m[lo:hi] @ b_m.T) / np.sqrt(prod))
+        sim = np.where(np.isfinite(simf), simf, 0.0).astype(np.int64)
+        frames.append(emit(sim, a_ids[lo:hi], b_ids))
+    return pd.concat(frames, ignore_index=True)
+
+
+def _topk(sim, a_ids, b_ids, k: int) -> "pd.DataFrame":
+    """Rank a sim block (rows a_ids, columns b_ids): per row, its k best
+    columns other than the row's own id, by (sim desc, vec_b asc) — the
+    row_number() order of the SQL oracles.  Returns (vec_a, vec_b,
+    sim_micro, rank 1..k) in (row, rank) order.
+
+    No per-row Python: np.partition finds each row's k-th best non-self
+    sim, every non-self column at or above it is a candidate (so all ties
+    at the k-th place survive), and one lexsort ranks every row's
+    candidates at once."""
+    import numpy as np
+    import pandas as pd
+
+    own = b_ids[None, :] == a_ids[:, None]
+    if sim.size:
+        masked = np.where(own, np.iinfo(np.int64).min, sim)
+        kth = min(max(sim.shape[1] - k, 0), sim.shape[1] - 1)
+        cut = np.partition(masked, kth, axis=1)[:, kth]
+        ii, jj = np.nonzero((masked >= cut[:, None]) & ~own)
+    else:
+        ii = jj = np.zeros(0, dtype=np.int64)
+    s, vb = sim[ii, jj], b_ids[jj]
+    order = np.lexsort((vb, -s, ii))
+    ii, vb, s = ii[order], vb[order], s[order]
+    rank = np.arange(1, len(ii) + 1) - np.searchsorted(ii, ii)
+    keep = rank <= k
+    return pd.DataFrame(
+        {"vec_a": a_ids[ii[keep]], "vec_b": vb[keep], "sim_micro": s[keep], "rank": rank[keep]}
+    )
 
 
 def _broadcast_matrix(emb: DataFrame):
@@ -61,123 +153,68 @@ def _broadcast_matrix(emb: DataFrame):
     Brute force inherently needs every vector against every other; the
     driver collect is the documented ceiling (MAX_BROADCAST_VECTORS) — at
     scale the default must be the LSH paths below, which never collect.
-    Returns (qdf, broadcast of (ids, matrix, norms))."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    qdf = quantized(emb)
+    Returns (qdf, broadcast of _vectors of the whole matrix)."""
+    qdf = quantized(emb).select("vec_id", "q")
     full = qdf.toPandas()
     if len(full) > MAX_BROADCAST_VECTORS:
         raise ValueError(
             f"{len(full)} vectors exceed the brute-force broadcast bound; "
             "use lsh_bucketed_topk / near_dup_pairs_lsh"
         )
-    ids_all = full["vec_id"].to_numpy()
-    m_all = np.stack(full["q"].to_numpy()).astype(np.int64)
-    norms_all = full["norm_q"].to_numpy().astype(np.int64)
-    return qdf, spark.sparkContext.broadcast((ids_all, m_all, norms_all))
+    return qdf, emb.sparkSession.sparkContext.broadcast(_vectors(full))
 
 
-def _sim_block(dots, norms_a, norms_b):
-    """int64 floor(1e6 * dot / sqrt(na * nb)) for a block of exact int64 dot
-    products (rows: norms_a, columns: norms_b) — the one similarity step of
-    every numpy scorer here.  A zero-norm vector gives 0/0 = NaN; Spark's
-    non-ANSI cast(NaN as bigint) is 0, so NaN maps to 0 instead of numpy's
-    undefined NaN->int64."""
-    import numpy as np
+def _brute_force(emb: DataFrame, emit, schema: str) -> DataFrame:
+    """The exact paths' driver: broadcast the whole quantized matrix and
+    _score each Arrow batch against it — no CartesianProduct node, no
+    O(n^2) shuffle."""
+    qdf, bc = _broadcast_matrix(emb)
 
-    prod = (norms_a[:, None] * norms_b[None, :]).astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        simf = np.floor(1_000_000.0 * dots / np.sqrt(prod))
-    return np.where(np.isfinite(simf), simf, 0.0).astype(np.int64)
+    def run(batches):
+        for _, a in _batches(batches):
+            yield _score(a, bc.value, emit)
+
+    return qdf.mapInPandas(run, schema=schema)
 
 
 def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
     """Exact brute-force top-k neighbors per vector (the baseline path).
 
     Implementation: broadcast the full quantized matrix (brute force
-    inherently needs every vector on every task) and compute each
-    partition's block against it with one int64 numpy matmul — measured
+    inherently needs every vector on every task) and rank each block of a
+    partition against it with int64 numpy matmuls and _topk — measured
     ~30x faster than the equivalent 25M-row zip_with/aggregate codegen plan
     at 5k vectors, with BIT-IDENTICAL results (integer dot products, one
     deterministic double division).  Guarded by MAX_BROADCAST_VECTORS;
     beyond that use lsh_bucketed_topk (the scale path).
     """
-    import numpy as np
-
-    qdf, bc = _broadcast_matrix(emb)
-
-    def block(batches):
-        import pandas as pd
-
-        b_ids, b_m, b_norms = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a_m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            a_norms = pdf["norm_q"].to_numpy().astype(np.int64)
-            a_ids = pdf["vec_id"].to_numpy()
-            sim = _sim_block(a_m @ b_m.T, a_norms, b_norms)  # exact int64 dots
-            out_a, out_b, out_s, out_r = [], [], [], []
-            for i in range(sim.shape[0]):
-                row = sim[i]
-                # exclude self; rank by (sim desc, vec_b asc) like row_number
-                keys = np.lexsort((b_ids, -row))
-                taken = 0
-                for j in keys:
-                    if b_ids[j] == a_ids[i]:
-                        continue
-                    taken += 1
-                    out_a.append(a_ids[i])
-                    out_b.append(b_ids[j])
-                    out_s.append(row[j])
-                    out_r.append(taken)
-                    if taken == k:
-                        break
-            yield pd.DataFrame(
-                {"vec_a": out_a, "vec_b": out_b, "sim_micro": out_s, "rank": out_r}
-            )
-
-    return qdf.mapInPandas(
-        block, schema="vec_a bigint, vec_b bigint, sim_micro bigint, rank bigint"
+    return _brute_force(
+        emb, partial(_topk, k=k),
+        "vec_a bigint, vec_b bigint, sim_micro bigint, rank bigint",
     )
 
 
 def near_dup_pairs(emb: DataFrame, threshold_micro: int = 400_000) -> DataFrame:
     """EXACT embedding-cosine near-duplicate pairs (canonical vec_a < vec_b).
 
-    Blocked brute force, same pattern as cosine_topk: broadcast the
-    quantized matrix and let each task matmul its block against it — no
-    CartesianProduct node, no O(n^2) shuffle; the O(n^2) COMPUTE is inherent
-    to an exact threshold join over dense vectors (measured on the test
-    corpus: qualifying sims sit right at the threshold — sf0.1 spans
-    [400095, ~600000) with the densest non-qualifying pair at 399984 — so no
-    bucketing scheme can be both exact and sub-quadratic here).  For the
-    realistic near-dup regime (high-sim dups, huge n) use
-    ``near_dup_pairs_lsh``, which never collects and whose candidate volume
-    is bucket-bounded."""
+    Blocked brute force, the same driver as cosine_topk: each task matmuls
+    its blocks against the broadcast matrix and keeps the pairs at or above
+    the threshold.  The O(n^2) COMPUTE is inherent to an exact threshold
+    join over dense vectors (measured on the test corpus: qualifying sims
+    sit right at the threshold — sf0.1 spans [400095, ~600000) with the
+    densest non-qualifying pair at 399984 — so no bucketing scheme can be
+    both exact and sub-quadratic here).  For the realistic near-dup regime
+    (high-sim dups, huge n) use ``near_dup_pairs_lsh``, which never collects
+    and whose candidate volume is bucket-bounded."""
     import numpy as np
 
-    qdf, bc = _broadcast_matrix(emb)
-
-    def block(batches):
+    def pairs(sim, a_ids, b_ids):
         import pandas as pd
 
-        b_ids, b_m, b_norms = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a_m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            a_norms = pdf["norm_q"].to_numpy().astype(np.int64)
-            a_ids = pdf["vec_id"].to_numpy()
-            sim = _sim_block(a_m @ b_m.T, a_norms, b_norms)  # exact int64 dots
-            keep = (sim >= threshold_micro) & (a_ids[:, None] < b_ids[None, :])
-            ii, jj = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"vec_a": a_ids[ii], "vec_b": b_ids[jj], "sim_micro": sim[ii, jj]}
-            )
+        ii, jj = np.nonzero((sim >= threshold_micro) & (a_ids[:, None] < b_ids[None, :]))
+        return pd.DataFrame({"vec_a": a_ids[ii], "vec_b": b_ids[jj], "sim_micro": sim[ii, jj]})
 
-    return qdf.mapInPandas(block, schema="vec_a bigint, vec_b bigint, sim_micro bigint")
+    return _brute_force(emb, pairs, "vec_a bigint, vec_b bigint, sim_micro bigint")
 
 
 def near_dup_auto(emb: DataFrame, threshold_micro: int = 400_000,
@@ -196,40 +233,40 @@ def near_dup_auto(emb: DataFrame, threshold_micro: int = 400_000,
     return near_dup_pairs_lsh(emb, threshold_micro)
 
 
+def _sign_buckets(m, signs, planes: int):
+    """(n, n_bands) int64 bucket ids of the int64 vectors m: per band, the
+    sign pattern of its ``planes`` rows of ``signs`` (band-major, as
+    _signs_matrix lays them out), sum over p of 2^p where dot(q, h_p) > 0.
+    One int64 matmul for all bands — exact integer math."""
+    import numpy as np
+
+    bits = (m @ signs.T > 0).reshape(len(m), -1, planes)
+    return (bits * (np.int64(1) << np.arange(planes, dtype=np.int64))).sum(axis=2)
+
+
 def hyperplane_buckets(emb: DataFrame, n_planes: int = 12, seed: int = 0xC05, dim: int = 64) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector (sign pattern of n_planes
     pseudo-random projections) — SimHash-for-cosine.
 
-    bucket = sum over planes p of (1<<p if dot(q, h_p) > 0).
-
-    Projections run as ONE int64 numpy matmul per Arrow batch (the same
-    shape as hyperplane_band_buckets) instead of n_planes interpreted
-    zip_with/aggregate passes per row — exact integer math either way, so
-    the buckets are bit-identical."""
-    import numpy as np
-
+    bucket = sum over planes p of (1<<p if dot(q, h_p) > 0): _sign_buckets
+    with one band (hyperplane_band_buckets runs it with L bands), one int64
+    numpy matmul per Arrow batch."""
     signs = _signs_matrix(1, n_planes, dim, seed, banded=False)
-    weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-    qdf = quantized(emb)
 
     def run(batches):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            bits = (m @ signs.T > 0).astype(np.int64)
+        for pdf, (_, m, _) in _batches(batches):
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     "q": pdf["q"],
                     "norm_q": pdf["norm_q"],
-                    "bucket": (bits * weights[None, :]).sum(axis=1),
+                    "bucket": _sign_buckets(m, signs, n_planes)[:, 0],
                 }
             )
 
-    return qdf.mapInPandas(
+    return quantized(emb).mapInPandas(
         run, schema="vec_id bigint, q array<bigint>, norm_q bigint, bucket bigint"
     )
 
@@ -265,28 +302,20 @@ def hyperplane_band_buckets(emb: DataFrame, n_bands: int = 16, planes_per_band: 
     import numpy as np
 
     signs = _signs_matrix(n_bands, planes_per_band, dim, seed)
-    weights = (np.int64(1) << np.arange(planes_per_band, dtype=np.int64))
-    qdf = quantized(emb)
 
     def run(batches):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            bits = (m @ signs.T > 0).astype(np.int64).reshape(len(pdf), n_bands, planes_per_band)
-            buckets = (bits * weights[None, None, :]).sum(axis=2)
-            ids = pdf["vec_id"].to_numpy()
+        for _, (ids, m, _) in _batches(batches):
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(ids, n_bands),
-                    "band": np.tile(np.arange(n_bands, dtype=np.int64), len(pdf)),
-                    "bucket": buckets.reshape(-1),
+                    "band": np.tile(np.arange(n_bands, dtype=np.int64), len(ids)),
+                    "bucket": _sign_buckets(m, signs, planes_per_band).reshape(-1),
                 }
             )
 
-    return qdf.select("vec_id", "q").mapInPandas(
+    return quantized(emb).select("vec_id", "q").mapInPandas(
         run, schema="vec_id bigint, band int, bucket bigint"
     )
 
@@ -345,27 +374,21 @@ def ivf_assign(emb: DataFrame, n_cells: int = 32, seed: int = 0x1F5, dim: int = 
     import numpy as np
 
     anchors = _signs_matrix(n_cells, 1, dim, seed)  # (n_cells, dim)
-    qdf = quantized(emb)
 
     def run(batches):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            dots = m @ anchors.T  # (n, n_cells)
-            top = np.argsort(-dots, axis=1, kind="stable")[:, :nprobe]
-            n = len(pdf)
+        for _, (ids, m, _) in _batches(batches):
+            top = np.argsort(-(m @ anchors.T), axis=1, kind="stable")[:, :nprobe]
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
+                    "vec_id": np.repeat(ids, nprobe),
                     "cell": top.reshape(-1).astype(np.int64),
-                    "probe_rank": np.tile(np.arange(1, nprobe + 1, dtype=np.int64), n),
+                    "probe_rank": np.tile(np.arange(1, nprobe + 1, dtype=np.int64), len(ids)),
                 }
             )
 
-    return qdf.select("vec_id", "q").mapInPandas(
+    return quantized(emb).select("vec_id", "q").mapInPandas(
         run, schema="vec_id bigint, cell bigint, probe_rank bigint"
     )
 
@@ -383,48 +406,28 @@ def ivf_topk(emb: DataFrame, k: int = 3, n_cells: int = 32, seed: int = 0x1F5,
     nprobe=4): cosine 0.90 -> 0.90, 0.95 -> 0.96, 0.99 -> 0.997 (pinned by
     test_ann_ivf).  On structureless uniform vectors any partition-based
     ANN has low recall by construction — the exact baseline is cosine_topk."""
-    import numpy as np
-
     probe = ivf_assign(emb, n_cells=n_cells, seed=seed, nprobe=nprobe)
-    q = quantized(emb)
     # one frame per (cell, member): probe_rank==1 rows double as the cell's
-    # library entries.  Scoring is CELL-LOCAL (one numpy probe x lib matmul
-    # per cell group) instead of the cell join + interpreted per-pair
-    # zip_with/aggregate fold (~500k 64-element folds at sf0.1, measured
-    # ~4 s); a query's candidates span nprobe cells, so the global top-k
-    # window below is unchanged.  Bit-identical scoring math.
-    side = probe.join(q, "vec_id").select(
-        "cell", "vec_id", "q", "norm_q", (F.col("probe_rank") == 1).alias("is_lib")
+    # library entries.  Each cell group ranks its probes against its library
+    # with _topk (cell-local top-k).  Every library vector is in exactly one
+    # cell, so a query's candidate sets in its nprobe cells are disjoint and
+    # its global top-k is among the cell-local ones: the window below picks
+    # it from at most nprobe * k rows per query.
+    side = probe.join(quantized(emb), "vec_id").select(
+        "cell", "vec_id", "q", (F.col("probe_rank") == 1).alias("is_lib")
     )
 
-    def cell_scores(pdf) -> "pd.DataFrame":
-        import pandas as pd
-
-        lib_mask = pdf["is_lib"].to_numpy()
-        n_lib = int(lib_mask.sum())
-        if n_lib == 0 or len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "sim_micro": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "sim_micro": "int64"}
-            )
-        ids = pdf["vec_id"].to_numpy()
-        m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-        norms = pdf["norm_q"].to_numpy().astype(np.int64)
-        lm, lids, lnorms = m[lib_mask], ids[lib_mask], norms[lib_mask]
-        frames = []
-        # probe-axis blocked: peak memory O(block * n_lib), not
-        # O(n_probe * n_lib) — cells grow with n at fixed n_cells
-        for lo in range(0, len(ids), 256):
-            hi = min(lo + 256, len(ids))
-            sim = _sim_block(m[lo:hi] @ lm.T, norms[lo:hi], lnorms)  # probe x lib
-            keep = ids[lo:hi, None] != lids[None, :]
-            ii, jj = np.nonzero(keep)
-            frames.append(pd.DataFrame(
-                {"vec_a": ids[lo:hi][ii], "vec_b": lids[jj], "sim_micro": sim[ii, jj]}
-            ))
-        return pd.concat(frames, ignore_index=True)
+    def cell_topk(pdf):
+        ids, m, norms = _vectors(pdf)
+        lib = pdf["is_lib"].to_numpy()
+        ranked = _score(
+            (ids, m, norms), (ids[lib], m[lib], norms[lib]),
+            partial(_topk, k=k),
+        )
+        return ranked.drop(columns="rank")
 
     scores = side.groupBy("cell").applyInPandas(
-        cell_scores, schema="vec_a bigint, vec_b bigint, sim_micro bigint"
+        cell_topk, schema="vec_a bigint, vec_b bigint, sim_micro bigint"
     )
     w = Window.partitionBy("vec_a").orderBy(F.col("sim_micro").desc(), F.col("vec_b").asc())
     return (
@@ -441,48 +444,15 @@ def lsh_bucketed_topk(emb: DataFrame, k: int = 3, n_planes: int = 12) -> DataFra
 
     Every vector has exactly ONE bucket in this single-plane-set scheme, so
     its entire candidate set lives in its bucket and the global
-    row_number(sim desc, vec_b asc) <= k is a BUCKET-LOCAL top-k.  That
-    collapses the previous bucket self-join + interpreted per-pair
-    zip_with/aggregate scoring + window (3 exchanges, ~62k interpreted
-    64-element folds at sf0.1) into one groupBy(bucket) + one numpy matmul
-    and the cosine_topk ranking loop per group — bit-identical results
-    (exact int64 dots, same multiply-divide-floor double step, same
-    (sim desc, id asc) tie-break)."""
-    import numpy as np
+    row_number(sim desc, vec_b asc) <= k is a BUCKET-LOCAL top-k: one
+    groupBy(bucket), and per group the blocked numpy scoring (_score) ranked
+    by _topk — bit-identical to the SQL window (exact int64 dots, same
+    multiply-divide-floor double step, same (sim desc, id asc) tie-break)."""
 
-    b = hyperplane_buckets(emb, n_planes=n_planes)
+    def topk(pdf):
+        v = _vectors(pdf)
+        return _score(v, v, partial(_topk, k=k))
 
-    def topk(pdf) -> "pd.DataFrame":
-        import pandas as pd
-
-        n = len(pdf)
-        out_a, out_b, out_s, out_r = [], [], [], []
-        if n >= 2:
-            ids = pdf["vec_id"].to_numpy()
-            m = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            norms = pdf["norm_q"].to_numpy().astype(np.int64)
-            # row-blocked so peak memory is O(block * group), not
-            # O(group^2) — a hot bucket must not OOM one python worker
-            for lo in range(0, n, 256):
-                hi = min(lo + 256, n)
-                sim = _sim_block(m[lo:hi] @ m.T, norms[lo:hi], norms)
-                for bi in range(hi - lo):
-                    i = lo + bi
-                    row = sim[bi]
-                    keys = np.lexsort((ids, -row))  # sim desc, vec_b asc
-                    taken = 0
-                    for j in keys:
-                        if ids[j] == ids[i]:
-                            continue
-                        taken += 1
-                        out_a.append(ids[i])
-                        out_b.append(ids[j])
-                        out_s.append(row[j])
-                        out_r.append(taken)
-                        if taken == k:
-                            break
-        return pd.DataFrame({"vec_a": out_a, "vec_b": out_b, "sim_micro": out_s, "rank": out_r})
-
-    return b.groupBy("bucket").applyInPandas(
+    return hyperplane_buckets(emb, n_planes=n_planes).groupBy("bucket").applyInPandas(
         topk, schema="vec_a bigint, vec_b bigint, sim_micro bigint, rank bigint"
     )

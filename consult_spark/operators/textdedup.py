@@ -171,15 +171,18 @@ def minhash_bands(docs: DataFrame, sets: DataFrame | None = None) -> DataFrame:
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_key").alias("band_key"))
 
 
+def _cap(bands: DataFrame, cap: int) -> DataFrame:
+    """Rank each (band, band_key) bucket's rows by doc_id as ``rn`` and keep
+    rn <= cap — the capacity-capped insert of main_map.cpp:592-623."""
+    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
+    return bands.withColumn("rn", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rn") <= cap
+    )
+
+
 def capped_buckets(docs: DataFrame, cap: int = BUCKET_CAP, sets: DataFrame | None = None) -> DataFrame:
     """B9: per-bucket rank by doc_id, keep <= cap (deterministic)."""
-    bands = minhash_bands(docs, sets=sets)
-    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    return (
-        bands.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= cap)
-        .select("doc_id", "band", "band_key", "rn")
-    )
+    return _cap(minhash_bands(docs, sets=sets), cap).select("doc_id", "band", "band_key", "rn")
 
 
 def bucket_histogram(docs: DataFrame) -> DataFrame:
@@ -229,6 +232,14 @@ def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_micro() -> F.Column:
+    """floor(1e6 * |A & B| / |A | B|) of the shingle-set columns sh_a, sh_b."""
+    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return F.floor(
+        1_000_000.0 * n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
+    ).cast("bigint")
+
+
 def pair_jaccard(docs: DataFrame) -> DataFrame:
     """S9: exact Jaccard re-score of candidates -> jaccard_micro BIGINT.
 
@@ -243,18 +254,10 @@ def pair_jaccard(docs: DataFrame) -> DataFrame:
     cand = candidate_pairs(docs, sets=sets)
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("sh_a"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("sh_b"))
-    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_bands",
-            F.floor(
-                1_000_000.0 * n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
-            ).cast("bigint").alias("jaccard_micro"),
-        )
+        .select("doc_a", "doc_b", "n_bands", _jaccard_micro().alias("jaccard_micro"))
     )
 
 
@@ -279,11 +282,8 @@ def probe_matched(docs: DataFrame, threshold: int = JACCARD_MICRO_THRESHOLD) -> 
     sets = doc_shingle_sets(docs)
     bands = minhash_bands(docs, sets=sets)
     qb = bands.filter(F.col("doc_id") % 5 == 0).withColumnsRenamed({"doc_id": "query_id"})
-    lib_bands = bands.filter(F.col("doc_id") % 5 != 0)
-    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
     libcap = (
-        lib_bands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= BUCKET_CAP)
+        _cap(bands.filter(F.col("doc_id") % 5 != 0), BUCKET_CAP)
         .withColumnsRenamed({"doc_id": "lib_id"})
         .drop("rn")
     )
@@ -291,19 +291,19 @@ def probe_matched(docs: DataFrame, threshold: int = JACCARD_MICRO_THRESHOLD) -> 
     cand = hits.groupBy("query_id", "lib_id").agg(F.count("*").alias("n_bands"))
     a = sets.select(F.col("doc_id").alias("query_id"), F.col("shs").alias("sh_a"))
     b = sets.select(F.col("doc_id").alias("lib_id"), F.col("shs").alias("sh_b"))
-    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         cand.join(a, "query_id")
         .join(b, "lib_id")
-        .withColumn(
-            "jaccard_micro",
-            F.floor(
-                1_000_000.0 * n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
-            ).cast("bigint"),
-        )
+        .withColumn("jaccard_micro", _jaccard_micro())
         .filter(F.col("jaccard_micro") >= threshold)
         .select("query_id", "lib_id", "n_bands", "jaccard_micro")
     )
+
+
+def _pad(c: str) -> F.Column:
+    """Zero-padded string id, so the connected-components min label
+    (lexical on strings) agrees with the numeric min the oracle computes."""
+    return F.lpad(F.col(c).cast("string"), 20, "0")
 
 
 def doc_clusters(docs: DataFrame, confirmed: DataFrame | None = None) -> DataFrame:
@@ -319,14 +319,9 @@ def doc_clusters(docs: DataFrame, confirmed: DataFrame | None = None) -> DataFra
     from ..config import Config
     from .cluster import assign_clusters
 
-    # zero-pad ids so the CC min-label (lexical on strings) agrees with the
-    # numeric min the oracle computes
-    def pad(c):
-        return F.lpad(F.col(c).cast("string"), 20, "0")
-
     conf = confirmed if confirmed is not None else confirmed_pairs(docs)
-    clips_like = docs.select(pad("doc_id").alias("clip_id"))
-    edges = conf.select(pad("doc_a").alias("clip_a"), pad("doc_b").alias("clip_b"))
+    clips_like = docs.select(_pad("doc_id").alias("clip_id"))
+    edges = conf.select(_pad("doc_a").alias("clip_a"), _pad("doc_b").alias("clip_b"))
     assigned = assign_clusters(clips_like, edges, Config())
     return assigned.select(
         F.col("clip_id").cast("bigint").alias("doc_id"),
@@ -347,18 +342,15 @@ def incremental_clusters(docs: DataFrame) -> DataFrame:
     from ..config import Config
     from .cluster import assign_clusters, merge_clusters
 
-    def pad(c):
-        return F.lpad(F.col(c).cast("string"), 20, "0")
-
     cfg = Config()
     # NOT persisted: the returned plan is lazy (the driver collects later),
     # so a persist here would be dropped before materialization; the shared
-    # shingle/candidate subtrees are lazily checkpointed inside pair_jaccard
-    # like in every other caller
+    # row-local shingle/minhash subtree recomputes per reference, as in
+    # pair_jaccard
     conf = confirmed_pairs(docs)
-    edges = conf.select(pad("doc_a").alias("clip_a"), pad("doc_b").alias("clip_b"))
-    old_ids = docs.filter(F.col("doc_id") % 3 != 0).select(pad("doc_id").alias("clip_id"))
-    new_ids = docs.filter(F.col("doc_id") % 3 == 0).select(pad("doc_id").alias("clip_id"))
+    edges = conf.select(_pad("doc_a").alias("clip_a"), _pad("doc_b").alias("clip_b"))
+    old_ids = docs.filter(F.col("doc_id") % 3 != 0).select(_pad("doc_id").alias("clip_id"))
+    new_ids = docs.filter(F.col("doc_id") % 3 == 0).select(_pad("doc_id").alias("clip_id"))
     old_edges = edges.join(
         old_ids.withColumnRenamed("clip_id", "clip_a"), "clip_a", "left_semi"
     ).join(old_ids.withColumnRenamed("clip_id", "clip_b"), "clip_b", "left_semi")

@@ -87,21 +87,33 @@ def test_near_dup_auto_routes_by_size(spark, monkeypatch):
     assert sorted(tuple(r) for r in routed.collect()) == lsh
 
 
-@pytest.mark.parametrize("path", ["cosine_topk", "near_dup_pairs", "ivf_topk", "lsh_bucketed_topk"])
+@pytest.mark.parametrize("path", ["cosine_topk", "near_dup_pairs", "ivf_topk", "lsh_bucketed_topk",
+                                  "near_dup_pairs_lsh"])
 def test_zero_norm_vector_scores_zero(spark, path):
     """A zero vector has norm 0, so every pair touching it divides 0 by 0.
-    All four numpy scorers must emit sim_micro 0 for it (Spark's non-ANSI
-    NaN->bigint cast), not numpy's undefined NaN->int64.  Two zero vectors
-    share every bucket and cell, so each path scores at least one such pair."""
+    Every scorer must emit sim_micro 0 for it (Spark's non-ANSI NaN->bigint
+    cast): the numpy scorers instead of numpy's undefined NaN->int64, the
+    JVM scorer of near_dup_pairs_lsh instead of ANSI mode's DIVIDE_BY_ZERO.
+    Two zero vectors share every bucket and cell, so each path scores at
+    least one such pair."""
     rng = np.random.default_rng(3)
     vecs = [[0.0] * 64, [0.0] * 64] + rng.normal(size=(10, 64)).tolist()
     emb = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
     )
-    if path == "near_dup_pairs":
-        df = ann.near_dup_pairs(emb, threshold_micro=0)
+    if path in ("near_dup_pairs", "near_dup_pairs_lsh"):
+        df = getattr(ann, path)(emb, threshold_micro=0)
     else:
         df = getattr(ann, path)(emb)
     zero = [r for r in df.collect() if r["vec_a"] in (0, 1) or r["vec_b"] in (0, 1)]
     assert zero, "no scored pair touches a zero vector"
     assert {r["sim_micro"] for r in zero} == {0}
+
+
+@pytest.mark.parametrize("path", ["cosine_topk", "near_dup_pairs", "near_dup_auto", "ivf_topk",
+                                  "lsh_bucketed_topk", "near_dup_pairs_lsh"])
+def test_empty_table_gives_no_rows(spark, path):
+    """An empty embeddings table yields no rows on every path; the
+    brute-force paths' driver collect must not fail on the empty matrix."""
+    emb = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+    assert getattr(ann, path)(emb).collect() == []
