@@ -46,6 +46,9 @@ BENCH_QUERIES = (
     "confirmed_pairs", "cosine_topk", "ann_lsh_topk", "simhash16",
     "ann_near_dup_lsh", "probe_matched", "simhash64_band_pairs",
     "ann_ivf_topk", "embedding_near_dup",
+    # every verify caller: confirm_pairs (pcm + txt) and channel_scores
+    # on img and vid
+    "audio_confirmed_pairs", "media_confirmed_pairs", "video_confirmed_pairs",
 )
 
 

@@ -78,6 +78,31 @@ def _pairs_touching(cands: DataFrame, ids: DataFrame) -> DataFrame:
     )
 
 
+def _recap_touched(old_buckets: DataFrame, delta_features: DataFrame,
+                   cfg: Config) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Re-cap ONLY the bucket keys the delta touches -> (touched keys,
+    re-capped touched rows, rewritten bucket table).  The delta side is
+    capped first (composition-stable, module docstring), the touched old
+    rows are pulled with a broadcast semi-join (scan, no shuffle of the
+    history table), and the union is re-capped — a window over
+    O(delta * cap) rows.  The rewrite passes untouched rows through
+    (broadcast anti = scan) and takes the re-capped membership for touched
+    keys: copy-on-write of the history in parquet mode, a row-level MERGE
+    on Iceberg.  ``touched`` is returned persisted; the caller unpersists
+    it."""
+    delta_capped = bands_op.capped_buckets(bands_op.explode_bands(delta_features), cfg)
+    touched = delta_capped.select(*BUCKET_COLS).distinct().persist()
+    merged_touched = bands_op.capped_buckets(
+        old_buckets.join(F.broadcast(touched), BUCKET_COLS, "left_semi")
+        .unionByName(delta_capped),
+        cfg,
+    )
+    new_buckets = old_buckets.join(
+        F.broadcast(touched), BUCKET_COLS, "left_anti"
+    ).unionByName(merged_touched)
+    return touched, merged_touched, new_buckets
+
+
 def grow_index(
     spark: SparkSession,
     delta_clips: DataFrame,
@@ -134,17 +159,7 @@ def grow_index(
         run.write("transcripts", lambda: fresh_clips.select("clip_id", "transcript"),
                   mode="append")
 
-    delta_capped = bands_op.capped_buckets(bands_op.explode_bands(delta_features), cfg)
-    touched = delta_capped.select(*BUCKET_COLS).distinct().persist()
-    old_buckets = wh.read("lsh_buckets")
-    merged_touched = bands_op.capped_buckets(
-        old_buckets.join(F.broadcast(touched), BUCKET_COLS, "left_semi")
-        .unionByName(delta_capped),
-        cfg,
-    )
-    new_buckets = old_buckets.join(
-        F.broadcast(touched), BUCKET_COLS, "left_anti"
-    ).unionByName(merged_touched)
+    touched, _, new_buckets = _recap_touched(wh.read("lsh_buckets"), delta_features, cfg)
     run.write("lsh_buckets", lambda: new_buckets, replace=True)
     run.flush()
 
@@ -196,19 +211,12 @@ def fold_delta(
         delta_features.filter(~F.col("decode_ok")).count(),
     )
 
-    # -- buckets: re-cap ONLY the keys the delta touches.  The delta side
-    # is capped first (composition-stable, module docstring), the touched
-    # old rows are pulled with a broadcast semi-join (scan, no shuffle of
-    # the history table), and the union is re-capped — a window over
-    # O(delta * cap) rows.
-    delta_capped = bands_op.capped_buckets(bands_op.explode_bands(delta_features), cfg)
-    touched = delta_capped.select(*BUCKET_COLS).distinct().persist()
-    old_buckets = wh.read("buckets")
-    merged_touched = bands_op.capped_buckets(
-        old_buckets.join(F.broadcast(touched), BUCKET_COLS, "left_semi")
-        .unionByName(delta_capped),
-        cfg,
-    ).persist()
+    # -- buckets: re-cap ONLY the keys the delta touches (_recap_touched).
+    # The re-capped rows are persisted: the candidates read them as well
+    # as the rewrite.
+    touched, merged_touched, new_buckets = _recap_touched(
+        wh.read("buckets"), delta_features, cfg)
+    merged_touched.persist()
 
     # -- candidates + verify, restricted to pairs that touch the delta.
     # Band counts are exact vs a full rebuild: every bucket containing a
@@ -218,7 +226,7 @@ def fold_delta(
     # verify must NOT drag the history's fat shingle table through a
     # shuffle for a delta-sized pair set: restrict features/transcripts to
     # the pair members first (broadcast semi = scan-only on the history
-    # table, output O(delta * cap) rows).  This also flips channel_scores'
+    # table, output O(delta * cap) rows).  This also flips verify's
     # size-routed gate back to the broadcast fast path — measured at 240k,
     # the unrestricted fold shuffled the full 2-channel shingle payload
     # twice per channel and cost as much as the rebuild it replaces.
@@ -265,15 +273,10 @@ def fold_delta(
     n_new_pairs = run.write("confirmed_pairs", lambda: confirmed_delta, mode="append")
     n_delta_pairs = confirmed_delta.count()
 
-    # -- buckets rewrite: untouched rows pass through (broadcast anti =
-    # scan), touched keys take the re-capped membership.  Copy-on-write of
-    # the history in parquet mode; a row-level MERGE on Iceberg.  The
-    # directory swap happens HERE, before the cluster/unique updates — safe
-    # only because every later consumer reads the checkpointed
-    # confirmed_delta, never back through the bucket lineage.
-    new_buckets = old_buckets.join(
-        F.broadcast(touched), BUCKET_COLS, "left_anti"
-    ).unionByName(merged_touched)
+    # -- buckets rewrite (_recap_touched).  The directory swap happens
+    # HERE, before the cluster/unique updates — safe only because every
+    # later consumer reads the checkpointed confirmed_delta, never back
+    # through the bucket lineage.
     run.write("buckets", lambda: new_buckets, replace=True)
 
     # -- clusters: incremental CC (assignment scanned, never shuffled)

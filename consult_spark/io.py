@@ -294,3 +294,22 @@ class Warehouse:
                 f"session configured with {self.cfg.params_hash}; refusing to mix"
             )
         return cfg
+
+
+def open_warehouse(spark: SparkSession, root: str, cfg: Config | None = None) -> Warehouse:
+    """Open an existing warehouse under the Config it was built with (its
+    ``config`` table), the way CONSULT reads _meta back and runs with it
+    (main_search.cpp:164-381): an index built under any Config is usable
+    without the caller reconstructing it, and ``exists`` compares
+    manifests with the stored params_hash.  An explicitly passed ``cfg``
+    that conflicts with the stored one is refused rather than silently
+    mixing shingle/signature parameters."""
+    wh = Warehouse(spark, root, cfg or Config())
+    stored = Config.from_json(wh.read("config").head()["config_json"])
+    if cfg is not None and cfg.params_hash != stored.params_hash:
+        raise ValueError(
+            f"index built with params_hash={stored.params_hash}, caller "
+            f"explicitly passed {cfg.params_hash}; refusing to mix"
+        )
+    wh.cfg = stored
+    return wh

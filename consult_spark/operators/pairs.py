@@ -143,7 +143,7 @@ def _rollup(hits: DataFrame, cfg: Config) -> DataFrame:
     # pivot the fingerprints of the PRIMARY channel only: that is the
     # channel whose buckets generate the candidates, so its sims are
     # non-null on ~every pair and verify's prefilter runs join-free; a
-    # secondary channel would be mostly null (verify.channel_scores uses
+    # secondary channel would be mostly null (verify's prefilter uses
     # its feature-table join there anyway), so carrying its columns
     # through the pair shuffle + cache would be dead weight (~340 MB at
     # 480k clips)

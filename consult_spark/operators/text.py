@@ -216,6 +216,39 @@ def simhash16(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", fp.cast("bigint").alias("simhash"))
 
 
+def _band_pairs(s: DataFrame, width: int, max_hamming: int) -> DataFrame:
+    """(doc_id, simhash) -> (doc_a, doc_b, sim_a, sim_b, hamming): the
+    SimHash band self-join.  The fingerprint's low 4 * ``width`` bits split
+    into 4 bands of ``width`` bits; documents sharing ANY (band, value) are
+    candidates, verified with the exact popcount <= ``max_hamming``.  The
+    unsigned shift reads a 64-bit fingerprint's bit pattern; on the
+    non-negative 16-bit fingerprints it equals the signed one."""
+    mask = (1 << width) - 1
+    bands = s.select(
+        "doc_id",
+        "simhash",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftrightunsigned("simhash", width * b).bitwiseAND(F.lit(mask)).alias("val"),
+                )
+                for b in range(4)
+            ])
+        ).alias("bv"),
+    ).select("doc_id", "simhash", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
+    a = bands.select("band", "val", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
+    b = bands.select("band", "val", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
+    return (
+        a.join(b, ["band", "val"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", "sim_a", "sim_b")
+        .distinct()
+        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("bigint"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 MAX_SIMHASH16_DOCS = 20_000  # 16-bit fingerprint space = 65,536 values: at
                              # n docs each band (4 bits) collides ~n/16 per
                              # value, so candidates grow ~n^2/64 — fine as a
@@ -246,30 +279,7 @@ def simhash_band_pairs(docs: DataFrame, max_hamming: int = 3,
             f"{n} docs (> {max_docs}) its band candidates are ~n^2/64 — "
             "use simhash64_band_pairs (production width) instead"
         )
-    s = simhash16(docs)
-    bands = s.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("simhash", 4 * b).bitwiseAND(F.lit(15)).alias("val"),
-                )
-                for b in range(4)
-            ])
-        ).alias("bv"),
-    ).select("doc_id", "simhash", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    a = bands.select("band", "val", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
-    b = bands.select("band", "val", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _band_pairs(simhash16(docs), 4, max_hamming)
 
 
 def simhash64(docs: DataFrame, k: int = 5) -> DataFrame:
@@ -316,30 +326,7 @@ def simhash64_band_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     self-join volume stays bucket-bounded at corpus scale.  Gated by a
     golden table from the independent pure-python oracle
     (scripts/gen_simhash64_oracle.py)."""
-    s = simhash64(docs)
-    bands = s.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned("simhash", 16 * b).bitwiseAND(F.lit(65535)).alias("val"),
-                )
-                for b in range(4)
-            ])
-        ).alias("bv"),
-    ).select("doc_id", "simhash", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    a = bands.select("band", "val", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
-    b = bands.select("band", "val", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _band_pairs(simhash64(docs), 16, max_hamming)
 
 
 def simhash_hamming_pairs(docs: DataFrame, candidates: DataFrame, max_hamming: int = 6) -> DataFrame:

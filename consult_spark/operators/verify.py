@@ -4,23 +4,28 @@ suffix-array substring check -> threshold classification.
 CONSULT verifies every LSH candidate with an exact Hamming check
 (hd(b, candidate) <= p, main_search.cpp:867, 1238-1259) before it counts
 toward the read's match threshold (matched >= c, main_search.cpp:883-894).
-Our verification ladder, cheapest first:
+Every channel (pcm, txt, img, vid) goes through ONE scorer,
+_channel_scores, whose ladder runs cheapest first:
 
 1. SimHash Hamming prefilter — JVM-side ``bit_count(simhash_a ^ simhash_b)``
    on 8-byte fingerprints (the direct hd() analog; Spark >=3.3 bit_count,
-   whole-stage codegen).  Only survivors pay for the fat shingle join.
+   whole-stage codegen), plus the size-ratio containment bound.  Only
+   survivors pay for the fat shingle join.
 2. Exact Jaccard re-score on the full shingle sets (Arrow-batched numpy).
-3. Suffix-array longest-common-substring containment on transcripts.
+3. Suffix-array longest-common-substring containment on transcripts, in
+   the same batch pass, for a side that carries them (the txt channel of
+   confirm_pairs) and only on rows whose Jaccard already qualifies.
 
-Decision: pcm channel drives (audio near-dup); transcript similarity +
-containment is an independent confirmation path.  All scores are kept in the
-output so thresholds can be re-applied without recomputation.
+Decision (confirm_pairs): pcm channel drives (audio near-dup); transcript
+similarity + containment is an independent confirmation path.  All scores
+are kept in the output so thresholds can be re-applied without
+recomputation.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -38,6 +43,12 @@ CONFIRMED_SCHEMA = (
     "lcs int, substr boolean, is_dup boolean"
 )
 
+# _channel_scores' rows, for every channel
+SCORES_SCHEMA = (
+    "clip_a string, clip_b string, jaccard double, hamming int, min_n int, "
+    "lcs bigint, substr boolean, has_lcs boolean"
+)
+
 # size-routed broadcast bound for the fat (clip_id, shingles) projection:
 # below it, the whole channel's shingle table broadcasts — the distributed
 # stand-in for CONSULT's RAM-resident index (main_search.cpp:523-658), and
@@ -51,18 +62,21 @@ MAX_BROADCAST_FAT_ROWS = 100_000
 @dataclass(frozen=True)
 class ChannelSide:
     """One channel of one side of the pair joins: the narrow
-    (clip_id, simhash, n_shingles) projection the prefilter joins, and the
-    fat (clip_id, shingles) projection the Jaccard kernel joins —
-    broadcast-hinted when its row count is bounded."""
+    (clip_id, simhash, n_shingles) projection the prefilter joins, the fat
+    (clip_id, shingles) projection the Jaccard kernel joins —
+    broadcast-hinted when its row count is bounded — and, on the txt
+    channel of a verify_side, the (clip_id, transcript) rows the
+    containment check reads."""
 
     narrow: DataFrame
     fat: DataFrame
+    transcripts: DataFrame | None = None
 
 
 @dataclass(frozen=True)
 class VerifySide:
-    """Everything verify joins to ONE member of a pair: each scored
-    channel's projections plus the (clip_id, transcript) rows.
+    """Everything verify joins to ONE member of a pair: the pcm and txt
+    channels' sides.
 
     confirm_pairs scores ``clip_a`` against side A and ``clip_b`` against
     side B.  A self-join (every member from one table) passes one side for
@@ -74,7 +88,6 @@ class VerifySide:
 
     pcm: ChannelSide
     txt: ChannelSide
-    transcripts: DataFrame
 
 
 def channel_side(features: DataFrame, kind: str, n_rows: int | None = None) -> ChannelSide:
@@ -87,7 +100,8 @@ def channel_side(features: DataFrame, kind: str, n_rows: int | None = None) -> C
 
 
 def verify_side(features: DataFrame, clips: DataFrame, n_rows: int | None = None) -> VerifySide:
-    """features (+ the clips' transcripts) -> the side confirm_pairs joins.
+    """features (+ the clips' transcripts, on the txt channel) -> the side
+    confirm_pairs joins.
 
     ``n_rows`` is an upper bound on the rows of every projection (a
     features table has at most one row per clip and channel, a transcripts
@@ -95,8 +109,10 @@ def verify_side(features: DataFrame, clips: DataFrame, n_rows: int | None = None
     fat projection and the transcripts are sized by a bounded count."""
     return VerifySide(
         pcm=channel_side(features, "pcm", n_rows),
-        txt=channel_side(features, "txt", n_rows),
-        transcripts=_broadcast_if_bounded(clips.select("clip_id", "transcript"), n_rows),
+        txt=replace(
+            channel_side(features, "txt", n_rows),
+            transcripts=_broadcast_if_bounded(clips.select("clip_id", "transcript"), n_rows),
+        ),
     )
 
 
@@ -114,8 +130,8 @@ def _prefiltered_survivors(pairs: DataFrame, side_a: ChannelSide, side_b: Channe
          already below the pair's applicable threshold the exact jaccard
          cannot clear it — size-mismatched pairs die for 16 bytes of IO.
 
-    One implementation serves channel_scores AND txt_scores_with_lcs so the
-    fused path cannot drift from the per-channel one."""
+    Every channel's scores come through _channel_scores, so every channel
+    is pruned by this one ladder."""
     if kind == "pcm":
         thr = F.when(
             F.least("n_a", "n_b") < cfg.low_info_floor, F.lit(cfg.low_info_jaccard)
@@ -232,23 +248,50 @@ def _batch_jaccard(pdf: pd.DataFrame):
 
 
 def channel_scores(pairs: DataFrame, features: DataFrame, kind: str, cfg: Config) -> DataFrame:
-    """pairs x features -> (clip_a, clip_b, jaccard, hamming, min_n), both
-    members from one feature table (the self-join)."""
+    """pairs x features -> _channel_scores rows, both members from one
+    feature table (the self-join).  The side carries no transcripts, so
+    every row has has_lcs = false and lcs = 0."""
     side = channel_side(features, kind)
     return _channel_scores(pairs, side, side, kind, cfg)
 
 
 def _channel_scores(pairs: DataFrame, side_a: ChannelSide, side_b: ChannelSide,
                     kind: str, cfg: Config) -> DataFrame:
-    """pairs -> (clip_a, clip_b, jaccard, hamming, min_n) via the shared
-    prefilter ladder (_prefiltered_survivors) + the size-routed fat
-    shingle join + the vectorized Jaccard kernel (_batch_jaccard)."""
+    """The one verify scorer -> (clip_a, clip_b, jaccard, hamming, min_n,
+    lcs, substr, has_lcs): the shared prefilter ladder
+    (_prefiltered_survivors), the size-routed fat shingle joins, and one
+    Python pass per batch.
+
+    That pass is the vectorized Jaccard kernel (_batch_jaccard) plus, when
+    both sides carry transcripts, the containment ladder on the rows whose
+    jaccard clears cfg.txt_jaccard_threshold — only those pay for the
+    suffix array, and has_lcs marks them.  The gate runs inside the batch
+    so the txt channel is one subtree per action: a separate LCS scorer
+    gated on a filtered copy of the scores makes Catalyst evaluate the
+    channel twice (no cross-join subtree reuse; a localCheckpoint barrier
+    A/B-measured slower than the recompute).  At sf0.1/32c confirm_pairs
+    measured 2.8–3.6 s with the one pass, 4.5–6.4 s with the split form.
+
+    Transcripts attach with LEFT joins: a clip with txt features but no
+    transcripts row (e.g. an index whose transcripts table is absent)
+    keeps its real jaccard/hamming and scores lcs = 0, substr = false."""
     survivors = _prefiltered_survivors(pairs, side_a, side_b, kind, cfg)
     joined = (
         survivors
         .join(side_a.fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
         .join(side_b.fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
     )
+    with_lcs = side_a.transcripts is not None and side_b.transcripts is not None
+    if with_lcs:
+        joined = (
+            joined
+            .join(side_a.transcripts.withColumnsRenamed(
+                {"clip_id": "clip_a", "transcript": "tr_a"}), "clip_a", "left")
+            .join(side_b.transcripts.withColumnsRenamed(
+                {"clip_id": "clip_b", "transcript": "tr_b"}), "clip_b", "left")
+        )
+    jthr = cfg.txt_jaccard_threshold
+    min_frac = cfg.substr_min_frac
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -256,88 +299,25 @@ def _channel_scores(pairs: DataFrame, side_a: ChannelSide, side_b: ChannelSide,
             if not n:
                 continue
             jac, lens_a, lens_b = _batch_jaccard(pdf)
-            yield pd.DataFrame(
-                {
-                    "clip_a": pdf["clip_a"],
-                    "clip_b": pdf["clip_b"],
-                    "jaccard": jac,
-                    "hamming": pdf["hamming"].astype("int32"),
-                    "min_n": np.minimum(lens_a, lens_b).astype(np.int32),
-                }
-            )
-
-    return joined.mapInPandas(
-        score,
-        schema="clip_a string, clip_b string, jaccard double, hamming int, min_n int",
-    )
-
-
-def txt_scores_with_lcs(pairs: DataFrame, side_a: VerifySide, side_b: VerifySide,
-                        cfg: Config) -> DataFrame:
-    """Fused txt-channel verification: exact Jaccard AND the suffix-array
-    LCS containment in ONE subtree and one python pass ->
-    (clip_a, clip_b, jaccard, hamming, lcs, substr, has_lcs).
-
-    confirm_pairs previously evaluated the whole txt channel_scores subtree
-    TWICE inside one action — once joined into the output, once filtered to
-    gate a separate LCS scorer (Catalyst has no cross-join subtree reuse,
-    and a localCheckpoint barrier A/B-measured slower than the recompute).
-    Fusing moves the jaccard >= threshold LCS gate INSIDE the batch scorer:
-    identical semantics (only txt-qualified pairs pay the O(n) suffix
-    array; the rest emit lcs=0/substr=false exactly as the old left-join
-    coalesce produced), one txt prefilter+join tree instead of two, one
-    final join instead of two.  Measured: confirm_pairs 4.5–6.4 s ->
-    2.8–3.6 s at sf0.1/32c, output byte-identical.
-
-    Uses the SAME _prefiltered_survivors ladder as channel_scores (the
-    primary-channel join-free fast path included — a txt-primary config,
-    the text flagship, carries both fingerprints on the candidate rows).
-    Transcripts attach with LEFT joins: a clip with txt features but no
-    transcripts row (e.g. an index whose transcripts table is absent or
-    params-mismatched) keeps its real jaccard/hamming and falls back to
-    lcs=0/substr=false — exactly what the old split flow produced for
-    missing-transcript pairs."""
-    survivors = _prefiltered_survivors(pairs, side_a.txt, side_b.txt, "txt", cfg)
-    joined = (
-        survivors
-        .join(side_a.txt.fat.withColumnsRenamed({"clip_id": "clip_a", "shingles": "sh_a"}), "clip_a")
-        .join(side_b.txt.fat.withColumnsRenamed({"clip_id": "clip_b", "shingles": "sh_b"}), "clip_b")
-        .join(side_a.transcripts.withColumnsRenamed(
-            {"clip_id": "clip_a", "transcript": "tr_a"}), "clip_a", "left")
-        .join(side_b.transcripts.withColumnsRenamed(
-            {"clip_id": "clip_b", "transcript": "tr_b"}), "clip_b", "left")
-    )
-    jthr = cfg.txt_jaccard_threshold
-    min_frac = cfg.substr_min_frac
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the shared jaccard kernel, plus the LCS ladder for each pair that
-        # qualifies on jaccard — one pass, one boundary crossing
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            jac, _lens_a, _lens_b = _batch_jaccard(pdf)
             lcs = np.zeros(n, dtype=np.int64)
             ok = np.zeros(n, dtype=bool)
             has = np.zeros(n, dtype=bool)
-            for i in np.flatnonzero(jac >= jthr):
+            gated = np.flatnonzero(jac >= jthr) if with_lcs else ()
+            for i in gated:
                 # left-joined transcripts arrive as None/NaN when absent
                 a, b = pdf["tr_a"].iat[i], pdf["tr_b"].iat[i]
                 a = a if isinstance(a, str) else ""
                 b = b if isinstance(b, str) else ""
                 has[i] = True
                 m = min(len(a), len(b))
-                if m == 0:
-                    ok[i], lcs[i] = False, 0
-                elif a in b or b in a:
+                if m and (a in b or b in a):
                     # full containment: LCS == the shorter text, and the
                     # min_frac test is trivially met — C-level find, skips
                     # the O(n log^2 n) suffix array for the dominant case
                     # (near-dup transcripts are mostly equal or contained;
                     # measured ~90% of LCS-gated pairs at sf0.1)
                     ok[i], lcs[i] = True, m
-                else:
+                elif m:
                     ok[i], lcs[i] = substring_contained(a, b, min_frac)
             yield pd.DataFrame(
                 {
@@ -345,19 +325,14 @@ def txt_scores_with_lcs(pairs: DataFrame, side_a: VerifySide, side_b: VerifySide
                     "clip_b": pdf["clip_b"],
                     "jaccard": jac,
                     "hamming": pdf["hamming"].astype("int32"),
+                    "min_n": np.minimum(lens_a, lens_b).astype(np.int32),
                     "lcs": lcs,
                     "substr": ok,
                     "has_lcs": has,
                 }
             )
 
-    return joined.mapInPandas(
-        score,
-        schema=(
-            "clip_a string, clip_b string, jaccard double, hamming int, "
-            "lcs bigint, substr boolean, has_lcs boolean"
-        ),
-    )
+    return joined.mapInPandas(score, schema=SCORES_SCHEMA)
 
 
 def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, cfg: Config,
@@ -368,21 +343,26 @@ def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, 
     ``clip_a`` is scored against the side built from ``features`` and
     ``clips`` (``n_rows`` bounds its rows when the caller knows it, see
     verify_side); ``clip_b`` against ``side_b``, or against that same side
-    when None — the self-join."""
+    when None — the self-join.  One _channel_scores call per channel; the
+    txt call also runs the containment check, since its sides carry the
+    transcripts."""
     side_a = verify_side(features, clips, n_rows)
     side_b = side_b or side_a
-    pcm = _channel_scores(candidates, side_a.pcm, side_b.pcm, "pcm", cfg).withColumnsRenamed(
-        {"jaccard": "pcm_jaccard", "hamming": "pcm_hamming", "min_n": "pcm_min_n"}
+    pcm = _channel_scores(candidates, side_a.pcm, side_b.pcm, "pcm", cfg).select(
+        "clip_a", "clip_b",
+        F.col("jaccard").alias("pcm_jaccard"),
+        F.col("hamming").alias("pcm_hamming"),
+        F.col("min_n").alias("pcm_min_n"),
     )
-    # txt jaccard + the (gated) suffix-array containment arrive fused from
-    # one subtree — see txt_scores_with_lcs for why (the split form
-    # evaluated the txt channel twice per action)
-    txt = txt_scores_with_lcs(candidates, side_a, side_b, cfg).withColumnsRenamed(
-        {"jaccard": "txt_jaccard", "hamming": "txt_hamming"}
+    txt = _channel_scores(candidates, side_a.txt, side_b.txt, "txt", cfg).select(
+        "clip_a", "clip_b",
+        F.col("jaccard").alias("txt_jaccard"),
+        F.col("hamming").alias("txt_hamming"),
+        "lcs", "substr",
     )
     pcm_jaccard = F.coalesce("pcm_jaccard", F.lit(0.0))
     txt_jaccard = F.coalesce("txt_jaccard", F.lit(0.0))
-    substr = F.coalesce(F.when(F.col("has_lcs"), F.col("substr")), F.lit(False))
+    substr = F.coalesce("substr", F.lit(False))
     # low-complexity masking: flat clips (tiny shingle sets) must clear the
     # stricter threshold — see Config.low_info_floor
     pcm_threshold = F.when(
@@ -404,7 +384,7 @@ def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, 
             F.coalesce("txt_hamming", F.lit(64)).cast("int").alias("txt_hamming"),
             F.col("n_bands_pcm").cast("int").alias("n_bands_pcm"),
             F.col("n_bands_txt").cast("int").alias("n_bands_txt"),
-            F.coalesce(F.when(F.col("has_lcs"), F.col("lcs")), F.lit(0)).cast("int").alias("lcs"),
+            F.coalesce("lcs", F.lit(0)).cast("int").alias("lcs"),
             substr.alias("substr"),
             is_dup.alias("is_dup"),
         )

@@ -34,7 +34,8 @@ TRANSCRIPTS_SCHEMA = "clip_id string, transcript string"
 @dataclass(frozen=True)
 class ProbeLibrary:
     """The library side of every probe: its capped bucket table and the
-    side verify joins each pair's library member (clip_b) to."""
+    side verify joins each pair's library member (clip_b) to (per channel,
+    its projections; on txt, also the library's transcripts)."""
 
     buckets: DataFrame
     side: verify_op.VerifySide
@@ -46,8 +47,8 @@ def prepare_library(spark: SparkSession, lib_buckets: DataFrame, lib_features: D
     sizes every projection (it has at least as many rows as any one
     channel, and as the one-row-per-clip transcripts); a caller that keeps
     the library across many probes (the streaming probe) should pass
-    cached frames.  A pcm-only index has no transcripts table: its side
-    carries an empty one and the LCS channel is skipped."""
+    cached frames.  A pcm-only index has no transcripts table: its txt
+    side carries an empty one, so every pair scores lcs = 0."""
     n_rows = lib_features.limit(verify_op.MAX_BROADCAST_FAT_ROWS + 1).count()
     tr = (lib_transcripts if lib_transcripts is not None
           else spark.createDataFrame([], TRANSCRIPTS_SCHEMA))
@@ -84,9 +85,8 @@ def probe_clips(
     if cache_registry is not None:
         cands = cands.persist()
         cache_registry.extend([q_features, cands])
-    # transcripts for the suffix-array check: pcm-only queries (or a
-    # pcm-only index) skip the LCS channel instead of failing on a missing
-    # column
+    # transcripts for the suffix-array check: pcm-only queries score
+    # lcs = 0 instead of failing on a missing column
     q_tr = (
         queries.select("clip_id", "transcript")
         if "transcript" in queries.columns

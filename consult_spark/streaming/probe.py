@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 
 from ..config import Config
 from ..datagen import CLIPS_SCHEMA
-from ..io import Warehouse
+from ..io import open_warehouse
 from ..operators.verify import CONFIRMED_SCHEMA
 from ..probing import prepare_library, probe_clips
 from .epochs import epoch_write as _epoch_write
@@ -165,21 +165,16 @@ def stream_probe(
     processing_interval: str = "5 seconds",
 ):
     """Start the continuous probe; returns the StreamingQuery (callers
-    stop() it or awaitTermination()).  Adopts the index's persisted config
-    exactly like jobs/search.py — an explicitly passed conflicting cfg is
-    refused rather than silently mixing shingle/signature parameters.
+    stop() it or awaitTermination()).  Opens the index under its persisted
+    config (io.open_warehouse, as jobs/search.py does) — an explicitly
+    passed conflicting cfg is refused rather than silently mixing
+    shingle/signature parameters.
 
     ``once=True`` (default) drains everything currently available and
     stops (Trigger.AvailableNow); ``once=False`` keeps polling the source
     every ``processing_interval`` until stopped externally."""
-    wh = Warehouse(spark, warehouse_dir, cfg or Config())
-    stored = Config.from_json(wh.read("config").head()["config_json"])
-    if cfg is not None and cfg.params_hash != stored.params_hash:
-        raise ValueError(
-            f"index built with params_hash={stored.params_hash}, caller "
-            f"explicitly passed {cfg.params_hash}; refusing to mix"
-        )
-    cfg = stored
+    wh = open_warehouse(spark, warehouse_dir, cfg)
+    cfg = wh.cfg
 
     lib_buckets = wh.read("lsh_buckets").persist()
     lib_features = wh.read("features").persist()

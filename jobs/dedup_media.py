@@ -23,6 +23,7 @@ media_confirmed -> media_clusters -> media_unique.
 from __future__ import annotations
 
 import argparse
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,32 +38,31 @@ from consult_spark.operators import pairs as pairs_op
 from consult_spark.operators import verify as verify_op
 
 
-def media_confirmed_pairs(candidates: DataFrame, features: DataFrame, cfg: Config) -> DataFrame:
-    """Exact verification for the media channels: per present kind, the
-    standard score ladder (simhash prefilter -> containment bound -> exact
-    Jaccard, verify.channel_scores); a pair is a dup if ANY channel clears
-    the threshold.  Media uses the set-similarity threshold
+def media_confirmed_pairs(candidates: DataFrame, features: DataFrame, kinds: list[str],
+                          cfg: Config) -> DataFrame:
+    """Exact verification for the media channels ``kinds`` (the kinds the
+    job featurized, in input order: img before vid): per kind, the standard
+    score ladder (simhash prefilter -> containment bound -> exact Jaccard,
+    verify.channel_scores); a pair is a dup if ANY channel clears the
+    threshold.  Media uses the set-similarity threshold
     (cfg.txt_jaccard_threshold) — block/frame shingles behave like text
     shingle sets, not like the low-info-masked pcm channel."""
-    kinds = [r["kind"] for r in features.select("kind").distinct().collect()]
-    thr = cfg.txt_jaccard_threshold
-    scored = None
-    for kind in kinds:
-        s = verify_op.channel_scores(candidates, features, kind, cfg).select(
-            "clip_a", "clip_b",
-            F.col("jaccard").alias(f"{kind}_jaccard"),
-            F.col("hamming").alias(f"{kind}_hamming"),
-        )
-        scored = s if scored is None else scored.join(s, ["clip_a", "clip_b"], "outer")
-    if scored is None:
-        return candidates.limit(0).select(
-            "clip_a", "clip_b", F.lit(0.0).alias("best_jaccard"), F.lit(False).alias("is_dup")
-        )
+    scored = reduce(
+        lambda left, right: left.join(right, ["clip_a", "clip_b"], "outer"),
+        [
+            verify_op.channel_scores(candidates, features, kind, cfg).select(
+                "clip_a", "clip_b",
+                F.col("jaccard").alias(f"{kind}_jaccard"),
+                F.col("hamming").alias(f"{kind}_hamming"),
+            )
+            for kind in kinds
+        ],
+    )
     jac_cols = [F.coalesce(F.col(f"{k}_jaccard"), F.lit(0.0)) for k in kinds]
     out = (
         candidates.join(scored, ["clip_a", "clip_b"], "left")
         .withColumn("best_jaccard", F.greatest(*jac_cols) if len(jac_cols) > 1 else jac_cols[0])
-        .withColumn("is_dup", F.col("best_jaccard") >= F.lit(thr))
+        .withColumn("is_dup", F.col("best_jaccard") >= F.lit(cfg.txt_jaccard_threshold))
     )
     return out.filter(F.col("is_dup"))
 
@@ -82,6 +82,9 @@ def run_media_pipeline(
     wh = Warehouse(spark, warehouse_dir, cfg, run_id=run_id)
     run = StageRunner(wh, resume)
     wh.write_config()
+
+    # the channels media_confirmed_pairs scores: the ones the inputs feed
+    kinds = [kind for kind, df in (("img", images), ("vid", videos)) if df is not None]
 
     def build_features() -> DataFrame:
         parts = []
@@ -105,7 +108,7 @@ def run_media_pipeline(
     )
     candidates = run.stage("media_candidates", lambda: pairs_op.candidate_pairs(buckets, cfg))
     confirmed = run.stage(
-        "media_confirmed", lambda: media_confirmed_pairs(candidates, features, cfg)
+        "media_confirmed", lambda: media_confirmed_pairs(candidates, features, kinds, cfg)
     )
     clusters = run.stage("media_clusters",
                          lambda: cluster_op.assign_clusters(ids, confirmed, cfg))

@@ -20,26 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from consult_spark.config import Config
-from consult_spark.io import Warehouse
+from consult_spark.io import open_warehouse
 from consult_spark.metrics import StageRunner
 from consult_spark.probing import prepare_library, probe_clips
 
 
 def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
            cfg: Config | None = None) -> dict:
-    # ADOPT the persisted config (CONSULT reads _meta back and runs with it,
-    # main_search.cpp:164-381) — an index built under any Config is
-    # searchable without the caller reconstructing it; only an explicitly
-    # passed CONFLICTING cfg is refused.
-    probe = Warehouse(spark, warehouse_dir, cfg or Config())
-    stored = Config.from_json(probe.read("config").head()["config_json"])
-    if cfg is not None and cfg.params_hash != stored.params_hash:
-        raise ValueError(
-            f"index built with params_hash={stored.params_hash}, caller "
-            f"explicitly passed {cfg.params_hash}; refusing to mix"
-        )
-    cfg = stored
-    wh = Warehouse(spark, warehouse_dir, cfg, run_id=probe.run_id)
+    wh = open_warehouse(spark, warehouse_dir, cfg)
+    cfg = wh.cfg
     run = StageRunner(wh)
 
     library = prepare_library(

@@ -305,8 +305,9 @@ def main() -> None:
         sa, sb = truncate32(sets[a]), truncate32(sets[b])
         ham = bin(sims[a] ^ sims[b]).count("1")
         na, nbn = len(sa), len(sb)
-        # the engine's verify prunes (channel_scores): simhash prefilter +
-        # containment bound run BEFORE the exact jaccard
+        # the engine's verify prunes (verify._channel_scores, the one scorer
+        # every channel goes through): simhash prefilter + containment
+        # bound run BEFORE the exact jaccard
         if ham > cfg.simhash_prefilter_max or min(na, nbn) < thr * max(na, nbn):
             continue
         inter = len(sa & sb)

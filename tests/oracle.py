@@ -301,12 +301,14 @@ def run_oracle(clips_pdf, cfg: Config) -> OracleResult:
                 thr = cfg.low_info_jaccard if min(na, nb) < cfg.low_info_floor else cfg.jaccard_threshold
             else:
                 thr = cfg.txt_jaccard_threshold
-            # mirror verify.channel_scores prunes: simhash prefilter +
-            # containment bound (jaccard <= min/max)
+            # mirror the prunes of verify._channel_scores, the one scorer
+            # every channel goes through: simhash prefilter + containment
+            # bound (jaccard <= min/max)
             passes = ham <= cfg.simhash_prefilter_max and min(na, nb) >= thr * max(na, nb)
             scores[f"{kind}_jaccard"] = jac(sa, sb) if passes else 0.0
             scores[f"{kind}_hamming"] = ham if passes else 64
-        # LCS is gated on the txt-Jaccard threshold (mirrors verify.confirm_pairs)
+        # LCS is gated on the txt-Jaccard threshold (mirrors the containment
+        # gate inside verify._channel_scores' txt pass)
         if scores["txt_jaccard"] >= cfg.txt_jaccard_threshold:
             lcs = lcs_len(transcripts[a], transcripts[b])
             m = min(len(transcripts[a] or ""), len(transcripts[b] or ""))

@@ -116,3 +116,49 @@ def test_no_cross_channel_band_summing(spark, cfg):
         for r in P.candidate_pairs(buckets, Config(min_common_bands=2)).collect()
     }
     assert got == {("c", "d")}
+
+
+def test_missing_transcript_keeps_txt_scores(spark, candidates_xs, features_xs, clips_xs,
+                                             oracle_xs, cfg):
+    """Transcripts attach to the txt channel with LEFT joins: a pcm-confirmed
+    pair whose members both have txt features, but one of whom has no
+    transcripts row, keeps its real txt_jaccard/txt_hamming and scores
+    lcs = 0, substr = false instead of vanishing from the txt scores."""
+    pair, exp = next(
+        (p, e) for p, e in sorted(oracle_xs.confirmed.items())
+        if e["pcm_jaccard"] >= cfg.jaccard_threshold and e["lcs"] > 0
+        and e["txt_hamming"] <= cfg.simhash_prefilter_max
+    )
+    a, b = pair
+    cands = candidates_xs.filter((F.col("clip_a") == a) & (F.col("clip_b") == b))
+    clips = clips_xs.filter(F.col("clip_id") != b)
+    rows = V.confirm_pairs(cands, features_xs, clips, cfg).collect()
+    assert len(rows) == 1
+    got = rows[0]
+    assert abs(got["txt_jaccard"] - exp["txt_jaccard"]) < 1e-12
+    assert got["txt_jaccard"] > 0
+    assert got["txt_hamming"] == exp["txt_hamming"]
+    assert got["lcs"] == 0 and got["substr"] is False
+
+
+def test_channel_scores_without_transcripts_skip_containment(spark, cfg):
+    """channel_scores' sides carry no transcripts: on the img channel every
+    scored row has has_lcs = false, lcs = 0 and substr = false, in the one
+    scorer schema every channel shares."""
+    import os
+
+    from consult_spark.operators import multimodal as MM
+
+    images = spark.read.parquet(
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures",
+                     "media_images.parquet")
+    )
+    feats = MM.featurize_images(images, cfg)
+    cands = P.candidate_pairs(B.capped_buckets(B.explode_bands(feats), cfg), cfg)
+    scored = V.channel_scores(cands, feats, "img", cfg)
+    assert scored.columns == [
+        "clip_a", "clip_b", "jaccard", "hamming", "min_n", "lcs", "substr", "has_lcs",
+    ]
+    rows = scored.collect()
+    assert any(r["jaccard"] >= cfg.txt_jaccard_threshold for r in rows)
+    assert all(not r["has_lcs"] and r["lcs"] == 0 and not r["substr"] for r in rows)

@@ -13,15 +13,21 @@ from jobs.build_index import build_index
 from jobs.search import search
 
 
+def _split(corpus):
+    """(library, queries): library = base clips + hot clique; queries =
+    variants + fresh solos."""
+    lay = corpus["layout"]
+    clips = corpus["clips"]
+    lib_ids = set(lay[(lay.variant_idx == 0) | (lay.group_kind == "hot")]["clip_id"])
+    return (clips[clips.clip_id.isin(lib_ids)],
+            clips[~clips.clip_id.isin(lib_ids)].reset_index(drop=True))
+
+
 @pytest.fixture(scope="module")
 def probe_setup(spark, corpus_xs, cfg, tmp_path_factory):
-    """Library = base clips + hot clique; stream = variants + fresh solos,
-    written as 3 files to exercise multi-batch behavior."""
-    lay = corpus_xs["layout"]
-    clips = corpus_xs["clips"]
-    lib_ids = set(lay[(lay.variant_idx == 0) | (lay.group_kind == "hot")]["clip_id"])
-    lib = clips[clips.clip_id.isin(lib_ids)]
-    qry = clips[~clips.clip_id.isin(lib_ids)].reset_index(drop=True)
+    """Library and stream from _split, the stream written as 3 files to
+    exercise multi-batch behavior."""
+    lib, qry = _split(corpus_xs)
     wh_dir = str(tmp_path_factory.mktemp("probe_index"))
     build_index(spark, spark.createDataFrame(lib), wh_dir, cfg=cfg)
     clips_dir = str(tmp_path_factory.mktemp("probe_stream") / "clips_in")
@@ -97,6 +103,30 @@ def test_stream_probe_rejects_mismatched_config(spark, probe_setup, tmp_path):
             str(tmp_path / "ckpt"),
             cfg=Config(bucket_cap=5),
         )
+
+
+def test_stream_probe_adopts_stored_config(spark, probe_setup, corpus_xs, tmp_path):
+    """On an index built with a non-default Config, stream_probe(cfg=None)
+    opens the warehouse under the stored config, so it sees the library's
+    transcripts and writes exactly what stream_probe(cfg=<that config>)
+    writes — scores, lcs and substr included."""
+    from consult_spark.config import Config
+
+    _, clips_dir, _ = probe_setup
+    custom = Config(bucket_cap=48)
+    wh_dir = str(tmp_path / "custom_index")
+    build_index(spark, spark.createDataFrame(_split(corpus_xs)[0]), wh_dir, cfg=custom)
+
+    def drain(cfg, tag):
+        out_dir = str(tmp_path / f"out_{tag}")
+        q = stream_probe(spark, clips_dir, wh_dir, out_dir, str(tmp_path / f"ckpt_{tag}"),
+                         cfg=cfg)
+        q.awaitTermination(180)
+        return sorted(spark.read.parquet(os.path.join(out_dir, "matched_clips")).collect())
+
+    adopted = drain(None, "adopted")
+    assert adopted == drain(custom, "explicit") and len(adopted) > 0
+    assert any(r["lcs"] > 0 for r in adopted)
 
 
 def test_stream_probe_replayed_epoch_is_idempotent(spark, probe_setup, cfg, tmp_path):
