@@ -5,16 +5,18 @@ everything exploratory lives here instead:
 
   --plans <tag>     capture .explain("formatted") for every declared bench
                     query (and the audio-pipeline stages) into
-                    plans/r08/<name>_<tag>.txt
+                    plans/<tag>/<name>.txt — a new directory per tag, so a
+                    capture never overwrites the committed plans/r08/
   --isolate         time each bench query with the noop sink (guide §1.4)
                     so the computation is measured, not .count()'s column
                     pruning; repeats + steal ticks like bench.py
   --doc-stages      run_doc_pipeline's own per-stage ``timings`` (untraced)
                     over the sf tier's documents, after one discarded warm
                     run; repeats + steal ticks like --isolate
-  --featurize-profile  cProfile one single-threaded featurize batch over a
-                    slice of the bench corpus — attributes the per-clip cost
-                    (decode vs frame features vs hashing)
+  --featurize-profile  cProfile the featurize driver's per-row loop
+                    (shingle._shingle_rows) on one batch, single-threaded,
+                    over a slice of the bench corpus — attributes the
+                    per-clip cost (decode vs frame features vs hashing)
   --probe-jobs      one warm, untraced probe_stream drain (perfbench's
                     seeded inputs, ``--seed N``) with the event log on:
                     jobs, stages, tasks and executor CPU per drain and per
@@ -80,14 +82,14 @@ def run_plans(sf_dir: str, tag: str, cpus: int) -> None:
     from consult_spark.plans.inspect import formatted_plan
 
     spark = _get_spark(cpus)
-    out_dir = os.path.join(REPO, "plans", "r08")
+    out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     qs = E.queries()
     for name in BENCH_QUERIES:
         df = qs[name](spark, sf_dir)
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(formatted_plan(df))
-        print(f"wrote {name}_{tag}.txt")
+        print(f"wrote {tag}/{name}.txt")
     # audio pipeline stage plans over the bench corpus
     from consult_spark.config import Config
     from consult_spark.operators import bands as bands_op
@@ -108,9 +110,9 @@ def run_plans(sf_dir: str, tag: str, cpus: int) -> None:
             ("audio_candidates", candidates),
             ("audio_confirmed", confirmed),
         ):
-            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+            with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
                 f.write(formatted_plan(df))
-            print(f"wrote {name}_{tag}.txt")
+            print(f"wrote {tag}/{name}.txt")
     spark.stop()
 
 
@@ -165,7 +167,8 @@ def run_doc_stages(sf_dir: str, cpus: int, repeats: int = 3) -> None:
 
 
 def run_featurize_profile(n_clips: int = 64) -> None:
-    """Single-threaded cProfile of featurize_pdf over bench-corpus clips."""
+    """Single-threaded cProfile of the featurize driver's per-row loop over
+    bench-corpus clips."""
     import cProfile
     import io
     import pstats
@@ -173,17 +176,18 @@ def run_featurize_profile(n_clips: int = 64) -> None:
     import pyarrow.parquet as pq
 
     from consult_spark.config import Config
-    from consult_spark.operators.shingle import featurize_pdf
+    from consult_spark.operators import shingle
 
     files = sorted(glob.glob(os.path.join(REPO, ".fixtures", "clips_bench_20000", "*.parquet")))
     pdf = pq.read_table(files[0], columns=["clip_id", "bytes", "codec", "transcript"]).to_pandas()
     pdf = pdf.iloc[:n_clips]
     cfg = Config()
-    featurize_pdf(pdf.iloc[:4], cfg)  # warm imports
+    shinglers = shingle.clip_shinglers(cfg)
+    shingle._shingle_rows(pdf.iloc[:4], shinglers, cfg)  # warm imports
     t0 = time.time()
     pr = cProfile.Profile()
     pr.enable()
-    featurize_pdf(pdf, cfg)
+    shingle._shingle_rows(pdf, shinglers, cfg)
     pr.disable()
     wall = time.time() - t0
     s = io.StringIO()

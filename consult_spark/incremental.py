@@ -204,12 +204,8 @@ def fold_delta(
 
     # -- features: delta-only featurize, appended under the same layout
     delta_features = shingle_op.featurize(delta_clips, cfg).persist()
-    run.write("features", lambda: delta_features, mode="append", partition_by=("kind",))
-    run.add(
-        "features",
-        "decode_failed_delta",
-        delta_features.filter(~F.col("decode_ok")).count(),
-    )
+    run.write("features", lambda: delta_features, mode="append", partition_by=("kind",),
+              counters=shingle_op.decode_counters("decode_failed_delta"))
 
     # -- buckets: re-cap ONLY the keys the delta touches (_recap_touched).
     # The re-capped rows are persisted: the candidates read them as well

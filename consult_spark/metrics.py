@@ -10,9 +10,10 @@ pair of append-only tables:
 
 Every job runs its stages through one StageRunner, which skips a stage on
 resume, writes and times it, and buffers its metrics and lineage rows;
-``flush()`` writes both tables once per run.  A lineage row is one data
-file of the stage's table (``partition_id`` = the file's ordinal in path
-order), its rows read from the footer: the balance (skew!) of the stage's
+``flush()`` writes both tables once per run.  A stage's counters (e.g.
+decode_failed) are read off its own write by a ``pyspark.sql.Observation``.
+A lineage row is one data file of the stage's table (``partition_id`` =
+the file's ordinal in path order), its rows read from the footer: the balance (skew!) of the stage's
 own output partitions.  In Parquet mode this bookkeeping submits no Spark
 job — counts come from footers (Warehouse.file_rows), the flush is a
 driver-side pyarrow write (io.write_rows).
@@ -23,7 +24,7 @@ from __future__ import annotations
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 from .io import write_rows
 
@@ -51,24 +52,35 @@ class StageRunner:
         return out
 
     def write(self, name: str, build: Callable[[], DataFrame], mode: str = "overwrite",
-              partition_by: tuple[str, ...] = (), replace: bool = False) -> int:
+              partition_by: tuple[str, ...] = (), replace: bool = False,
+              counters: dict[str, Column] | None = None) -> int:
         """Write ``build()`` as table ``name``, timed and recorded (through
-        Warehouse.replace when the plan reads ``name``) -> the table's rows."""
+        Warehouse.replace when the plan reads ``name``) -> the table's rows.
+        ``counters``: named aggregates over the written rows, read off the
+        write by an Observation into the stage's metrics (no job of their own)."""
+        obs = Observation() if counters else None
+
+        def observed() -> DataFrame:
+            df = build()
+            return df.observe(obs, *[c.alias(k) for k, c in counters.items()]) if counters else df
+
         n = self.timed(name, lambda: (
-            self.wh.replace(build(), name, partition_by=partition_by) if replace
-            else self.wh.write(build(), name, mode=mode, partition_by=partition_by)))
-        self.record_stage(name, {"rows": n})
+            self.wh.replace(observed(), name, partition_by=partition_by) if replace
+            else self.wh.write(observed(), name, mode=mode, partition_by=partition_by)))
+        self.record_stage(name, {"rows": n, **(obs.get if counters else {})})
         return n
 
     def stage(self, name: str, build: Callable[[], DataFrame],
-              partition_by: tuple[str, ...] = ()) -> DataFrame:
+              partition_by: tuple[str, ...] = (),
+              counters: dict[str, Column] | None = None) -> DataFrame:
         """write() unless resuming past an up-to-date manifest -> the table.
-        A skipped stage still records its lineage: footers cost no job."""
+        A skipped stage still records its lineage: footers cost no job.  Its
+        rows and counters stay with the run whose write made the table."""
         if self.resume and self.wh.exists(name):
             self.timings[name] = 0.0
             self.record_stage(name)
         else:
-            self.write(name, build, partition_by=partition_by)
+            self.write(name, build, partition_by=partition_by, counters=counters)
         return self.wh.read(name)
 
     def record_stage(self, name: str, extra: dict | None = None) -> None:

@@ -22,17 +22,19 @@ Schemas:
   images(img_id string, bytes binary, width int, height int, format string)
   videos(vid_id string, bytes binary, fps double, dur_ms int, codec string)
 
-The downstream dedup path is shared: features -> shingle-set column ->
-the SAME minhash/banding/cap/pair/verify operators as audio (they operate
-on (clip_id, shingles) and never look at where the shingles came from).
+Featurize is shared too: ``featurize_images`` / ``featurize_videos`` only
+rename the id column to ``clip_id`` and name their kind's shingler; the
+column choice, per-row loop, decode-failure rule and signatures are
+operators/shingle.py's one featurize driver, the same that runs audio.
+The downstream dedup path is shared as well: features -> shingle-set
+column -> the SAME minhash/banding/cap/pair/verify operators as audio
+(they operate on (clip_id, shingles) and never look at where the shingles
+came from).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import Config
@@ -1046,61 +1048,28 @@ def featurize_images(images: DataFrame, cfg: Config, deterministic_fake: bool = 
     """images table -> FULL features rows (kind='img', FEATURES_SCHEMA:
     truncated shingles + MinHash + SimHash + bands + decode_ok) — directly
     consumable by the SAME banding/pair/verify operators as the audio/text
-    channels (the signature block is shared via shingle.signatures_frame).
-    Decode failures are per-image soft errors, like audio."""
-    from .shingle import FEATURES_SCHEMA, signatures_frame
+    channels.  The img shingler (decode, then block shingles) runs in
+    shingle's one featurize driver, so decode failures and null payloads
+    are per-image soft errors, like audio."""
+    from .shingle import _featurize, payload
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, sets, oks = [], [], [], []
-            for t in pdf.itertuples(index=False):
-                ok = True
-                try:
-                    img = decode_image(bytes(t.bytes), t.format, deterministic_fake)
-                    s = image_shingles(img, cfg)
-                except (ImageDecodeError, NotImplementedError):
-                    s = np.empty(0, dtype=np.uint64)
-                    ok = False
-                ids.append(t.img_id)
-                kinds.append("img")
-                sets.append(s)
-                oks.append(ok)
-            yield signatures_frame(ids, kinds, sets, oks, cfg)
+    def img(row) -> np.ndarray:
+        return image_shingles(decode_image(payload(row), row.format, deterministic_fake), cfg)
 
-    return images.select("img_id", "bytes", "format").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
+    return _featurize(images.withColumnRenamed("img_id", "clip_id"), {"img": img}, cfg)
 
 
-def featurize_videos(videos: DataFrame, cfg: Config, every_ms: int = 1000,
-                     deterministic_fake: bool = False) -> DataFrame:
-    """videos table -> FULL features rows (kind='vid'): frames sampled every
-    ``every_ms``, per-frame block shingles unioned into one set per video —
-    the frame-union plays the same role as the audio dual-lattice union, so
-    videos sharing most frames land in shared buckets.  Real end-to-end for
-    .y4m payloads; failures per-video soft errors."""
-    from .shingle import FEATURES_SCHEMA, signatures_frame
+def featurize_videos(videos: DataFrame, cfg: Config) -> DataFrame:
+    """videos table -> FULL features rows (kind='vid'): frames sampled once
+    a second (sample_video_frames' default), per-frame block shingles
+    unioned into one set per video — the frame-union plays the same role as
+    the audio dual-lattice union, so videos sharing most frames land in
+    shared buckets.  Real end-to-end for .y4m payloads; runs in shingle's
+    one featurize driver, so failures are per-video soft errors."""
+    from .shingle import _featurize, payload
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, sets, oks = [], [], [], []
-            for t in pdf.itertuples(index=False):
-                ok = True
-                try:
-                    frames = sample_video_frames(
-                        bytes(t.bytes), t.codec, every_ms, deterministic_fake
-                    )
-                    parts = [image_shingles(f, cfg) for f in frames]
-                    s = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.uint64)
-                except (ImageDecodeError, NotImplementedError):
-                    s = np.empty(0, dtype=np.uint64)
-                    ok = False
-                ids.append(t.vid_id)
-                kinds.append("vid")
-                sets.append(s)
-                oks.append(ok)
-            yield signatures_frame(ids, kinds, sets, oks, cfg)
+    def vid(row) -> np.ndarray:
+        parts = [image_shingles(f, cfg) for f in sample_video_frames(payload(row), row.codec)]
+        return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.uint64)
 
-    return videos.select("vid_id", "bytes", "codec").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
+    return _featurize(videos.withColumnRenamed("vid_id", "clip_id"), {"vid": vid}, cfg)

@@ -1,18 +1,28 @@
-"""Decode + shingle + signature stage (mapInPandas).
+"""Decode + shingle + signature stage (mapInPandas): one featurize driver
+for every modality and every source.
 
-One Arrow-batched pass over the clips table produces, per clip and channel:
+One Arrow-batched pass over an items table produces, per item and kind:
 the distinct shingle-hash set, the MinHash signature, the SimHash
 fingerprint, and the per-band LSH bucket hashes.  Computing all of it in one
-pass means the expensive part — audio decode — runs exactly once per clip
+pass means the expensive part — decode — runs exactly once per item
 (CONSULT likewise encodes each k-mer once and derives all L signatures from
 that encoding, main_map.cpp:550-584).
 
-Channels:
+Kinds (each a row -> uint64 shingle-set function, a "shingler"):
   pcm — decoded audio -> per-frame 12-bit symbols (see functions/audio.py)
         -> k_pcm-symbol windows packed into uint64 (the analog of
         encodekmer's 2-bit pack, main_map.cpp:1221-1256), emitted for two
         quantization lattices (offset 0 / 0.5) tagged into the hash.
   txt — normalized transcript -> k_txt-char shingle hashes.
+  img — decoded image -> block-luminance shingles (operators/multimodal.py).
+  vid — frames sampled once a second -> the union of their image shingles
+        (operators/multimodal.py).
+
+Every entry point (``featurize``, ``featurize_from_parquet``,
+``multimodal.featurize_images`` / ``featurize_videos``) hands its source —
+a DataFrame, or parquet files the workers read — and its shinglers to one
+driver, ``_featurize``: one column choice, decoder-registry snapshot,
+per-row loop and decode-failure rule, then ``signatures_frame``.
 
 Output schema (FEATURES_SCHEMA): arrays of int64 reinterpret the uint64
 hashes (bit-pattern preserved via .view) so they ride in Spark BIGINT
@@ -21,14 +31,19 @@ columns; equality/join/xor semantics are unaffected.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import glob
+import os
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from ..config import Config
 from ..functions import audio
 from ..functions import hashing as H
+from .multimodal import ImageDecodeError
 
 FEATURES_SCHEMA = (
     "clip_id string, kind string, n_shingles int, "
@@ -85,47 +100,11 @@ def truncate_shingles(s: np.ndarray) -> np.ndarray:
     return np.unique((np.asarray(s, dtype=np.uint64) >> np.uint64(32)).astype(np.uint32))
 
 
-def featurize_pdf(pdf: pd.DataFrame, cfg: Config) -> pd.DataFrame:
-    """clips batch -> features batch (both channels). Pure pandas/numpy.
-
-    Decode failures (corrupt container, unimplemented codec) are PER-CLIP,
-    never task-fatal: the clip gets an empty shingle set and decode_ok=False
-    — empty sets are excluded from banding (bands.explode_bands), so the
-    clip simply can't match on that channel, and the pipeline reports a
-    decode_failed metric instead of dying 100 TB in.  CONSULT's analog:
-    unparseable tokens are skipped, not aborted on (main_search.cpp:770-781).
-    """
-    rows_id: list[str] = []
-    rows_kind: list[str] = []
-    rows_ok: list[bool] = []
-    sets: list[np.ndarray] = []
-    has_pcm = "pcm" in cfg.channels
-    for t in pdf.itertuples(index=False):
-        if has_pcm:
-            data = t.bytes if isinstance(t.bytes, bytes) else bytes(t.bytes)
-        for kind in cfg.channels:
-            ok = True
-            if kind == "pcm":
-                try:
-                    s = pcm_shingle_set(data, t.codec, cfg)
-                except (audio.AudioDecodeError, NotImplementedError):
-                    s = np.empty(0, dtype=np.uint64)
-                    ok = False
-            else:
-                s = txt_shingle_set(t.transcript, cfg)
-            rows_id.append(t.clip_id)
-            rows_kind.append(kind)
-            rows_ok.append(ok)
-            sets.append(s)
-    return signatures_frame(rows_id, rows_kind, sets, rows_ok, cfg)
-
-
 def signatures_frame(ids: list[str], kinds: list[str], sets: list[np.ndarray],
                      oks: list[bool], cfg: Config) -> pd.DataFrame:
     """(uint64 shingle sets) -> full FEATURES_SCHEMA pandas frame: truncated
-    verify sets + MinHash + SimHash + band hashes.  Shared by every channel
-    (pcm/txt here, img/vid in operators/multimodal.py) — the signature
-    algebra never depends on where the shingles came from."""
+    verify sets + MinHash + SimHash + band hashes, for every kind — the
+    signature algebra never depends on where the shingles came from."""
     mh = H.minhash_batch(sets, cfg.n_hashes, cfg.minhash_seed)
     sh = H.simhash_batch(sets, cfg.simhash_bits, cfg.minhash_seed)
     bh = H.band_hashes(mh, cfg.n_bands, cfg.rows_per_band, cfg.band_seed)
@@ -144,18 +123,72 @@ def signatures_frame(ids: list[str], kinds: list[str], sets: list[np.ndarray],
     )
 
 
-def featurize(clips_df, cfg: Config):
-    """Spark stage: clips DataFrame -> features DataFrame.
+Shingler = Callable[[tuple], np.ndarray]
 
-    Column-prunes to exactly what the active channels need before the Python
-    boundary; `bytes` never travels further than this stage, and a txt-only
-    config (e.g. deduping a documents table) needs no audio columns at all.
-    """
-    cols = ["clip_id"]
-    if "pcm" in cfg.channels:
-        cols += ["bytes", "codec"]
-    if "txt" in cfg.channels:
-        cols += ["transcript"]
+# the columns each kind's shingler reads from a row, besides clip_id
+_KIND_COLUMNS = {"pcm": ("bytes", "codec"), "txt": ("transcript",),
+                 "img": ("bytes", "format"), "vid": ("bytes", "codec")}
+
+
+class MissingPayloadError(ValueError):
+    """A null ``bytes`` cell: a per-item decode failure of its own kind."""
+
+
+_DECODE_ERRORS = (audio.AudioDecodeError, ImageDecodeError, MissingPayloadError,
+                  NotImplementedError)
+
+
+def decode_counters(key: str = "decode_failed") -> dict:
+    """A features write's stage counter (metrics.StageRunner): its rows
+    with decode_ok = False."""
+    return {key: F.count_if(~F.col("decode_ok"))}
+
+
+def payload(row) -> bytes:
+    """A row's ``bytes`` cell as ``bytes``; a null cell raises
+    MissingPayloadError, so only the kinds that read the payload fail."""
+    if row.bytes is None:
+        raise MissingPayloadError(f"null payload for {row.clip_id!r}")
+    return row.bytes if isinstance(row.bytes, bytes) else bytes(row.bytes)
+
+
+def clip_shinglers(cfg: Config) -> dict[str, Shingler]:
+    """The clips table's kinds: the pcm/txt channels of ``cfg.channels``."""
+    fns = {"pcm": lambda r: pcm_shingle_set(payload(r), r.codec, cfg),
+           "txt": lambda r: txt_shingle_set(r.transcript, cfg)}
+    return {kind: fns[kind] for kind in cfg.channels}
+
+
+def _shingle_rows(pdf: pd.DataFrame, shinglers: dict[str, Shingler],
+                  cfg: Config) -> pd.DataFrame:
+    """items batch -> features batch: one row per (item, kind).
+
+    Decode failures (corrupt container, unimplemented codec, null payload)
+    are PER-ITEM, never task-fatal: that (item, kind) gets an empty set and
+    decode_ok=False — empty sets are excluded from banding, so the item
+    can't match on that channel, and the jobs report a decode_failed metric
+    instead of dying 100 TB in.  CONSULT's analog: unparseable tokens are
+    skipped, not aborted on (main_search.cpp:770-781)."""
+    ids, kinds, sets, oks = [], [], [], []
+    for row in pdf.itertuples(index=False):
+        for kind, shingle in shinglers.items():
+            try:
+                s, ok = shingle(row), True
+            except _DECODE_ERRORS:
+                s, ok = np.empty(0, dtype=np.uint64), False
+            ids.append(row.clip_id)
+            kinds.append(kind)
+            sets.append(s)
+            oks.append(ok)
+    return signatures_frame(ids, kinds, sets, oks, cfg)
+
+
+def _featurize(source, shinglers: dict[str, Shingler], cfg: Config, files: bool = False):
+    """``source`` (clip_id + its kinds' columns, pruned to exactly those
+    before the Python boundary) -> features DataFrame, one mapInPandas.
+    ``files=True``: ``source`` is a ``path`` column of parquet files, one
+    task each, whose columns the workers read with pyarrow."""
+    cols = list(dict.fromkeys(["clip_id", *(c for k in shinglers for c in _KIND_COLUMNS[k])]))
     # snapshot driver-side registered codec decoders into the closure:
     # python workers import modules fresh, so a plain module-global registry
     # would be empty there — cloudpickle ships the snapshot with the UDF
@@ -164,16 +197,29 @@ def featurize(clips_df, cfg: Config):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for codec, fn in decoders.items():
             audio.register_decoder(codec, fn)
+        if files:
+            batches = (pq.read_table(path, columns=cols).to_pandas()
+                       for pdf in batches for path in pdf["path"])
         for pdf in batches:
             if len(pdf):
-                yield featurize_pdf(pdf, cfg)
+                yield _shingle_rows(pdf, shinglers, cfg)
 
-    return clips_df.select(*cols).mapInPandas(run, schema=FEATURES_SCHEMA)
+    return (source if files else source.select(*cols)).mapInPandas(run, schema=FEATURES_SCHEMA)
+
+
+def featurize(clips_df, cfg: Config):
+    """Spark stage: clips DataFrame -> features DataFrame.
+
+    The scan reads only what the active channels need; `bytes` never
+    travels further than this stage, and a txt-only config (e.g. deduping a
+    documents table) reads no audio columns at all.
+    """
+    return _featurize(clips_df, clip_shinglers(cfg), cfg)
 
 
 def featurize_from_parquet(spark, clips_path: str, cfg: Config):
     """Featurize with a Python-native source: executors read the parquet
-    row groups directly with pyarrow instead of receiving the fat `bytes`
+    files directly with pyarrow instead of receiving the fat `bytes`
     column through the JVM->Python Arrow pipe.
 
     Measured locally, the JVM-side serialization of ~60 KB binary rows is
@@ -187,30 +233,8 @@ def featurize_from_parquet(spark, clips_path: str, cfg: Config):
     Returns a features DataFrame identical (bit-for-bit) to
     ``featurize(spark.read.parquet(clips_path), cfg)``.
     """
-    import glob as _glob
-    import os as _os
-
-    cols = ["clip_id"]
-    if "pcm" in cfg.channels:
-        cols += ["bytes", "codec"]
-    if "txt" in cfg.channels:
-        cols += ["transcript"]
-    files = sorted(_glob.glob(_os.path.join(clips_path, "*.parquet")))
+    files = sorted(glob.glob(os.path.join(clips_path, "*.parquet")))
     if not files:
         raise FileNotFoundError(f"no parquet part files under {clips_path}")
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(len(files))
-    decoders = dict(audio._DECODERS)  # see featurize(): ship registry to workers
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for codec, fn in decoders.items():
-            audio.register_decoder(codec, fn)
-        for pdf in batches:
-            for path in pdf["path"]:
-                table = pq.read_table(path, columns=cols)
-                clips_pdf = table.to_pandas()
-                if len(clips_pdf):
-                    yield featurize_pdf(clips_pdf, cfg)
-
-    return fdf.mapInPandas(run, schema=FEATURES_SCHEMA)
+    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(len(files))
+    return _featurize(paths, clip_shinglers(cfg), cfg, files=True)

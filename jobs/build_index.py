@@ -12,7 +12,6 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
@@ -33,14 +32,13 @@ def build_index(spark: SparkSession, clips: DataFrame, warehouse_dir: str,
     # docs/SCALE.md "Cluster deployment notes")
     features = run.stage(
         "features", lambda: shingle_op.featurize(clips, cfg).repartition("kind", "clip_id"),
-        partition_by=("kind",))
+        partition_by=("kind",), counters=shingle_op.decode_counters())
     if "transcript" in clips.columns:
         # verify payload for the suffix-array check in probe mode
         run.write("transcripts", lambda: clips.select("clip_id", "transcript"))
     bands = bands_op.explode_bands(features)
     run.write("lsh_buckets", lambda: bands_op.capped_buckets(bands, cfg))
     run.write("bucket_stats", lambda: bands_op.bucket_stats(bands, cfg))
-    run.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
     run.flush()
     return wh
 

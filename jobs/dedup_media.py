@@ -35,6 +35,7 @@ from consult_spark.operators import bands as bands_op
 from consult_spark.operators import cluster as cluster_op
 from consult_spark.operators import multimodal as mm
 from consult_spark.operators import pairs as pairs_op
+from consult_spark.operators import shingle as shingle_op
 from consult_spark.operators import verify as verify_op
 
 
@@ -92,14 +93,10 @@ def run_media_pipeline(
             parts.append(mm.featurize_images(images, cfg))
         if videos is not None:
             parts.append(mm.featurize_videos(videos, cfg))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
-    features = run.stage("media_features", build_features, partition_by=("kind",))
-    run.add("media_features", "decode_failed",
-            features.filter(~F.col("decode_ok")).count())
+    features = run.stage("media_features", build_features, partition_by=("kind",),
+                         counters=shingle_op.decode_counters())
     ids = features.select("clip_id").distinct()
 
     buckets = run.stage(

@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from consult_spark.config import Config
 from consult_spark.io import Warehouse
@@ -49,12 +48,12 @@ def run_pipeline(
     wh.write_config()
 
     # features partitioned by channel: every downstream reader filters on
-    # kind, so the scan prunes whole partitions (plan-asserted)
+    # kind, so the scan prunes whole partitions (plan-asserted).  Decode
+    # failures are per-clip soft errors (empty shingle set); their count,
+    # observed by the write, is a metric — the per-file (lines, matched)
+    # accounting analog
     features = run.stage("features", lambda: shingle_op.featurize(clips, cfg),
-                         partition_by=("kind",))
-    # decode failures are per-clip soft errors (empty shingle set); surface
-    # the count as a metric — the per-file (lines, matched) accounting analog
-    run.add("features", "decode_failed", features.filter(~F.col("decode_ok")).count())
+                         partition_by=("kind",), counters=shingle_op.decode_counters())
     if "transcript" in clips.columns:
         # verify payload for delta folds (consult_spark/incremental.py):
         # an increment needs the OLD clips' transcripts for the

@@ -54,3 +54,51 @@ def test_pipeline_completes_and_reports_decode_failures(spark, dirty_clips, cfg,
         (F.col("stage") == "features") & (F.col("key") == "decode_failed")
     ).head()
     assert row is not None and row["value"] == 2.0
+
+
+def test_resumed_pipeline_keeps_the_first_runs_decode_count(spark, dirty_clips, cfg, tmp_path):
+    """decode_failed is observed by the features write: a resumed run that
+    skips the stage completes and records no second count, and the first
+    run's row stays."""
+    from jobs.pipeline import run_pipeline
+
+    wh = str(tmp_path / "wh")
+    first = run_pipeline(spark, dirty_clips, wh, cfg)
+    resumed = run_pipeline(spark, dirty_clips, wh, cfg, resume=True)
+    assert resumed["timings"]["features"] == 0.0
+    rows = (resumed["warehouse"].read("metrics")
+            .filter((F.col("stage") == "features") & (F.col("key") == "decode_failed"))
+            .collect())
+    assert [(r["run_id"], r["value"]) for r in rows] == [(first["run_id"], 2.0)]
+
+
+def test_null_payload_is_a_per_item_decode_failure(spark, corpus_xs, cfg, tmp_path):
+    """A null ``bytes`` cell (nullable in the clips and images schemas)
+    fails only the payload channel of its own row — from a DataFrame, from
+    parquet files and for images — while txt still scores the transcript."""
+    import numpy as np
+
+    from consult_spark.datagen import CLIPS_SCHEMA
+    from consult_spark.operators import multimodal as MM
+
+    good = corpus_xs["clips"].head(3)
+    null = pd.DataFrame([("null_0", None, 16000, 100, "pcm_s16le", "null payload transcript")],
+                        columns=good.columns)
+    clips = spark.createDataFrame(pd.concat([good, null], ignore_index=True), CLIPS_SCHEMA)
+    path = str(tmp_path / "clips")
+    clips.write.parquet(path)
+    for feats in (SH.featurize(clips, cfg), SH.featurize_from_parquet(spark, path, cfg)):
+        got = {(r["clip_id"], r["kind"]): r for r in feats.collect()}
+        assert len(got) == 2 * 4
+        assert not got[("null_0", "pcm")]["decode_ok"]
+        assert got[("null_0", "pcm")]["n_shingles"] == 0
+        assert got[("null_0", "txt")]["decode_ok"] and got[("null_0", "txt")]["n_shingles"] > 0
+        assert all(r["decode_ok"] for (cid, _), r in got.items() if cid != "null_0")
+
+    img = np.random.default_rng(3).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
+    ppm = b"P6\n16 16\n255\n" + img.tobytes()
+    images = spark.createDataFrame(
+        [("img_ok", ppm, 16, 16, "ppm"), ("img_null", None, 16, 16, "ppm")], MM.IMAGES_SCHEMA)
+    got = {r["clip_id"]: r for r in MM.featurize_images(images, cfg).collect()}
+    assert got["img_ok"]["decode_ok"] and got["img_ok"]["n_shingles"] > 0
+    assert not got["img_null"]["decode_ok"] and got["img_null"]["n_shingles"] == 0

@@ -11,6 +11,15 @@ from consult_spark.functions import audio
 from consult_spark.operators import shingle as SH
 
 
+def _featurize_each_source(spark, clips, cfg, tmp_path):
+    """features of ``clips`` from a DataFrame and from parquet files read by
+    the workers: the decoder-registry snapshot must reach both."""
+    path = str(tmp_path / "clips")
+    clips.write.parquet(path)
+    return {"dataframe": SH.featurize(clips, cfg),
+            "parquet": SH.featurize_from_parquet(spark, path, cfg)}
+
+
 def test_unregistered_compressed_codec_is_soft_error(spark, cfg):
     clips = spark.createDataFrame(
         [("c1", b"\x01\x02\x03\x04" * 8, 16000, 1000, "mp3", "hello world")],
@@ -21,7 +30,7 @@ def test_unregistered_compressed_codec_is_soft_error(spark, cfg):
     assert got["txt"]["decode_ok"]  # the other channel is unaffected
 
 
-def test_registered_decoder_flows_through_featurize(spark, cfg, monkeypatch):
+def test_registered_decoder_flows_through_featurize(spark, cfg, monkeypatch, tmp_path):
     # defined INSIDE the test: cloudpickle serializes closures by value, so
     # the worker processes get the decoder without importing the test module
     # (a real plug-in registers from a --py-files-shipped module instead)
@@ -43,14 +52,15 @@ def test_registered_decoder_flows_through_featurize(spark, cfg, monkeypatch):
         rows,
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
-    feats = {r["clip_id"]: r for r in SH.featurize(clips, cfg).filter("kind = 'pcm'").collect()}
-    assert all(f["decode_ok"] for f in feats.values())
-    assert feats["c1"]["n_shingles"] > 0
-    assert tuple(feats["c1"]["shingles"]) == tuple(feats["c2"]["shingles"])
-    assert tuple(feats["c1"]["shingles"]) != tuple(feats["c3"]["shingles"])
+    for source, df in _featurize_each_source(spark, clips, cfg, tmp_path).items():
+        feats = {r["clip_id"]: r for r in df.filter("kind = 'pcm'").collect()}
+        assert all(f["decode_ok"] for f in feats.values()), source
+        assert feats["c1"]["n_shingles"] > 0, source
+        assert tuple(feats["c1"]["shingles"]) == tuple(feats["c2"]["shingles"]), source
+        assert tuple(feats["c1"]["shingles"]) != tuple(feats["c3"]["shingles"]), source
 
 
-def test_registered_decoder_failure_stays_per_clip(spark, cfg, monkeypatch):
+def test_registered_decoder_failure_stays_per_clip(spark, cfg, monkeypatch, tmp_path):
     def soft_fail(data: bytes):
         raise audio.AudioDecodeError("corrupt frame")
 
@@ -59,8 +69,10 @@ def test_registered_decoder_failure_stays_per_clip(spark, cfg, monkeypatch):
         [("c1", b"xx", 16000, 10, "mp3", "t")],
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
-    got = {r["kind"]: r for r in SH.featurize(clips, cfg).collect()}
-    assert not got["pcm"]["decode_ok"]
+    for source, df in _featurize_each_source(spark, clips, cfg, tmp_path).items():
+        got = {r["kind"]: r for r in df.collect()}
+        assert not got["pcm"]["decode_ok"], source
+        assert got["txt"]["decode_ok"], source
 
 
 # ---------------------------------------------------------------------------

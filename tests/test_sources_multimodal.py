@@ -535,7 +535,7 @@ def test_real_video_dup_confirms_through_verify(spark, cfg):
         ("vid_bad", b"YUV4MPEG2 W32 H32 F1:1 C420\nFRAME\n\x00", 1.0, 10, "y4m"),
     ]
     videos = spark.createDataFrame(rows, MM.VIDEOS_SCHEMA)
-    feats = MM.featurize_videos(videos, cfg, every_ms=1000)
+    feats = MM.featurize_videos(videos, cfg)
     ok = {r["clip_id"]: r["decode_ok"] for r in feats.collect()}
     assert ok == {"vid_a": True, "vid_b": True, "vid_c": True, "vid_bad": False}
 
