@@ -99,7 +99,10 @@ def run_plans(sf_dir: str, tag: str, cpus: int) -> None:
 
     cfg = Config()
     clips_path = os.path.join(REPO, ".fixtures", "clips_bench_20000")
-    if os.path.exists(os.path.join(clips_path, "_SUCCESS")):
+    if not os.path.exists(os.path.join(clips_path, "_SUCCESS")):
+        print(f"skipped audio_features/audio_candidates/audio_confirmed: no bench corpus "
+              f"at {clips_path}")
+    else:
         clips = spark.read.parquet(clips_path)
         features = shingle_op.featurize_from_parquet(spark, clips_path, cfg)
         buckets = bands_op.capped_buckets(bands_op.explode_bands(features), cfg)
@@ -252,12 +255,13 @@ def run_probe_jobs(seed: int) -> None:
     it stops; the drain's jobs are those submitted between its start and
     its end, and an epoch's jobs carry its ``streaming.sql.batchId``.
 
-    Wall split of each epoch with input rows: ``startup_s`` is the
-    trigger's time outside foreachBatch (offsets, file listing, WAL) plus
-    the batch function's time before it calls ``probe_clips``;
-    ``plan_build_s`` is the ``probe_clips`` call (building the plan, plus
-    any job it runs to size a broadcast); ``matched_write_s`` / ``unmatched_write_s`` are the two data
-    writes; ``rest_s`` is what is left of the batch function."""
+    Wall split of each epoch: ``startup_s`` is the trigger's time outside
+    foreachBatch (offsets, file listing, WAL) plus the batch function's
+    time before it calls ``probe_batch``; ``plan_build_s`` is the
+    ``probe_batch`` call on either route (building the plan; on the SQL
+    route also the batch count and any job it runs to size a broadcast);
+    ``matched_write_s`` / ``unmatched_write_s`` are the two data writes;
+    ``rest_s`` is what is left of the batch function."""
     import tempfile
 
     from perfbench.workloads import ProbeStream
@@ -297,8 +301,8 @@ def run_probe_jobs(seed: int) -> None:
 
         wl.setup(spark, os.path.join(tmp, "work"))
         wl.warmup(spark, os.path.join(tmp, "warmup"))
-        originals = (sp.probe_clips, sp._epoch_write, sp.make_probe_batch_writer)
-        sp.probe_clips = timed_call("probe_clips", sp.probe_clips)
+        originals = (sp.probe_batch, sp._epoch_write, sp.make_probe_batch_writer)
+        sp.probe_batch = timed_call("probe_batch", sp.probe_batch)
         sp._epoch_write = timed_call("write", sp._epoch_write)
         sp.make_probe_batch_writer = make_timed_writer
         s0 = _steal_ticks()
@@ -306,7 +310,7 @@ def run_probe_jobs(seed: int) -> None:
         try:
             lat = wl.op(spark, os.path.join(tmp, "op"))
         finally:
-            sp.probe_clips, sp._epoch_write, sp.make_probe_batch_writer = originals
+            sp.probe_batch, sp._epoch_write, sp.make_probe_batch_writer = originals
         t1 = time.time()
         steal = _steal_ticks() - s0
         spark.stop()
@@ -317,13 +321,11 @@ def run_probe_jobs(seed: int) -> None:
         for j in drain:
             if j["batch"] is not None:
                 per_batch.setdefault(j["batch"], []).append(j)
-        # an epoch with no input rows returns before it builds a plan
-        epochs = [c for c in calls if c[0] == "epoch"
-                  and any(p[0] == "probe_clips" and c[1] <= p[1] <= c[2] for p in calls)]
+        epochs = [c for c in calls if c[0] == "epoch"]
         splits = []
         for (_, e0, e1), trigger_s in zip(epochs, lat):
             inside = [c for c in calls if c[0] != "epoch" and e0 <= c[1] <= e1]
-            plan = [c for c in inside if c[0] == "probe_clips"]
+            plan = [c for c in inside if c[0] == "probe_batch"]
             plan_start = plan[0][1] if plan else e1
             split = {
                 "epoch_s": round(e1 - e0, 3),

@@ -183,20 +183,37 @@ def _shingle_rows(pdf: pd.DataFrame, shinglers: dict[str, Shingler],
     return signatures_frame(ids, kinds, sets, oks, cfg)
 
 
-def _featurize(source, shinglers: dict[str, Shingler], cfg: Config, files: bool = False):
-    """``source`` (clip_id + its kinds' columns, pruned to exactly those
-    before the Python boundary) -> features DataFrame, one mapInPandas.
-    ``files=True``: ``source`` is a ``path`` column of parquet files, one
-    task each, whose columns the workers read with pyarrow."""
-    cols = list(dict.fromkeys(["clip_id", *(c for k in shinglers for c in _KIND_COLUMNS[k])]))
-    # snapshot driver-side registered codec decoders into the closure:
-    # python workers import modules fresh, so a plain module-global registry
-    # would be empty there — cloudpickle ships the snapshot with the UDF
+def _source_columns(shinglers: dict[str, Shingler]) -> list[str]:
+    """clip_id + the columns the kinds' shinglers read, each once."""
+    return list(dict.fromkeys(["clip_id", *(c for k in shinglers for c in _KIND_COLUMNS[k])]))
+
+
+Body = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
+
+
+def _with_decoders(body: Body) -> Body:
+    """A mapInPandas body that runs _shingle_rows -> the same body, run with
+    the driver's registered codec decoders.  Python workers import modules
+    fresh, so a plain module-global registry would be empty there: the
+    snapshot taken here rides in the closure cloudpickle ships."""
     decoders = dict(audio._DECODERS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for codec, fn in decoders.items():
             audio.register_decoder(codec, fn)
+        return body(batches)
+
+    return run
+
+
+def _featurize(source, shinglers: dict[str, Shingler], cfg: Config, files: bool = False):
+    """``source`` (clip_id + its kinds' columns, pruned to exactly those
+    before the Python boundary) -> features DataFrame, one mapInPandas.
+    ``files=True``: ``source`` is a ``path`` column of parquet files, one
+    task each, whose columns the workers read with pyarrow."""
+    cols = _source_columns(shinglers)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if files:
             batches = (pq.read_table(path, columns=cols).to_pandas()
                        for pdf in batches for path in pdf["path"])
@@ -204,7 +221,8 @@ def _featurize(source, shinglers: dict[str, Shingler], cfg: Config, files: bool 
             if len(pdf):
                 yield _shingle_rows(pdf, shinglers, cfg)
 
-    return (source if files else source.select(*cols)).mapInPandas(run, schema=FEATURES_SCHEMA)
+    return (source if files else source.select(*cols)).mapInPandas(
+        _with_decoders(run), schema=FEATURES_SCHEMA)
 
 
 def featurize(clips_df, cfg: Config):

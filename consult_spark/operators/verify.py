@@ -57,6 +57,14 @@ SCORES_SCHEMA = (
 # ann.MAX_BROADCAST_VECTORS.  ~100k clips x ~1k int64 shingles ~= 800 MB
 # worst-case on this corpus shape; the bench tier (20k clips) is well under.
 MAX_BROADCAST_FAT_ROWS = 100_000
+# the probe's route bound (probing.prepare_library): a library whose
+# features table has at most this many rows is collected into a
+# probing.LibraryIndex and broadcast, and EVERY Python worker holds its own
+# copy.  Measured: ~1.4 KB of index per feature row (arrays + ids +
+# transcripts; 1416 B/row on perfbench's probe_stream library, 462 rows ->
+# 0.65 MB; 1373 B/row on the corpus_xs library, 254 rows), so the bound
+# holds each worker's copy near 28 MB.  Above it the SQL route stays.
+MAX_PROBE_INDEX_ROWS = 20_000
 
 
 @dataclass(frozen=True)
@@ -81,10 +89,12 @@ class VerifySide:
     confirm_pairs scores ``clip_a`` against side A and ``clip_b`` against
     side B.  A self-join (every member from one table) passes one side for
     both, so each fat projection broadcasts once and serves both aliased
-    joins.  A probe passes the query batch as side A and the library as
-    side B (probing.prepare_library builds that side once per stream): no
-    query ∪ library union, and a query is always scored with its own
-    features, even when a library clip has the same id."""
+    joins.  The probe's SQL route passes the query batch as side A and the
+    library as side B (probing.prepare_library builds that side once per
+    stream when the library is above verify.MAX_PROBE_INDEX_ROWS; below it
+    the probe scores against a broadcast index instead): no query ∪
+    library union, and a query is always scored with its own features,
+    even when a library clip has the same id."""
 
     pcm: ChannelSide
     txt: ChannelSide
@@ -132,13 +142,6 @@ def _prefiltered_survivors(pairs: DataFrame, side_a: ChannelSide, side_b: Channe
 
     Every channel's scores come through _channel_scores, so every channel
     is pruned by this one ladder."""
-    if kind == "pcm":
-        thr = F.when(
-            F.least("n_a", "n_b") < cfg.low_info_floor, F.lit(cfg.low_info_jaccard)
-        ).otherwise(F.lit(cfg.jaccard_threshold))
-    else:
-        thr = F.lit(cfg.txt_jaccard_threshold)
-
     def _narrow_join(p: DataFrame) -> DataFrame:
         return (
             p.select("clip_a", "clip_b")
@@ -192,9 +195,43 @@ def _prefiltered_survivors(pairs: DataFrame, side_a: ChannelSide, side_b: Channe
         "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     )
     return with_sim.filter(
-        (F.col("hamming") <= cfg.simhash_prefilter_max)
-        & (F.least("n_a", "n_b") >= thr * F.greatest("n_a", "n_b"))
+        _survives(F.col("hamming"), F.least("n_a", "n_b"), F.greatest("n_a", "n_b"), kind, cfg)
     ).select("clip_a", "clip_b", "hamming")
+
+
+def _clears(score, min_n, kind: str, cfg: Config, scale=None):
+    """score >= the channel's confirm threshold (times ``scale``), on Spark
+    Columns and numpy arrays alike: a pcm pair whose smaller shingle set
+    has fewer than cfg.low_info_floor members must clear the stricter
+    cfg.low_info_jaccard (low-complexity masking, see Config); every other
+    channel clears cfg.txt_jaccard_threshold."""
+    def bound(thr: float):
+        return thr if scale is None else thr * scale
+
+    if kind != "pcm":
+        return score >= bound(cfg.txt_jaccard_threshold)
+    low = min_n < cfg.low_info_floor
+    return ((low & (score >= bound(cfg.low_info_jaccard)))
+            | (~low & (score >= bound(cfg.jaccard_threshold))))
+
+
+def _survives(hamming, lo, hi, kind: str, cfg: Config):
+    """The prefilter's keep rule for a pair with SimHash distance
+    ``hamming`` and shingle-set sizes ``lo`` <= ``hi``, on Spark Columns
+    and numpy arrays alike: the hd() bound, and the containment bound
+    (jaccard <= lo/hi, so a pair whose size ratio is already below its
+    threshold cannot verify)."""
+    return (hamming <= cfg.simhash_prefilter_max) & _clears(lo, lo, kind, cfg, scale=hi)
+
+
+def is_dup(pcm_jaccard, pcm_min_n, txt_jaccard, substr, cfg: Config):
+    """The classification, on Spark Columns and numpy arrays alike: the pcm
+    channel drives (audio near-dup), and transcript similarity plus
+    suffix-array containment is an independent confirmation path.  A
+    channel the prefilter dropped enters as jaccard 0, min_n 0, substr
+    false."""
+    return (_clears(pcm_jaccard, pcm_min_n, "pcm", cfg)
+            | (_clears(txt_jaccard, None, "txt", cfg) & substr))
 
 
 def _broadcast_if_bounded(df: DataFrame, n_rows: int | None = None) -> DataFrame:
@@ -216,17 +253,18 @@ def _broadcast_if_bounded(df: DataFrame, n_rows: int | None = None) -> DataFrame
     return df
 
 
-def _batch_jaccard(pdf: pd.DataFrame):
-    """Vectorized exact Jaccard over one Arrow batch of (sh_a, sh_b) pairs
-    -> (jac float64[n], lens_a, lens_b).  ONE lexsort pass instead of a
-    python loop with a sort per pair: tag every shingle with its pair
-    index, lexsort (value within pair), and count adjacent equal values —
+def _batch_jaccard(sh_a, sh_b):
+    """Vectorized exact Jaccard over a batch of pairs, the i-th pair's
+    shingle sets being sh_a[i] and sh_b[i] -> (jac float64[n], lens_a,
+    lens_b).  ONE lexsort pass instead of a python loop with a sort per
+    pair: tag every shingle with its pair index, lexsort (value within
+    pair), and count adjacent equal values —
     each side's set is unique, so an intersection element appears exactly
     twice and lands adjacent.  Measured 6.6 s -> ~4 s on the sf0.1 verify
     stage when this replaced the per-pair loop."""
-    n = len(pdf)
-    sa_list = [np.asarray(x, dtype=np.int64) for x in pdf["sh_a"]]
-    sb_list = [np.asarray(x, dtype=np.int64) for x in pdf["sh_b"]]
+    n = len(sh_a)
+    sa_list = [np.asarray(x, dtype=np.int64) for x in sh_a]
+    sb_list = [np.asarray(x, dtype=np.int64) for x in sh_b]
     lens_a = np.fromiter((a.size for a in sa_list), np.int64, count=n)
     lens_b = np.fromiter((b.size for b in sb_list), np.int64, count=n)
     allv = np.concatenate(sa_list + sb_list) if (lens_a.sum() + lens_b.sum()) else np.empty(0, np.int64)
@@ -245,6 +283,24 @@ def _batch_jaccard(pdf: pd.DataFrame):
         inter, union, out=np.zeros(n, dtype=np.float64), where=union > 0
     )
     return jac, lens_a, lens_b
+
+
+def _containment(a, b, min_frac: float) -> tuple[bool, int]:
+    """The containment ladder for one pair of transcripts -> (substr, lcs).
+    A missing transcript (None, or NaN from a left join) is empty and never
+    contains."""
+    a = a if isinstance(a, str) else ""
+    b = b if isinstance(b, str) else ""
+    m = min(len(a), len(b))
+    if m and (a in b or b in a):
+        # full containment: LCS == the shorter text, and the min_frac test
+        # is trivially met — C-level find, skips the O(n log^2 n) suffix
+        # array for the dominant case (near-dup transcripts are mostly
+        # equal or contained; measured ~90% of LCS-gated pairs at sf0.1)
+        return True, m
+    if m:
+        return substring_contained(a, b, min_frac)
+    return False, 0
 
 
 def channel_scores(pairs: DataFrame, features: DataFrame, kind: str, cfg: Config) -> DataFrame:
@@ -298,27 +354,14 @@ def _channel_scores(pairs: DataFrame, side_a: ChannelSide, side_b: ChannelSide,
             n = len(pdf)
             if not n:
                 continue
-            jac, lens_a, lens_b = _batch_jaccard(pdf)
+            jac, lens_a, lens_b = _batch_jaccard(pdf["sh_a"], pdf["sh_b"])
             lcs = np.zeros(n, dtype=np.int64)
             ok = np.zeros(n, dtype=bool)
             has = np.zeros(n, dtype=bool)
             gated = np.flatnonzero(jac >= jthr) if with_lcs else ()
             for i in gated:
-                # left-joined transcripts arrive as None/NaN when absent
-                a, b = pdf["tr_a"].iat[i], pdf["tr_b"].iat[i]
-                a = a if isinstance(a, str) else ""
-                b = b if isinstance(b, str) else ""
                 has[i] = True
-                m = min(len(a), len(b))
-                if m and (a in b or b in a):
-                    # full containment: LCS == the shorter text, and the
-                    # min_frac test is trivially met — C-level find, skips
-                    # the O(n log^2 n) suffix array for the dominant case
-                    # (near-dup transcripts are mostly equal or contained;
-                    # measured ~90% of LCS-gated pairs at sf0.1)
-                    ok[i], lcs[i] = True, m
-                elif m:
-                    ok[i], lcs[i] = substring_contained(a, b, min_frac)
+                ok[i], lcs[i] = _containment(pdf["tr_a"].iat[i], pdf["tr_b"].iat[i], min_frac)
             yield pd.DataFrame(
                 {
                     "clip_a": pdf["clip_a"],
@@ -363,14 +406,7 @@ def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, 
     pcm_jaccard = F.coalesce("pcm_jaccard", F.lit(0.0))
     txt_jaccard = F.coalesce("txt_jaccard", F.lit(0.0))
     substr = F.coalesce("substr", F.lit(False))
-    # low-complexity masking: flat clips (tiny shingle sets) must clear the
-    # stricter threshold — see Config.low_info_floor
-    pcm_threshold = F.when(
-        F.coalesce("pcm_min_n", F.lit(0)) < cfg.low_info_floor, F.lit(cfg.low_info_jaccard)
-    ).otherwise(F.lit(cfg.jaccard_threshold))
-    is_dup = (pcm_jaccard >= pcm_threshold) | (
-        (txt_jaccard >= cfg.txt_jaccard_threshold) & substr
-    )
+    dup = is_dup(pcm_jaccard, F.coalesce("pcm_min_n", F.lit(0)), txt_jaccard, substr, cfg)
     # one select, not a withColumn chain: each withColumn re-analyzes the
     # whole plan on the driver, which a streaming epoch pays every batch
     out = (
@@ -386,7 +422,7 @@ def confirm_pairs(candidates: DataFrame, features: DataFrame, clips: DataFrame, 
             F.col("n_bands_txt").cast("int").alias("n_bands_txt"),
             F.coalesce("lcs", F.lit(0)).cast("int").alias("lcs"),
             substr.alias("substr"),
-            is_dup.alias("is_dup"),
+            dup.alias("is_dup"),
         )
     )
     return out.filter(F.col("is_dup"))

@@ -23,6 +23,7 @@ a Spark write, at no job's scheduling cost.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +37,11 @@ def _partition_dir(table_dir: str, epoch_id: int) -> str:
 def epoch_write(df: DataFrame, table_dir: str, epoch_id: int) -> None:
     """Overwrite exactly this epoch's partition directory."""
     df.write.mode("overwrite").parquet(_partition_dir(table_dir, epoch_id))
+
+
+def epoch_drop(table_dir: str, epoch_id: int) -> None:
+    """Remove this epoch's partition directory, if any."""
+    shutil.rmtree(_partition_dir(table_dir, epoch_id), ignore_errors=True)
 
 
 def epoch_write_rows(spark: SparkSession, rows: list[tuple], schema: str, table_dir: str,

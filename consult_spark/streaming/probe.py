@@ -4,7 +4,7 @@ the SAME probe core as jobs/search.py.
 CONSULT answers "is this read in the library?" one batch invocation at a
 time (main_search.cpp:684-1061); here newly-arriving clips are classified
 continuously — a file-source stream feeds each micro-batch through
-probing.probe_clips() against a prebuilt index (jobs/build_index.py), and
+probing.probe_batch() against a prebuilt index (jobs/build_index.py), and
 foreachBatch writes the verified hits and the per-batch unmatched ids:
 
   <out>/matched_clips    confirmed pairs (clip_a = query id, clip_b = lib)
@@ -16,26 +16,31 @@ foreachBatch writes the verified hits and the per-batch unmatched ids:
                          maintained (clip_id, cluster_id) via incremental CC
 
 What is built once and what per epoch.  CONSULT loads its index once and
-then loops over the queries (main_search.cpp:523-658); so does this probe:
+then streams each query through lookup, verify and classify
+(main_search.cpp:523-658); so does this probe:
 
-* at stream start (make_probe_batch_writer): the library tables are read
-  and cached, and probing.prepare_library builds verify's library side
-  from them — per channel the narrow (clip_id, simhash, n_shingles) and
-  fat (clip_id, shingles) projections plus the transcripts, sized by ONE
-  bounded count of the cached features.  The sinks' empty sentinels are
-  written from the driver with pyarrow (no Spark job).
-* per epoch: the batch is cached and counted once; that count replaces an
-  emptiness check and bounds the query side's broadcast, so sizing costs
-  no job.  The epoch featurizes and bands its own queries, probes the
-  bucket table, caches the candidates and verifies each (query, library)
-  pair against the query side and the prebuilt library side — no
-  query ∪ library table.  The matched and unmatched writes are the only
-  other actions: an Observation (pyspark.sql) on each counts the pairs
-  and the unmatched clips, and the one-row metrics epoch is written from
-  the driver with pyarrow.
+* at stream start (stream_probe): probing.prepare_library builds the
+  library side on the route its size picks (probing module docstring).
+  Under verify.MAX_PROBE_INDEX_ROWS (the test and benchmark libraries
+  are far under it) the library tables are collected once into a
+  LibraryIndex and broadcast; the reused Python workers keep it for every
+  epoch.  Above it
+  the library frames are persisted and verify's library-side projections
+  are built, as the SQL route needs.  The sinks' empty sentinels are
+  written from the driver with pyarrow (no Spark job).  A listener
+  releases the library (unpersist, broadcast destroy) when the query
+  terminates.
+* per epoch: probing.probe_batch gives the matched pairs and the unmatched
+  query ids.  On the index route that is ONE mapInPandas pass over the
+  batch, cached once: the matched write runs it (one job) and the
+  unmatched write reads its cache (one job).  On the SQL route the batch
+  is persisted and counted, and its query side is featurized, banded,
+  probed and verified against the library side.  An Observation on each
+  write counts the pairs, queries and unmatched clips, and the one-row
+  metrics epoch is written from the driver with pyarrow.  An empty batch
+  leaves no partition and no metrics row.
 
-An epoch's jobs therefore follow its own batch; the library's size enters
-only through the broadcast of its prebuilt projections.
+An epoch's jobs therefore follow its own batch, not the library.
 
 Resume semantics: foreachBatch alone is at-least-once — the batch function
 runs BEFORE the checkpoint commit, so a crash between the write and the
@@ -58,17 +63,20 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ..config import Config
 from ..datagen import CLIPS_SCHEMA
 from ..io import open_warehouse
 from ..operators.verify import CONFIRMED_SCHEMA
-from ..probing import prepare_library, probe_clips
+# probe_clips stays importable from here: perfbench's tracer rebinds
+# streaming.probe.probe_clips
+from ..probing import ProbeLibrary, prepare_library, probe_batch, probe_clips  # noqa: F401
+from .epochs import epoch_drop, epoch_write_rows, init_epoch_sink
 from .epochs import epoch_write as _epoch_write
-from .epochs import epoch_write_rows, init_epoch_sink
 
 UNMATCHED_SCHEMA = "clip_id string"
 # per-epoch metrics: the streaming analog of CONSULT's per-file
@@ -94,63 +102,67 @@ def init_probe_sinks(spark: SparkSession, out_dir: str) -> None:
         init_epoch_sink(spark, os.path.join(out_dir, table), schema)
 
 
-def make_probe_batch_writer(
-    spark: SparkSession,
-    lib_buckets,
-    lib_features,
-    lib_tr,
-    cfg: Config,
-    out_dir: str,
-):
+def make_probe_batch_writer(spark: SparkSession, library: ProbeLibrary, cfg: Config,
+                            out_dir: str):
     """The foreachBatch body, exposed so tests can replay an epoch directly
     (a mid-batch crash = the same (batch_df, epoch_id) delivered twice) and
     assert the idempotence contract without killing a JVM mid-write.
-
-    Builds the library side here, once per stream (one bounded count of
-    ``lib_features``; pass the library frames cached)."""
-    library = prepare_library(spark, lib_buckets, lib_features, lib_tr)
+    ``library``: from probing.prepare_library, built once per stream."""
 
     def per_batch(batch_df, epoch_id: int) -> None:
         t0 = time.time()
-        batch_df = batch_df.persist()
-        caches = [batch_df]
+        probed = probe_batch(spark, batch_df, library, cfg)
+        tables = [os.path.join(out_dir, t) for t in ("matched_clips", "unmatched_clips")]
         try:
-            n_q = batch_df.count()
-            if not n_q:
+            for df, table in zip((probed.matched, probed.unmatched), tables):
+                _epoch_write(df, table, epoch_id)
+            # the epoch's counts come from the two writes' observations,
+            # and its metrics row is written from the driver
+            n = probed.counts()
+            if not n["n_queries"]:
+                # an empty batch (known only from its writes on the index
+                # route) leaves no partition and no metrics row
+                for table in tables:
+                    epoch_drop(table, epoch_id)
                 return
-            confirmed = probe_clips(
-                spark, batch_df, library, cfg, cache_registry=caches, n_queries=n_q,
-            ).persist()
-            caches.append(confirmed)
-            pairs_obs, unmatched_obs = Observation(), Observation()
-            _epoch_write(
-                confirmed.observe(pairs_obs, F.count(F.lit(1)).alias("n")),
-                os.path.join(out_dir, "matched_clips"), epoch_id,
-            )
-            # a query clip only probes in its own batch, so this batch's
-            # unmatched = batch ids minus this batch's hits — O(batch),
-            # never a scan of the accumulated output
-            unmatched = batch_df.select("clip_id").join(
-                confirmed.select(F.col("clip_a").alias("clip_id")), "clip_id", "left_anti"
-            )
-            _epoch_write(
-                unmatched.observe(unmatched_obs, F.count(F.lit(1)).alias("n")),
-                os.path.join(out_dir, "unmatched_clips"), epoch_id,
-            )
-            # per-epoch metrics row: the counts come from the two writes'
-            # observations, and the row is written from the driver
-            n_unmatched = unmatched_obs.get["n"]
             epoch_write_rows(
                 spark,
-                [(n_q, pairs_obs.get["n"], n_q - n_unmatched, n_unmatched,
-                  round(time.time() - t0, 3))],
+                [(n["n_queries"], n["n_matched_pairs"], n["n_matched_clips"],
+                  n["n_unmatched"], round(time.time() - t0, 3))],
                 METRICS_SCHEMA, os.path.join(out_dir, "probe_metrics"), epoch_id,
             )
         finally:
-            for df in caches:
+            for df in probed.cached:
                 df.unpersist()
 
     return per_batch
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Releases one stream's library (ProbeLibrary.release) when that
+    stream terminates, however it ends.  The stream is known by its query
+    name: onQueryStarted runs before start() returns, so its id is known
+    before any termination event of it arrives."""
+
+    def __init__(self, spark: SparkSession, name: str, library: ProbeLibrary) -> None:
+        super().__init__()
+        self.spark, self.name, self.library = spark, name, library
+        self.query_id = None
+
+    def onQueryStarted(self, event) -> None:
+        if event.name == self.name:
+            self.query_id = event.id
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if event.id == self.query_id:
+            self.library.release()
+            self.spark.streams.removeListener(self)
 
 
 def stream_probe(
@@ -168,36 +180,43 @@ def stream_probe(
     stop() it or awaitTermination()).  Opens the index under its persisted
     config (io.open_warehouse, as jobs/search.py does) — an explicitly
     passed conflicting cfg is refused rather than silently mixing
-    shingle/signature parameters.
+    shingle/signature parameters.  The library is released when the query
+    terminates.
 
     ``once=True`` (default) drains everything currently available and
     stops (Trigger.AvailableNow); ``once=False`` keeps polling the source
     every ``processing_interval`` until stopped externally."""
     wh = open_warehouse(spark, warehouse_dir, cfg)
     cfg = wh.cfg
-
-    lib_buckets = wh.read("lsh_buckets").persist()
-    lib_features = wh.read("features").persist()
-    lib_tr = wh.read("transcripts").persist() if wh.exists("transcripts") else None
-
-    init_probe_sinks(spark, out_dir)
-    per_batch = make_probe_batch_writer(
-        spark, lib_buckets, lib_features, lib_tr, cfg, out_dir
+    library = prepare_library(
+        spark, wh.read("lsh_buckets"), wh.read("features"),
+        wh.read("transcripts") if wh.exists("transcripts") else None, persist=True,
     )
+    init_probe_sinks(spark, out_dir)
 
+    name = f"probe_stream_{uuid.uuid4().hex}"
     stream = (
         spark.readStream.schema(CLIPS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(clips_dir)
     )
-    writer = stream.writeStream.foreachBatch(per_batch).option(
-        "checkpointLocation", checkpoint_dir
+    writer = (
+        stream.writeStream.queryName(name)
+        .foreachBatch(make_probe_batch_writer(spark, library, cfg, out_dir))
+        .option("checkpointLocation", checkpoint_dir)
     )
     if once:
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()
+    listener = _ReleaseOnTermination(spark, name, library)
+    spark.streams.addListener(listener)
+    try:
+        return writer.start()
+    except BaseException:
+        spark.streams.removeListener(listener)
+        library.release()
+        raise
 
 
 CLUSTERS_SCHEMA = "clip_id string, cluster_id string"

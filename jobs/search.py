@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from consult_spark.config import Config
 from consult_spark.io import open_warehouse
 from consult_spark.metrics import StageRunner
-from consult_spark.probing import prepare_library, probe_clips
+from consult_spark.probing import prepare_library, probe_batch
 
 
 def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
@@ -37,28 +37,25 @@ def search(spark: SparkSession, queries: DataFrame, warehouse_dir: str,
         wh.read("features"),
         wh.read("transcripts") if wh.exists("transcripts") else None,
     )
-    # verify with the query side as clip_a and library side as clip_b —
-    # the probe core shared with the continuous probe (streaming/probe.py);
-    # the query count also bounds the query side's broadcast.  The frames
-    # the probe persists are returned as "cached": unpersist them once the
-    # returned plans have been written.
+    # the probe core shared with the continuous probe (streaming/probe.py),
+    # on the route prepare_library chose.  The frames the probe persists are
+    # returned as "cached", and the library as "library": unpersist the
+    # former and release the latter once the returned plans are written.
     n_queries = queries.count()
-    cached: list = []
-    confirmed = probe_clips(spark, queries, library, cfg, cache_registry=cached,
-                            n_queries=n_queries)
+    probed = probe_batch(spark, queries, library, cfg, n_queries=n_queries)
 
-    matched = confirmed.select(F.col("clip_a").alias("clip_id")).distinct()
-    unmatched = queries.select("clip_id").join(matched, "clip_id", "left_anti")
+    matched = probed.matched.select(F.col("clip_a").alias("clip_id")).distinct()
     run.add("search", "n_queries", n_queries)
     n_matched = matched.count()
     run.add("search", "n_matched", n_matched)
     run.flush()
     return {
-        "confirmed": confirmed,
+        "confirmed": probed.matched,
         "matched": matched,
-        "unmatched": unmatched,
+        "unmatched": probed.unmatched,
         "n_matched": n_matched,
-        "cached": cached,
+        "cached": probed.cached,
+        "library": library,
         "warehouse": wh,
     }
 
@@ -78,6 +75,7 @@ def main() -> None:
     res["unmatched"].write.mode("overwrite").parquet(f"{args.out}/unmatched_clips")
     for df in res["cached"]:
         df.unpersist()
+    res["library"].release()
     print({"n_matched": res["n_matched"]})
     spark.stop()
 

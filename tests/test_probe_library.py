@@ -3,7 +3,8 @@ per pair member, never unioned with the queries.
 
 Covers what the query-vs-library split must keep right: an index whose
 bucket table predates the denormalized fingerprints, a query whose id
-collides with a library id, and the Spark jobs one epoch may submit."""
+collides with a library id, and the Spark jobs one epoch may submit on
+each route."""
 
 from __future__ import annotations
 
@@ -17,11 +18,14 @@ from jobs.search import search
 
 # Spark jobs one replayed epoch of the corpus_xs queries may submit.  With
 # adaptive execution every query stage (shuffle map, broadcast, cache
-# build) is a job of its own.  Measured on local[4]: 30 with the library
-# side built at stream start; 50 when each epoch unioned the library into
-# its features, sized the union with counts and ran isEmpty(), three
-# counts and a metrics write (init_probe_sinks then submitted 3 more)
-EPOCH_JOB_BOUND = 32
+# build) is a job of its own.  Measured on local[4]: on the index route,
+# 2 — the matched write, which runs the one probe pass into its cache, and
+# the unmatched write off that cache.  On the SQL route, 30 with the
+# library side built at stream start (50 when each epoch unioned the
+# library into its features, sized the union with counts and ran
+# isEmpty(), three counts and a metrics write)
+EPOCH_JOB_BOUND = 2
+SQL_EPOCH_JOB_BOUND = 32
 
 
 @pytest.fixture(scope="module")
@@ -88,23 +92,22 @@ def test_query_id_colliding_with_library_id(spark, library_split, cfg):
     assert [r for r in got if r[0] != taken] == others
 
 
-def test_probe_epoch_job_count(spark, library_split, cfg, tmp_path):
-    """One replayed epoch submits a bounded number of Spark jobs, and
-    initializing the sinks submits none (they are written from the
-    driver).  Jobs are counted by job group, so only this thread's work
-    is seen."""
-    from consult_spark.config import Config
-    from consult_spark.io import Warehouse
+def _epoch_jobs(spark, library_split, out_dir: str) -> int:
+    """Jobs of one replayed epoch of the library_split queries, checked to
+    write consistent counts; initializing the sinks must submit none (they
+    are written from the driver).  Jobs are counted by job group, so only
+    this thread's work is seen."""
+    from consult_spark.io import open_warehouse
+    from consult_spark.probing import prepare_library
     from consult_spark.streaming.probe import init_probe_sinks, make_probe_batch_writer
 
     wh_dir, qry, _ = library_split
-    out_dir = str(tmp_path / "out")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    wh = Warehouse(spark, wh_dir, cfg)
-    stored = Config.from_json(wh.read("config").head()["config_json"])
-    lib = [wh.read(t).persist() for t in ("lsh_buckets", "features", "transcripts")]
-    per_batch = make_probe_batch_writer(spark, *lib, stored, out_dir)
+    wh = open_warehouse(spark, wh_dir)
+    library = prepare_library(spark, *(wh.read(t) for t in ("lsh_buckets", "features",
+                                                            "transcripts")), persist=True)
+    per_batch = make_probe_batch_writer(spark, library, wh.cfg, out_dir)
     batch = spark.createDataFrame(qry)
 
     def jobs_in(group: str, fn) -> int:
@@ -117,14 +120,13 @@ def test_probe_epoch_job_count(spark, library_split, cfg, tmp_path):
         return len(tracker.getJobIdsForGroup(group))
 
     try:
-        assert jobs_in("probe-sinks", lambda: init_probe_sinks(spark, out_dir)) == 0
+        assert jobs_in(f"probe-sinks-{out_dir}", lambda: init_probe_sinks(spark, out_dir)) == 0
         # the sentinels read back with the schema a Spark write gives them
         m = spark.read.parquet(os.path.join(out_dir, "probe_metrics"))
         assert m.count() == 0 and dict(m.dtypes) == {
             "n_queries": "bigint", "n_matched_pairs": "bigint", "n_matched_clips": "bigint",
             "n_unmatched": "bigint", "wall_sec": "double", "batch_id": "int"}
-        n_jobs = jobs_in("probe-epoch", lambda: per_batch(batch, 0))
-        assert 0 < n_jobs <= EPOCH_JOB_BOUND, n_jobs
+        n_jobs = jobs_in(f"probe-epoch-{out_dir}", lambda: per_batch(batch, 0))
         m = spark.read.parquet(os.path.join(out_dir, "probe_metrics"))
         row = m.filter(F.col("batch_id") == 0).head()
         n_pairs = spark.read.parquet(os.path.join(out_dir, "matched_clips")).count()
@@ -132,6 +134,24 @@ def test_probe_epoch_job_count(spark, library_split, cfg, tmp_path):
         assert (row["n_queries"], row["n_matched_pairs"], row["n_unmatched"]) == (
             len(qry), n_pairs, n_unmatched)
         assert row["n_matched_clips"] == len(qry) - n_unmatched
+        assert n_pairs > 0
+        return n_jobs
     finally:
-        for df in lib:
-            df.unpersist()
+        library.release()
+
+
+def test_probe_epoch_job_count(spark, library_split, tmp_path):
+    """One replayed epoch on the index route (the default for a library
+    this size) submits EPOCH_JOB_BOUND Spark jobs at most."""
+    n_jobs = _epoch_jobs(spark, library_split, str(tmp_path / "out"))
+    assert 0 < n_jobs <= EPOCH_JOB_BOUND, n_jobs
+
+
+def test_probe_epoch_job_count_sql_route(spark, library_split, tmp_path, monkeypatch):
+    """The same epoch with the route bound below the library (the SQL
+    route) stays under SQL_EPOCH_JOB_BOUND."""
+    from consult_spark.operators import verify
+
+    monkeypatch.setattr(verify, "MAX_PROBE_INDEX_ROWS", -1)
+    n_jobs = _epoch_jobs(spark, library_split, str(tmp_path / "out"))
+    assert 0 < n_jobs <= SQL_EPOCH_JOB_BOUND, n_jobs

@@ -129,28 +129,60 @@ def test_stream_probe_adopts_stored_config(spark, probe_setup, corpus_xs, tmp_pa
     assert any(r["lcs"] > 0 for r in adopted)
 
 
+@pytest.mark.parametrize("route", ["index", "sql"])
+def test_stream_probe_releases_its_library(spark, probe_setup, cfg, tmp_path, monkeypatch,
+                                           route):
+    """Two back-to-back drains on one index leave no library frame
+    persisted and no library broadcast behind, on either route: each
+    stream releases its library (ProbeLibrary.release) when it
+    terminates."""
+    import time
+
+    from consult_spark.operators import verify
+
+    if route == "sql":
+        monkeypatch.setattr(verify, "MAX_PROBE_INDEX_ROWS", -1)
+    wh_dir, clips_dir, _ = probe_setup
+    sc = spark.sparkContext
+
+    def held() -> tuple[set, set]:
+        # persisted RDDs, and the driver-side files of live broadcasts
+        return set(sc._jsc.getPersistentRDDs().keys()), set(os.listdir(sc._temp_dir))
+
+    rdds0, files0 = held()
+    for i in range(2):
+        q = stream_probe(spark, clips_dir, wh_dir, str(tmp_path / f"out{i}"),
+                         str(tmp_path / f"ckpt{i}"), cfg=cfg)
+        q.awaitTermination(180)
+        assert spark.read.parquet(str(tmp_path / f"out{i}" / "matched_clips")).count() > 0
+    # the release runs on Spark's listener bus, after awaitTermination returns
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        rdds, files = held()
+        if not (rdds - rdds0 or files - files0):
+            break
+        time.sleep(0.5)
+    assert rdds - rdds0 == set() and files - files0 == set()
+
+
 def test_stream_probe_replayed_epoch_is_idempotent(spark, probe_setup, cfg, tmp_path):
     """A mid-batch crash means the SAME (batch_df, epoch_id) is delivered
     again on restart (foreachBatch runs before the checkpoint commit).  The
     epoch-keyed partition-overwrite writes must converge to identical bytes
     — no duplicated pairs, no duplicated unmatched rows (VERDICT r6
     'What's wrong #2')."""
-    from consult_spark.config import Config
-    from consult_spark.io import Warehouse
+    from consult_spark.io import open_warehouse
+    from consult_spark.probing import prepare_library
     from consult_spark.streaming.probe import init_probe_sinks, make_probe_batch_writer
 
     wh_dir, clips_dir, qry = probe_setup
     out_dir = str(tmp_path / "out")
 
-    wh = Warehouse(spark, wh_dir, cfg)
-    stored = Config.from_json(wh.read("config").head()["config_json"])
-    lib_buckets = wh.read("lsh_buckets").persist()
-    lib_features = wh.read("features").persist()
-    lib_tr = wh.read("transcripts").persist() if wh.exists("transcripts") else None
+    wh = open_warehouse(spark, wh_dir)
+    library = prepare_library(spark, wh.read("lsh_buckets"), wh.read("features"),
+                              wh.read("transcripts"), persist=True)
     init_probe_sinks(spark, out_dir)
-    per_batch = make_probe_batch_writer(
-        spark, lib_buckets, lib_features, lib_tr, stored, out_dir
-    )
+    per_batch = make_probe_batch_writer(spark, library, wh.cfg, out_dir)
 
     half = len(qry) // 2
     b0 = spark.createDataFrame(qry.iloc[:half])
@@ -193,8 +225,7 @@ def test_stream_probe_replayed_epoch_is_idempotent(spark, probe_setup, cfg, tmp_
     mdf = spark.read.parquet(os.path.join(out_dir, "probe_metrics"))
     assert mdf.count() == 2 and mdf.select("batch_id").distinct().count() == 2
 
-    for df in (lib_buckets, lib_features, *( [lib_tr] if lib_tr is not None else [] )):
-        df.unpersist()
+    library.release()
 
 
 def test_update_probe_clusters_matches_full_cc_and_is_idempotent(
