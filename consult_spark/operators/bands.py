@@ -22,10 +22,10 @@ is load-bearing twice over:
 
 Band rows DENORMALIZE the per-(clip, kind) SimHash fingerprint and shingle
 count (12 bytes/row): candidate pairs then carry both sides' fingerprints
-out of the bucket expansion, so verify's Hamming + containment prefilter
-runs without re-joining the feature table — at 10^12 rows that join is a
-full shuffle (or an impossible broadcast); here it is free (the SURVEY §2
-S8 recommendation).
+out of the bucket expansion (the SURVEY §2 S8 recommendation).  verify
+does not read them: its one pass left-joins every pair's fingerprints from
+the feature table (verify._scored), which skipping the join for the
+carried pairs alone would split into two passes over the candidates.
 """
 
 from __future__ import annotations

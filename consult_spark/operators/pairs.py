@@ -27,7 +27,7 @@ from .bands import BUCKET_COLS
 # members are struct<clip_id, simhash, n_shingles> sorted by clip_id (the
 # struct's FIRST field, so sort_array's lexicographic struct order == the
 # clip_id order the cap used); the expansion carries both sides'
-# denormalized fingerprints so verify never re-joins the feature table
+# denormalized fingerprints into the candidates (verify does not read them)
 _PAIR_EXPAND = (
     "flatten(transform(members, (x, i) -> "
     "transform(slice(members, i + 2, size(members)), y -> "
@@ -78,7 +78,7 @@ def probe_candidates(query_bands: DataFrame, lib_buckets: DataFrame, cfg: Config
     library fits (the distributed stand-in for CONSULT's RAM-resident shared
     index, main_search.cpp:523-658) and a shuffled join otherwise.  Both
     sides' band rows carry their clip's fingerprints, so the pairs carry
-    them too and verify's primary-channel prefilter needs no join.  A
+    them too (verify joins its own from the feature table).  A
     query whose id equals a library clip's id never pairs with that clip.
     """
     lib = _with_fingerprints(lib_buckets).select(
@@ -113,8 +113,8 @@ def candidate_pairs(buckets: DataFrame, cfg: Config) -> DataFrame:
     The sim_*/n_* columns are the denormalized primary-channel SimHash
     fingerprints and shingle-set sizes of both members, pivoted out of the
     band hits (null when the pair never co-occurred in that channel's
-    buckets) — verify's prefilter reads them directly instead of joining
-    the feature table (bands.py module docstring).
+    buckets).  verify does not read them: it joins every pair's
+    fingerprints from the feature table (bands.py module docstring).
 
     One shuffle: hits are repartitioned by (clip_a, clip_b) once, and both
     aggregations — the per-kind count and the pair rollup — are satisfied by
@@ -142,11 +142,10 @@ def _rollup(hits: DataFrame, cfg: Config) -> DataFrame:
 
     # pivot the fingerprints of the PRIMARY channel only: that is the
     # channel whose buckets generate the candidates, so its sims are
-    # non-null on ~every pair and verify's prefilter runs join-free; a
-    # secondary channel would be mostly null (verify's prefilter uses
-    # its feature-table join there anyway), so carrying its columns
-    # through the pair shuffle + cache would be dead weight (~340 MB at
-    # 480k clips)
+    # non-null on ~every pair; a secondary channel would be mostly null,
+    # so carrying its columns through the pair shuffle + cache would be
+    # dead weight (~340 MB at 480k clips).  verify joins every pair's
+    # fingerprints from the feature table and reads none of these
     prim = cfg.channels[0] if cfg.channels else "pcm"
     agg = per_kind.groupBy("clip_a", "clip_b").agg(
         F.sum(F.when(F.col("kind") == "pcm", F.col("nk")).otherwise(0)).alias("n_bands_pcm"),

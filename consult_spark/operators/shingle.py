@@ -254,5 +254,10 @@ def featurize_from_parquet(spark, clips_path: str, cfg: Config):
     files = sorted(glob.glob(os.path.join(clips_path, "*.parquet")))
     if not files:
         raise FileNotFoundError(f"no parquet part files under {clips_path}")
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(len(files))
+    # one partition per file, built in the JVM: repartitioning a path list
+    # puts a round-robin shuffle in front of the decode, and a parallelized
+    # Python RDD runs a Python row conversion in every task (+4 s on the
+    # 20k-clip featurize stage at 4 cores)
+    paths = spark.range(0, len(files), 1, len(files)).select(
+        F.element_at(F.array(*map(F.lit, files)), F.col("id").cast("int") + 1).alias("path"))
     return _featurize(paths, clip_shinglers(cfg), cfg, files=True)

@@ -21,13 +21,14 @@ it.  The route is chosen once, in prepare_library, by the library's size:
   to each worker once per stream, not once per batch.  A batch is then ONE
   mapInPandas pass (_probe_rows, paying the Python boundary once per Arrow
   batch as in *Accelerating Python UDFs in Vectorized Query Execution*,
-  CIDR 2022): featurize, probe the band index, roll up, prefilter, score
-  and classify, emitting the matched pairs and one row per unmatched
-  query, tagged.
+  CIDR 2022): featurize, probe the band index, roll up, score each
+  channel with verify's one kernel (verify._score_channel) and classify,
+  emitting the matched pairs and one row per unmatched query, tagged.
 * SQL route (above the bound): the bucket table and verify's library-side
   projections stay DataFrames; a batch is probe_clips' plan
   (pairs.probe_candidates + verify.confirm_pairs with the library as side
-  B) and its unmatched queries an anti-join.
+  B, whose one pass runs the same kernel) and its unmatched queries an
+  anti-join.
 
 Both routes give the same rows; tests/test_probe_routes.py pins them to
 each other.  A query whose id equals a library clip's id is scored with its
@@ -54,7 +55,6 @@ from .operators import shingle as shingle_op
 from .operators import verify as verify_op
 
 TRANSCRIPTS_SCHEMA = "clip_id string, transcript string"
-CHANNELS = ("pcm", "txt")
 
 # the index pass's rows: CONFIRMED_SCHEMA plus a tag — UNMATCHED (one row
 # per query with no confirmed pair: clip_a = the query, clip_b null),
@@ -156,7 +156,7 @@ def build_index(buckets: pa.Table, features: pa.Table,
         known = ords >= 0
         texts[ords[known]] = transcripts["transcript"].to_numpy(zero_copy_only=False)[known]
     channels = {}
-    for kind in CHANNELS:
+    for kind in verify_op.CHANNELS:
         feats = features.filter(pc.equal(features["kind"], kind))
         if not feats.num_rows:
             continue
@@ -255,17 +255,16 @@ def probe_clips(
     The query features feed banding and verify's query side, so they are
     persisted rather than decoded twice.  ``n_queries`` (the caller's row
     count of ``queries``) bounds every query-side projection, so sizing
-    the query side costs no count; without it verify counts each one.
-    Pass ``cache_registry`` to persist the candidates too — confirm_pairs
-    reads them three times (pcm scores, txt scores, the final join) — and
-    to receive every persisted frame for unpersist once the returned plan
-    has been fully materialized.  Without it the query features stay
-    persisted for the rest of the session."""
+    the query side costs no count; without it verify counts the features
+    once.  The candidates are read once, by confirm_pairs' one pass, so
+    they are not persisted.  Pass ``cache_registry`` to receive the
+    persisted query features for unpersist once the returned plan has been
+    fully materialized; without it they stay persisted for the rest of the
+    session."""
     q_features = shingle_op.featurize(queries, cfg).persist()
-    cands = pairs_op.probe_candidates(bands_op.explode_bands(q_features), library.buckets, cfg)
     if cache_registry is not None:
-        cands = cands.persist()
-        cache_registry.extend([q_features, cands])
+        cache_registry.append(q_features)
+    cands = pairs_op.probe_candidates(bands_op.explode_bands(q_features), library.buckets, cfg)
     # transcripts for the suffix-array check: pcm-only queries score
     # lcs = 0 instead of failing on a missing column
     q_tr = (
@@ -354,10 +353,6 @@ def _probe_pass(queries: DataFrame, index: Broadcast, cfg: Config) -> DataFrame:
         shingle_op._with_decoders(run), schema=TAGGED_SCHEMA)
 
 
-def _popcount(x: np.ndarray) -> np.ndarray:
-    return np.unpackbits(x.astype(np.int64).view(np.uint8).reshape(-1, 8), axis=1).sum(axis=1)
-
-
 def _probe_rows(pdf: pd.DataFrame, library: LibraryIndex, shinglers: dict,
                 cfg: Config) -> pd.DataFrame:
     """One Arrow batch of query clips -> TAGGED_SCHEMA rows: the SQL
@@ -369,12 +364,14 @@ def _probe_rows(pdf: pd.DataFrame, library: LibraryIndex, shinglers: dict,
        clip with the query's own id is skipped;
     3. roll up: a pair qualifies when some single channel reaches
        cfg.min_common_bands hits (pairs._rollup);
-    4. prefilter each channel (verify._survives); a channel with no row on
-       either side, or that the prefilter drops, scores jaccard 0,
-       hamming 64, lcs 0, substr false — the SQL route's coalesced output;
-    5. score the survivors with verify._batch_jaccard, run the txt
-       containment ladder (verify._containment) where the jaccard clears
-       cfg.txt_jaccard_threshold, and classify with verify.is_dup."""
+    4. score each channel with verify._score_channel, the kernel the SQL
+       route's pass runs, on the library's arrays: prefilter
+       (verify._survives), exact Jaccard on the survivors, and on txt the
+       containment ladder where the jaccard clears
+       cfg.txt_jaccard_threshold.  A channel with no row on either side,
+       or that the prefilter drops, scores jaccard 0, hamming 64, lcs 0,
+       substr false — the SQL route's coalesced output;
+    5. classify with verify.is_dup."""
     feats = shingle_op._shingle_rows(pdf, shinglers, cfg)
     n_q, n_lib = len(pdf), len(library.clip_ids)
     qids = pdf["clip_id"].to_numpy(dtype=object)
@@ -393,7 +390,7 @@ def _probe_rows(pdf: pd.DataFrame, library: LibraryIndex, shinglers: dict,
         hits[kind] = np.unique(qi * n_lib + lib, return_counts=True)
     pair = np.unique(np.concatenate([c for c, _ in hits.values()] or [np.empty(0, np.int64)]))
     per_kind = {}
-    for kind in CHANNELS:
+    for kind in verify_op.CHANNELS:
         per_kind[kind] = np.zeros(len(pair), np.int64)
         if kind in hits:
             per_kind[kind][np.searchsorted(pair, hits[kind][0])] = hits[kind][1]
@@ -403,8 +400,24 @@ def _probe_rows(pdf: pd.DataFrame, library: LibraryIndex, shinglers: dict,
     qi, lib = qi[keep], lib[keep]
     per_kind = {k: v[keep] for k, v in per_kind.items()}
 
-    scores = {kind: _channel_scores(kind, qi, lib, q.get(kind), library, pdf, cfg)
-              for kind in CHANNELS}
+    tr = pdf["transcript"].to_numpy(dtype=object) if "transcript" in pdf else np.full(n_q, None)
+    absent = np.full(len(qi), -1)
+    scores = {}
+    for kind in verify_op.CHANNELS:
+        ch, qk = library.channels.get(kind), q.get(kind)
+        if ch is None or qk is None:
+            # neither member of any pair has a row in this channel
+            scores[kind] = verify_op._score_channel(kind, absent, absent, absent, absent,
+                                                    None, None, cfg)
+            continue
+        rows = ch.row_of[lib]
+        sets = qk["shingles"].to_numpy()
+        scores[kind] = verify_op._score_channel(
+            kind, qk["simhash"].to_numpy()[qi], ch.simhash[rows],
+            qk["n_shingles"].to_numpy()[qi], np.where(rows >= 0, ch.n_shingles[rows], -1),
+            lambda idx: ([sets[i] for i in qi[idx]], [ch.shingle_set(r) for r in rows[idx]]),
+            (lambda idx: (tr[qi[idx]], library.transcripts[lib[idx]])) if kind == "txt" else None,
+            cfg)
     pcm, txt = scores["pcm"], scores["txt"]
     dup = np.flatnonzero(verify_op.is_dup(pcm["jaccard"], pcm["min_n"], txt["jaccard"],
                                          txt["substr"], cfg))
@@ -432,37 +445,3 @@ def _probe_rows(pdf: pd.DataFrame, library: LibraryIndex, shinglers: dict,
         "tag": np.concatenate([tag, np.full(len(alone), UNMATCHED, np.int32)]),
     })
 
-
-def _channel_scores(kind: str, qi: np.ndarray, lib: np.ndarray, q: pd.DataFrame | None,
-                    library: LibraryIndex, pdf: pd.DataFrame, cfg: Config) -> dict:
-    """One channel's scores of the pairs (query qi[i], library clip
-    lib[i]), as verify._channel_scores gives them after confirm_pairs'
-    coalesce."""
-    n = len(qi)
-    out = {"jaccard": np.zeros(n), "hamming": np.full(n, 64), "min_n": np.zeros(n, np.int64),
-           "lcs": np.zeros(n, np.int64), "substr": np.zeros(n, bool)}
-    ch = library.channels.get(kind)
-    if ch is None or q is None or not n:
-        return out
-    rows = ch.row_of[lib]
-    present = rows >= 0
-    rows = np.where(present, rows, 0)
-    n_a, n_b = q["n_shingles"].to_numpy()[qi], ch.n_shingles[rows]
-    hamming = _popcount(q["simhash"].to_numpy()[qi] ^ ch.simhash[rows])
-    idx = np.flatnonzero(present & verify_op._survives(
-        hamming, np.minimum(n_a, n_b), np.maximum(n_a, n_b), kind, cfg))
-    if not len(idx):
-        return out
-    shingles = q["shingles"].to_numpy()
-    jac, lens_a, lens_b = verify_op._batch_jaccard(
-        [shingles[i] for i in qi[idx]], [ch.shingle_set(r) for r in rows[idx]])
-    out["jaccard"][idx] = jac
-    out["hamming"][idx] = hamming[idx]
-    out["min_n"][idx] = np.minimum(lens_a, lens_b)
-    if kind == "txt":
-        tr = pdf["transcript"].to_numpy(dtype=object) if "transcript" in pdf else None
-        for i in idx[jac >= cfg.txt_jaccard_threshold]:
-            out["substr"][i], out["lcs"][i] = verify_op._containment(
-                None if tr is None else tr[qi[i]], library.transcripts[lib[i]],
-                cfg.substr_min_frac)
-    return out

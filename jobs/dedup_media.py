@@ -42,30 +42,24 @@ from consult_spark.operators import verify as verify_op
 def media_confirmed_pairs(candidates: DataFrame, features: DataFrame, kinds: list[str],
                           cfg: Config) -> DataFrame:
     """Exact verification for the media channels ``kinds`` (the kinds the
-    job featurized, in input order: img before vid): per kind, the standard
-    score ladder (simhash prefilter -> containment bound -> exact Jaccard,
-    verify.channel_scores); a pair is a dup if ANY channel clears the
-    threshold.  Media uses the set-similarity threshold
-    (cfg.txt_jaccard_threshold) — block/frame shingles behave like text
-    shingle sets, not like the low-info-masked pcm channel."""
-    scored = reduce(
-        lambda left, right: left.join(right, ["clip_a", "clip_b"], "outer"),
-        [
-            verify_op.channel_scores(candidates, features, kind, cfg).select(
-                "clip_a", "clip_b",
-                F.col("jaccard").alias(f"{kind}_jaccard"),
-                F.col("hamming").alias(f"{kind}_hamming"),
-            )
-            for kind in kinds
-        ],
-    )
+    job featurized, in input order: img before vid): one verify pass
+    scores every kind with the standard ladder (simhash prefilter ->
+    containment bound -> exact Jaccard, verify._scored), leaving a kind's
+    ``<kind>_jaccard`` / ``<kind>_hamming`` null where it did not score
+    the pair; a pair is a dup if ANY channel clears the threshold.  Media
+    uses the set-similarity threshold (cfg.txt_jaccard_threshold) —
+    block/frame shingles behave like text shingle sets, not like the
+    low-info-masked pcm channel."""
+    side = verify_op.verify_side(features, kinds=kinds)
+    scored = verify_op._scored(candidates, side, side, kinds, cfg)
     jac_cols = [F.coalesce(F.col(f"{k}_jaccard"), F.lit(0.0)) for k in kinds]
-    out = (
-        candidates.join(scored, ["clip_a", "clip_b"], "left")
-        .withColumn("best_jaccard", F.greatest(*jac_cols) if len(jac_cols) > 1 else jac_cols[0])
-        .withColumn("is_dup", F.col("best_jaccard") >= F.lit(cfg.txt_jaccard_threshold))
-    )
-    return out.filter(F.col("is_dup"))
+    best = F.greatest(*jac_cols) if len(jac_cols) > 1 else jac_cols[0]
+    return scored.select(
+        *candidates.columns,
+        *(f"{k}_{score}" for k in kinds for score in ("jaccard", "hamming")),
+        best.alias("best_jaccard"),
+        (best >= F.lit(cfg.txt_jaccard_threshold)).alias("is_dup"),
+    ).filter(F.col("is_dup"))
 
 
 def run_media_pipeline(

@@ -162,3 +162,116 @@ def test_channel_scores_without_transcripts_skip_containment(spark, cfg):
     rows = scored.collect()
     assert any(r["jaccard"] >= cfg.txt_jaccard_threshold for r in rows)
     assert all(not r["has_lcs"] and r["lcs"] == 0 and not r["substr"] for r in rows)
+
+
+def _member_features(features, kind: str, member: str):
+    """features' ``kind`` fingerprints renamed to a candidate row's carried
+    columns for pair member ``member``."""
+    return features.filter(F.col("kind") == kind).select(
+        F.col("clip_id").alias(f"clip_{member}"),
+        F.col("simhash").alias(f"sim_{kind}_{member}"),
+        F.col("n_shingles").alias(f"n_{kind}_{member}"),
+    )
+
+
+def test_prefilter_dropped_candidates_reach_the_decision(spark, candidates_xs, features_xs,
+                                                         clips_xs, corpus_xs):
+    """Every candidate reaches the classification, also one that no
+    channel's prefilter keeps: a dropped channel enters as jaccard 0 and
+    min_n 0, so with low_info_jaccard = 0 the pcm low-info rule confirms
+    it, and it shows pcm_hamming 64.  The planted pairs join two unrelated
+    solo clips; half carry their pcm fingerprints as banding writes them,
+    half do not, and both halves come out alike."""
+    from consult_spark.config import Config
+
+    lay = corpus_xs["layout"]
+    solo = sorted(lay[lay.group_kind == "solo"]["clip_id"])[:8]
+    known = {(r["clip_a"], r["clip_b"]) for r in candidates_xs.select("clip_a", "clip_b").collect()}
+    planted = [(a, b) for i, a in enumerate(solo) for b in solo[i + 1:] if (a, b) not in known]
+    assert len(planted) >= 10
+    rows = spark.createDataFrame(planted, "clip_a string, clip_b string")
+    rows = rows.join(_member_features(features_xs, "pcm", "a"), "clip_a").join(
+        _member_features(features_xs, "pcm", "b"), "clip_b")
+    carried = F.col("clip_a") < F.lit(solo[3])
+    planted_df = rows.select(
+        "clip_a", "clip_b", F.lit(0).cast("bigint").alias("n_bands_pcm"),
+        F.lit(0).cast("bigint").alias("n_bands_txt"),
+        *(F.when(carried, F.col(c)).alias(c)
+          for c in ("sim_pcm_a", "sim_pcm_b", "n_pcm_a", "n_pcm_b")),
+    )
+    cands = candidates_xs.unionByName(planted_df)
+
+    got = {(r["clip_a"], r["clip_b"]): r
+           for r in V.confirm_pairs(cands, features_xs, clips_xs,
+                                    Config(low_info_jaccard=0.0)).collect()}
+    assert set(got) == known | set(planted)
+    dropped = [got[p] for p in planted if got[p]["pcm_hamming"] == 64]
+    assert len(dropped) >= len(planted) // 2
+    for r in dropped:
+        assert r["pcm_jaccard"] == 0.0 and r["is_dup"]
+    # under the default low-info threshold none of them is a dup
+    default = V.confirm_pairs(cands, features_xs, clips_xs, Config()).select("clip_a", "clip_b")
+    assert not {(r["clip_a"], r["clip_b"]) for r in default.collect()} & set(planted)
+
+
+def test_member_without_txt_features_scores_no_txt(spark, candidates_xs, features_xs, clips_xs,
+                                                   oracle_xs, cfg):
+    """A pair whose member has no txt feature row keeps its pcm scores, and
+    its txt channel comes out as not scored: txt_jaccard 0, txt_hamming 64,
+    lcs 0, substr false."""
+    pair, exp = next(
+        (p, e) for p, e in sorted(oracle_xs.confirmed.items())
+        if e["pcm_jaccard"] >= cfg.jaccard_threshold and e["txt_jaccard"] > 0
+    )
+    a, b = pair
+    cands = candidates_xs.filter((F.col("clip_a") == a) & (F.col("clip_b") == b))
+    feats = features_xs.filter(~((F.col("kind") == "txt") & (F.col("clip_id") == b)))
+    rows = V.confirm_pairs(cands, feats, clips_xs, cfg).collect()
+    assert len(rows) == 1
+    got = rows[0]
+    assert abs(got["pcm_jaccard"] - exp["pcm_jaccard"]) < 1e-12
+    assert got["pcm_hamming"] == exp["pcm_hamming"]
+    assert (got["txt_jaccard"], got["txt_hamming"], got["lcs"], got["substr"]) == (
+        0.0, 64, 0, False)
+
+
+def test_confirm_pairs_sizes_each_side_with_one_count(spark, candidates_xs, features_xs,
+                                                      clips_xs, cfg):
+    """Building the self-join confirm_pairs plan sizes its side with ONE
+    count of the features per kind, in one aggregation (each clip
+    featurizes to one row per channel, so those counts size every fat
+    projection and bound the transcripts): at most 2 Spark jobs under
+    adaptive execution, where a count per projection took 6.  Jobs are
+    counted by job group, so only this thread's work is seen."""
+    sc = spark.sparkContext
+    group = "confirm-pairs-plan"
+    sc.setJobGroup(group, group)
+    try:
+        V.confirm_pairs(candidates_xs, features_xs, clips_xs, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_verify_side_routes_each_kind_by_its_own_count(features_xs, clips_xs, monkeypatch):
+    """A fat projection is broadcast when its own kind's row count is within
+    MAX_BROADCAST_FAT_ROWS, even when the whole features table (every kind)
+    is above it; the transcripts follow the largest kind's count."""
+    counts = {r["kind"]: r["count"] for r in features_xs.groupBy("kind").count().collect()}
+    assert set(counts) == {"pcm", "txt"}
+
+    def hinted(df) -> bool:
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    monkeypatch.setattr(V, "MAX_BROADCAST_FAT_ROWS", max(counts.values()))
+    assert sum(counts.values()) > V.MAX_BROADCAST_FAT_ROWS
+    side = V.verify_side(features_xs, clips_xs)
+    assert hinted(side["pcm"].fat) and hinted(side["txt"].fat)
+    assert hinted(side["txt"].transcripts)
+
+    monkeypatch.setattr(V, "MAX_BROADCAST_FAT_ROWS", max(counts.values()) - 1)
+    side = V.verify_side(features_xs, clips_xs)
+    assert [hinted(side[k].fat) for k in ("pcm", "txt")] == [
+        counts[k] < max(counts.values()) for k in ("pcm", "txt")]
+    assert not hinted(side["txt"].transcripts)

@@ -17,10 +17,15 @@ from consult_spark.plans.inspect import plan_properties, read_schema_columns
 
 
 @pytest.fixture(scope="module")
-def clips_parquet(spark, corpus_xs, tmp_path_factory):
+def clips_dir(spark, corpus_xs, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plans") / "clips")
     spark.createDataFrame(corpus_xs["clips"]).write.parquet(path)
-    return spark.read.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def clips_parquet(spark, clips_dir):
+    return spark.read.parquet(clips_dir)
 
 
 def test_featurize_prunes_scan_columns(clips_parquet, cfg):
@@ -170,3 +175,62 @@ def test_merge_clusters_never_shuffles_the_assignment(spark, tmp_path):
     # c0100 lives in cluster c0099 (groups of 3), c0200 in c0198; the new
     # edge merges them under the min label
     assert got["c0200"] == got["c0100"] == "c0099"
+
+
+def test_featurize_from_parquet_has_no_shuffle(spark, clips_dir, cfg):
+    """The file source is built in the JVM with one partition per parquet
+    file, so no Exchange sits between the path rows and the featurize
+    MapInPandas, and no Python RDD (an ExistingRDD scan) converts the path
+    rows in every task before it."""
+    import glob
+    import os
+
+    plan = plan_properties(SH.featurize_from_parquet(spark, clips_dir, cfg))["plan"]
+    tree = plan.split("\n\n")[0]
+    assert "MapInPandas" in tree and "Exchange" not in tree, tree
+    assert "ExistingRDD" not in tree, tree
+    assert len(glob.glob(os.path.join(clips_dir, "*.parquet"))) > 1
+
+
+def _python_nodes_and_joins_above(plan: str) -> tuple[int, list[str]]:
+    """(Python map nodes in the plan tree, the tree lines above the first
+    one that name a join)."""
+    import re
+
+    tree = plan.split("\n\n")[0].splitlines()
+    python = [i for i, line in enumerate(tree) if re.search(r"MapIn(Pandas|Arrow)", line)]
+    above = tree[:python[0]] if python else tree
+    return len(python), [line for line in above if "Join" in line]
+
+
+def test_verify_is_one_python_pass(spark, clips_parquet, cfg, tmp_path):
+    """confirm_pairs (self-join, pcm + txt) and the media job's verify
+    (img + vid) each score every channel in ONE Python pass over the
+    candidates, and join no score table back onto them: with the features
+    and candidates read from parquet, the plan has one Python map node and
+    no join above it."""
+    import os
+
+    from consult_spark.operators import multimodal as MM
+    from consult_spark.operators import verify as V
+    from jobs.dedup_media import media_confirmed_pairs
+
+    def stored(df, name):
+        df.write.parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    feats = stored(SH.featurize(clips_parquet, cfg), "features")
+    cands = stored(P.candidate_pairs(B.capped_buckets(B.explode_bands(feats), cfg), cfg),
+                   "candidates")
+    confirm = plan_properties(V.confirm_pairs(cands, feats, clips_parquet, cfg))["plan"]
+    assert _python_nodes_and_joins_above(confirm) == (1, []), confirm
+
+    fixtures = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+    images = spark.read.parquet(os.path.join(fixtures, "media_images.parquet"))
+    videos = spark.read.parquet(os.path.join(fixtures, "media_videos.parquet"))
+    mfeats = stored(MM.featurize_images(images, cfg).unionByName(
+        MM.featurize_videos(videos, cfg)), "media_features")
+    mcands = stored(P.candidate_pairs(B.capped_buckets(B.explode_bands(mfeats), cfg), cfg),
+                    "media_candidates")
+    media = plan_properties(media_confirmed_pairs(mcands, mfeats, ["img", "vid"], cfg))["plan"]
+    assert _python_nodes_and_joins_above(media) == (1, []), media

@@ -47,9 +47,9 @@ def _rows(df) -> list[tuple]:
 def test_probe_index_without_bucket_fingerprints(spark, library_split, cfg, tmp_path):
     """A bucket table with no simhash/n_shingles columns (pairs.bucket_pairs
     tolerates one) must confirm exactly what the full index confirms: the
-    library member's fingerprint is then null on every candidate, and the
-    join-free prefilter must hand those pairs to the feature-table join
-    instead of dropping them on a null Hamming distance."""
+    library member's fingerprint is then null on every candidate, and
+    verify must take it from the feature table instead of dropping the
+    pair on a null Hamming distance."""
     import shutil
 
     wh_dir, qry, _ = library_split

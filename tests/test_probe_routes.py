@@ -59,7 +59,8 @@ def indexes(spark, split, tmp_path_factory):
             build_index(spark, spark.createDataFrame(lib.drop(columns="transcript")), wh_dir,
                         cfg=Config(channels=("pcm",)))
         else:
-            cfg = Config(bucket_cap=48) if name == "cap48" else Config()
+            cfg = {"cap48": Config(bucket_cap=48),
+                   "low_info0": Config(low_info_jaccard=0.0)}.get(name, Config())
             build_index(spark, spark.createDataFrame(lib), wh_dir, cfg=cfg)
         built[name] = wh_dir
         return wh_dir
@@ -105,6 +106,9 @@ CASES = {
     "stripped_buckets": ("stripped", lambda q, lay: q),
     "pcm_only": ("pcm_only", lambda q, lay: q.drop(columns="transcript")),
     "bucket_cap_48": ("cap48", lambda q, lay: q),
+    # every candidate is then a dup, also one that no channel's prefilter
+    # keeps (the pcm low-info rule at jaccard 0)
+    "low_info_jaccard_0": ("low_info0", lambda q, lay: q),
     "null_payload": ("default", _null_payload),
     "empty_transcript": ("default", _empty_transcript),
     "empty_batch": ("default", lambda q, lay: q.iloc[:0]),
